@@ -31,15 +31,6 @@ from pyspark.sql import functions as F
 EMBEDDING_DIM = 64  # the corpus's embedding width (FIXTURES.md §B)
 
 
-def hof_dot(a: Column, b: Column) -> Column:
-    """Generic higher-order-function dot product (any dimension)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def unrolled_dot(a: Column, b: Column, dim: int = EMBEDDING_DIM) -> Column:
     """Codegen-friendly dot product for a statically-known dimension."""
     terms = [

@@ -41,16 +41,6 @@ SparkQuery = Callable[[SparkSession, str], DataFrame]
 _REGISTRY: dict[str, "Query"] = {}
 
 # Submodules that register queries on import.
-#
-# Registration order matters: the external driver appears to check the
-# first ~50 registered queries per round (CORRECTNESS_r02.json stopped
-# at exactly the first 50 in registry order).  The modules with the
-# least accumulated driver evidence register FIRST so they get
-# checked: similarity/multimodal/udaf (no r02 driver row) lead, then
-# dedup and star (changed this round: 64-bit SimHash banding, star CC,
-# offset-merge deciles), then events.  The tail risk goes to parity
-# and late-text — unchanged since r01 and driver-green in both prior
-# rounds.
 _QUERY_MODULES = [
     "relational",
     "tpchx",
@@ -66,253 +56,6 @@ _QUERY_MODULES = [
     "events",
     "text",
     "parity",
-]
-
-# Module order alone can no longer pin every evidence-starved query
-# within the checked window (a new query appended to a late module
-# lands past it), so the registry is additionally reordered by this
-# explicit priority list — GENERATED: run `python tools/gen_priority.py`
-# once per round after the driver drops CORRECTNESS_r{N}.json (use
-# --check in CI to catch staleness).  Policy (VERDICT r8 item 1):
-# never-driver-sampled queries lead, then stalest driver round first,
-# so the driver's ~50-slot window always samples the least-evidenced
-# queries; r9+r10 windows close the last 77 never-sampled.  Typos fail
-# loudly in registry().  tools/gen_coverage.py renders the same data
-# as COVERAGE.md so the gap stays auditable.
-_EVIDENCE_PRIORITY = [
-    # Generated by tools/gen_priority.py from CORRECTNESS_r*.json:
-    # never-driver-sampled queries first, then stalest driver round
-    # first — the driver samples the first ~50 entries per round.
-    # --- last green driver round: r11 ---
-    "orders_grouping_sets",
-    "orders_status_pivot",
-    "pricing_summary",
-    "promo_revenue_share",
-    "rollup_acctbal",
-    "running_revenue_per_customer",
-    "sample_stratified_docs",
-    "shipping_priority",
-    "similarity_ann_lsh",
-    "similarity_ann_multiprobe",
-    "similarity_cosine_topk",
-    "similarity_knn_join",
-    "snapshot_changed_users",
-    "snapshot_delta_events",
-    "snapshot_delta_users",
-    "star_revenue_by_nation",
-    "text_clean_redact",
-    "text_fingerprint",
-    "text_lang_id",
-    "text_quality_score",
-    "text_stats_by_lang",
-    "text_token_counts",
-    "text_topk_terms_per_lang",
-    "topk_customers_per_nation",
-    "udaf_user_trend_slope",
-    # --- last green driver round: r12 ---
-    "basket_brand_triangles",
-    "basket_pair_lift",
-    "bpe_apply_tokenize",
-    "bpe_first_merge_pairs",
-    "bpe_learn_merges",
-    "cheapest_offer_per_part",
-    "cohort_retention",
-    "corpus_mixture_rebalance",
-    "corpus_repeat_factors",
-    "corpus_split_leakage_safe",
-    "corpus_temperature_mixture",
-    "dau_mau_stickiness",
-    "dedup_incremental_index",
-    "dedup_substring_windows",
-    "discount_quantity_correlation",
-    "disjunctive_brand_revenue",
-    "embedding_int8_quantize",
-    "entity_resolution_parts",
-    "events_daily_ops_mart",
-    "events_hourly_anomalies",
-    "events_key_skew_profile",
-    "events_multigrain_rollup",
-    "events_transition_matrix",
-    "opportunity_snapshot_delta",
-    "order_priority_semi",
-    "orders_unpivot_metrics",
-    "pack_sequences_by_lang",
-    "projection_cast",
-    "regional_market_share",
-    "salted_revenue_by_nation",
-    "scd2_user_status_history",
-    "shard_corpus_for_training",
-    "similarity_ann_recall",
-    "similarity_ivf_flat",
-    "small_qty_order_revenue",
-    "snapshot_full_compare",
-    "sql_frontdoor_revenue",
-    "streaming_click_purchase_join",
-    "streaming_dedup_exact",
-    "streaming_dedup_within_watermark",
-    "streaming_hourly_tumbling",
-    "streaming_session_window",
-    "streaming_sessionize_stateful",
-    "streaming_static_enrich",
-    "streaming_upsert_latest",
-    "string_extract_roundtrip",
-    "text_chunk_windows",
-    "text_discriminative_terms",
-    "text_repetition_signals",
-    "wealthy_inactive_customers",
-    # --- last green driver round: r13 ---
-    "ab_test_proportions",
-    "basket_brand_triangles_degree",
-    "boilerplate_bigram_df",
-    "cap_docs_per_source",
-    "conversion_latency_cdf",
-    "corpus_filter_cascade",
-    "corpus_split_assign",
-    "corpus_vocab_growth",
-    "customer_order_distribution",
-    "customers_bought_all_brands",
-    "decontaminate_bloom",
-    "dedup_cluster_size_histogram",
-    "dedup_containment_pairs",
-    "dedup_exact_keep_best",
-    "dedup_lsh_band_sweep",
-    "dedup_minhash_estimate_error",
-    "dedup_ngram_jaccard_prefix",
-    "dedup_prefix_truncation",
-    "dedup_shingle_hotspot_audit",
-    "dedup_source_attribution",
-    "dominant_part_suppliers",
-    "embedding_dim_variance",
-    "embedding_norm_outliers",
-    "forecast_revenue_change",
-    "funnel_conversion_latency",
-    "inverted_index_postings",
-    "join_size_estimate",
-    "latest_event_per_user",
-    "median_acctbal_by_segment",
-    "multimodal_audio_decode",
-    "multimodal_image_decode",
-    "multimodal_video_decode",
-    "nation_segment_matrix",
-    "orders_price_histogram",
-    "pareto_revenue_concentration",
-    "part_name_fuzzy_pairs",
-    "pit_purchase_status",
-    "purchase_click_attribution",
-    "repurchase_interval_median",
-    "returned_item_customers",
-    "revenue_gini",
-    "sample_negative_pairs",
-    "sample_weighted_docs",
-    "session_path_mining",
-    "sql_frontdoor_lateral_topn",
-    "supplier_hhi_by_region",
-    "text_oov_fraction",
-    "user_event_type_profile",
-    "user_ltv_deciles",
-    "weekly_active_users",
-    # --- last green driver round: r14 ---
-    "approx_distinct_customers",
-    "approx_quantile_orders",
-    "asof_click_error",
-    "brand_pagerank",
-    "cube_orders",
-    "curate_training_corpus",
-    "customer_acctbal_deciles",
-    "decontaminate_ngram_overlap",
-    "dedup_cc_star",
-    "dedup_connected_components",
-    "dedup_embedding_cosine",
-    "dedup_exact_docs",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "distinct_customers_by_priority",
-    "embedding_norms",
-    "embedding_random_projection",
-    "events_arrival_dispersion",
-    "events_cusum_changepoint",
-    "events_heavy_hitters_cms",
-    "events_seasonality_heatmap",
-    "events_twap_by_user",
-    "events_value_mad_outliers",
-    "events_watermark_lateness_audit",
-    "hll_intersection_users",
-    "important_stock_parts",
-    "incremental_agg_maintenance",
-    "incremental_join_maintenance",
-    "label_centroid_separation",
-    "local_supplier_volume",
-    "multimodal_chunks",
-    "multimodal_features",
-    "multimodal_frame_offsets",
-    "nation_revenue_trend_ols",
-    "nation_share_within_segment",
-    "null_semantics_pins",
-    "open_orders_backlog",
-    "order_installment_schedule",
-    "order_interval_overlaps",
-    "orders_benford_first_digit",
-    "orders_dow_seasonality",
-    "pareto_frontier_customers",
-    "part_supplier_diversity",
-    "product_profit_by_nation_year",
-    "purchase_multitouch_attribution",
-    "revenue_max_drawdown",
-    "sample_hard_negatives",
-    "session_bounce_rate",
-    # --- last green driver round: r15 ---
-    "asof_click_error_forward",
-    "asof_click_error_nearest",
-    "count_guard",
-    "customer_balance_analytics",
-    "decayed_user_engagement",
-    "dedup_segments_exact",
-    "dq_constraint_checks",
-    "events_click_purchase_window",
-    "events_funnel",
-    "events_gapfill_hourly",
-    "events_hourly_tumbling",
-    "events_rolling_hour",
-    "events_sessionize",
-    "events_sliding_windows",
-    "events_wow_change",
-    "filter_contains_flags",
-    "hll_mergeable_distinct",
-    "html_card_render",
-    "html_extract_cards",
-    "json_scalar_extract",
-    "large_volume_orders",
-    "layout_zorder_stats",
-    "multimodal_resize_stub",
-    "nation_set_ops",
-    "nation_trade_volume",
-    "session_duration_histogram",
-    "shipping_lateness_priority",
-    "shipping_leadtime_percentiles",
-    "similarity_int8_topk_recall",
-    "similarity_maxsim",
-    "similarity_pq_adc",
-    "similarity_rrf_fusion",
-    "source_quality_shrunk",
-    "sql_frontdoor_recursive_spine",
-    "streaming_heavy_hitters_cms",
-    "streaming_twap_by_user",
-    "streaming_wau_approx",
-    "suppliers_kept_orders_waiting",
-    "table_drift_tvd",
-    "table_profile_orders",
-    "text_bigram_lm_quality",
-    "text_bm25_retrieval",
-    "text_zipf_octave_slope",
-    "top_supplier_revenue",
-    "trimmed_mean_value",
-    "user_behavior_diversity",
-    "user_rfm_segments",
-    "value_dispersion_by_type",
-    "value_percentile_bands",
-    "weighted_median_price",
 ]
 
 
@@ -349,12 +92,7 @@ def _load_all() -> None:
 
 def registry() -> dict[str, Query]:
     _load_all()
-    unknown = [n for n in _EVIDENCE_PRIORITY if n not in _REGISTRY]
-    if unknown:
-        raise ValueError(f"_EVIDENCE_PRIORITY names unknown queries: {unknown}")
-    ordered = {n: _REGISTRY[n] for n in _EVIDENCE_PRIORITY}
-    ordered.update((n, q) for n, q in _REGISTRY.items() if n not in ordered)
-    return ordered
+    return dict(_REGISTRY)
 
 
 def spark_queries() -> dict[str, SparkQuery]:

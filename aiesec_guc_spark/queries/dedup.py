@@ -38,7 +38,6 @@ from ..operators.dedup import (
     minhash_coeffs,
     MINHASH_NUM_HASHES,
     minhash_signatures,
-    shared_frame,
     shingle_rows,
     simhash,
     simhash_pairs,
@@ -193,68 +192,53 @@ def _eligible_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shared_sigs(
-    spark: SparkSession, sf_dir: str, off_materialize: bool = False
+    spark: SparkSession, sf_dir: str, checkpoint: bool = False
 ) -> DataFrame:
     """The production-banding signature table over the eligible docs —
-    the single most-recomputed frame in the registry (the shingle
-    explode + k-min fold behind minhash_lsh, both CC variants,
-    estimate_error, containment, the incremental index, hard-negative
-    mining and the leakage-safe split)."""
-    return shared_frame(
-        spark,
-        f"minhash_sigs:{sf_dir}",
-        lambda: minhash_signatures(
-            _eligible_docs(spark, sf_dir), "doc_id", "text"
-        ),
-        off_materialize=off_materialize,
-    )
+    the shingle explode + k-min fold behind minhash_lsh, both CC
+    variants, estimate_error, containment, the incremental index,
+    hard-negative mining and the leakage-safe split.  ``checkpoint``
+    materializes it for callers that feed it to several consumers."""
+    sigs = minhash_signatures(_eligible_docs(spark, sf_dir), "doc_id", "text")
+    return materialize(sigs) if checkpoint else sigs
 
 
 def _shared_char_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc, lang, source, char-4-gram) rows — the verify-side
-    primitive both n-gram Jaccard variants start from (identical frame,
-    both fed it to 3-4 consumers and materialized it pre-refactor)."""
+    primitive both n-gram Jaccard variants start from, materialized
+    because each feeds it to 3-4 consumers."""
     from ..operators.dedup import char_ngrams_expr
 
-    def build() -> DataFrame:
-        # fan_out_scan: the single-row-group documents scan serializes
-        # the gram explode+distinct (measured in-suite: 5.5 s → 3.3 s
-        # warm at sf0.1); no-op on a properly split table.
-        d = fan_out_scan(spark, load_table(spark, sf_dir, "documents")).filter(
-            F.length("text") >= 4
-        )
-        return d.select(
+    # fan_out_scan: the single-row-group documents scan serializes
+    # the gram explode+distinct (measured in-suite: 5.5 s → 3.3 s
+    # warm at sf0.1); no-op on a properly split table.
+    d = fan_out_scan(spark, load_table(spark, sf_dir, "documents")).filter(
+        F.length("text") >= 4
+    )
+    return materialize(
+        d.select(
             "doc_id",
             "lang",
             "source",
             F.explode(char_ngrams_expr("text")).alias("gram"),
         ).distinct()
-
-    return shared_frame(
-        spark, f"char4_grams:{sf_dir}", build, off_materialize=True
     )
 
 
 def _shared_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc DISTINCT shingle-set arrays over the eligible docs — the
-    verify-side primitive of the whole MinHash family.  Before r16c,
-    ``jaccard_verify`` rebuilt it internally per call and the band
-    sweep / containment built their own copies, so the corpus-sized
-    explode + grouped collect ran once per query invocation; it is
-    corpus prep (a pure function of the corpus), so it now rides
-    ``shared_frame`` like the signature table.  Row-identical to
-    building over the FULL documents table: a doc below SHINGLE_WORDS
-    tokens yields zero shingles, hence appears in neither frame."""
+    verify-side primitive of the whole MinHash family, materialized
+    because the band sweep, containment and ``jaccard_verify``
+    consumers each reuse it.  Row-identical to building over the FULL
+    documents table: a doc below SHINGLE_WORDS tokens yields zero
+    shingles, hence appears in neither frame."""
     from ..operators.dedup import shingle_sets
 
-    return shared_frame(
-        spark,
-        f"shingle_sets:{sf_dir}",
-        lambda: shingle_sets(
+    return materialize(
+        shingle_sets(
             shingle_rows(_eligible_docs(spark, sf_dir), "doc_id", "text"),
             "doc_id",
-        ),
-        off_materialize=True,
+        )
     )
 
 
@@ -264,39 +248,27 @@ def _minhash_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores.  ``dedup_minhash_lsh``, both CC variants,
     ``sample_hard_negatives`` and ``corpus_split_leakage_safe`` build
     on this — one definition so the queries (and the shared oracle
-    constants) cannot diverge.  Under the bench's
-    SPARK_GRAFT_SHARED_FRAMES=1 the frame is computed once per JVM and
-    reused across those consumers (see ``shared_frame``)."""
-
-    def build() -> DataFrame:
-        sigs = _shared_sigs(spark, sf_dir)
-        pairs = lsh_candidate_pairs(lsh_band_keys(sigs, "doc_id"), "doc_id")
-        # r16c: verify against the shared per-doc set frame (identical
-        # to the rows-form build jaccard_verify did internally).
-        return jaccard_verify(
-            pairs, _shared_shingle_sets(spark, sf_dir), "doc_id",
-            pre_grouped=True,
-        )
-
-    return shared_frame(spark, f"minhash_jaccard_pairs:{sf_dir}", build)
+    constants) cannot diverge."""
+    sigs = _shared_sigs(spark, sf_dir)
+    pairs = lsh_candidate_pairs(lsh_band_keys(sigs, "doc_id"), "doc_id")
+    # Verify against the per-doc set frame (identical to the rows-form
+    # build jaccard_verify does internally).
+    return jaccard_verify(
+        pairs, _shared_shingle_sets(spark, sf_dir), "doc_id",
+        pre_grouped=True,
+    )
 
 
 def _shared_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Large/small-star CC labels over the production-threshold
     near-dup graph — shared by ``dedup_cc_star`` and
-    ``corpus_split_leakage_safe`` (identical edge set), and the
-    second-biggest repeat cost in the bench after the MinHash pipeline
-    itself (the iterative star rounds)."""
+    ``corpus_split_leakage_safe`` (identical edge set)."""
     from ..operators.graph import connected_components_star
 
-    return shared_frame(
-        spark,
-        f"cc_star_labels:{sf_dir}",
-        lambda: connected_components_star(
-            _minhash_jaccard_pairs(spark, sf_dir)
-            .filter(F.col("jaccard") >= CC_JACCARD_THRESHOLD)
-            .select("doc_a", "doc_b")
-        ),
+    return connected_components_star(
+        _minhash_jaccard_pairs(spark, sf_dir)
+        .filter(F.col("jaccard") >= CC_JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b")
     )
 
 
@@ -366,10 +338,10 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     k = MINHASH_BANDS * MINHASH_ROWS
     # signatures feed band keys AND both estimate-join sides —
-    # materialized even with sharing off (cache-race protection)
-    sigs = _shared_sigs(spark, sf_dir, off_materialize=True)
+    # materialized (cache-race protection)
+    sigs = _shared_sigs(spark, sf_dir, checkpoint=True)
     pairs = lsh_candidate_pairs(lsh_band_keys(sigs, "doc_id"), "doc_id")
-    # r16c: the shared set frame replaces the rows-form internal build
+    # the per-doc set frame replaces the rows-form internal build
     exact = jaccard_verify(
         pairs, _shared_shingle_sets(spark, sf_dir), "doc_id", pre_grouped=True
     )
@@ -448,14 +420,10 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import connected_components
 
-    cc = shared_frame(
-        spark,
-        f"cc_labels:{sf_dir}",
-        lambda: connected_components(
-            _minhash_jaccard_pairs(spark, sf_dir)
-            .filter(F.col("jaccard") >= CC_JACCARD_THRESHOLD)
-            .select("doc_a", "doc_b")
-        ),
+    cc = connected_components(
+        _minhash_jaccard_pairs(spark, sf_dir)
+        .filter(F.col("jaccard") >= CC_JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b")
     )
     return cc.select(
         F.col("id").alias("doc_id"),
@@ -510,23 +478,16 @@ SELECT doc_id, CAST({fp} AS BIGINT) AS simhash FROM v
 
 
 def _shared_simhash(
-    spark: SparkSession, sf_dir: str, off_materialize: bool = False
+    spark: SparkSession, sf_dir: str, checkpoint: bool = False
 ) -> DataFrame:
     """The 64-bit fingerprint table — corpus prep a deployment
     computes once per corpus (the explode + 64-vote aggregation), then
-    consults from every near-dup surface.  Two registry consumers
-    (``dedup_simhash`` returns it, ``dedup_simhash_pairs`` bands it),
-    so under the bench's SPARK_GRAFT_SHARED_FRAMES=1 the fingerprints
-    build once per JVM; off (tests/oracle gate) this is exactly the
-    per-query build each call site had before (r16b)."""
-
-    def build() -> DataFrame:
-        d = load_table(spark, sf_dir, "documents")
-        return simhash(d.select("doc_id", "text"), "doc_id", "text")
-
-    return shared_frame(
-        spark, f"simhash_fp:{sf_dir}", build, off_materialize=off_materialize
-    )
+    consults from every near-dup surface.  Two registry consumers:
+    ``dedup_simhash`` returns it, ``dedup_simhash_pairs`` bands it and
+    asks for ``checkpoint`` because both band-join sides read it."""
+    d = load_table(spark, sf_dir, "documents")
+    fp = simhash(d.select("doc_id", "text"), "doc_id", "text")
+    return materialize(fp) if checkpoint else fp
 
 
 @query("dedup_simhash", oracle=_simhash_oracle())
@@ -568,7 +529,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hamming distance keeps pairs within radius 3, which banding covers
     completely by pigeonhole.  See operators/dedup.py for the
     bucket-cardinality math at 100 TB."""
-    fp = _shared_simhash(spark, sf_dir, off_materialize=True)
+    fp = _shared_simhash(spark, sf_dir, checkpoint=True)
     return simhash_pairs(fp, "doc_id")
 
 
@@ -1227,53 +1188,42 @@ WHERE ('0x' || substr(md5(text), 1, 8))::BIGINT % 100 < ({_SAMPLE_RATE_CASE})
 
 def _curate_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-filtered, exact-deduped survivor docs — the input every
-    later curation stage consumes (r16b: shared per JVM under the
-    bench flag; off-path keeps the pre-refactor materialize)."""
+    later curation stage consumes, materialized because the near-dup
+    stage and the keep-join both read it."""
     from ..functions.text import fingerprint_md5, n_tokens, stopword_ratio
 
-    def build() -> DataFrame:
-        d = load_table(spark, sf_dir, "documents")
-        nt = n_tokens("text")
-        ratio = stopword_ratio("text")
-        q = d.filter(nt.between(20, 1000) & ratio.between(0.01, 0.5)).select(
-            "doc_id", "lang", "text", nt.alias("n_tokens")
-        )
-        return dedup_exact(
+    d = load_table(spark, sf_dir, "documents")
+    nt = n_tokens("text")
+    ratio = stopword_ratio("text")
+    q = d.filter(nt.between(20, 1000) & ratio.between(0.01, 0.5)).select(
+        "doc_id", "lang", "text", nt.alias("n_tokens")
+    )
+    return materialize(
+        dedup_exact(
             q.withColumn("fingerprint", fingerprint_md5("text")),
             F.col("fingerprint"),
             "doc_id",
         ).drop("fingerprint")
-
-    return shared_frame(
-        spark, f"curate_survivors:{sf_dir}", build, off_materialize=True
     )
 
 
-def _curate_cc(spark: SparkSession, sf_dir: str, ex: DataFrame) -> DataFrame:
+def _curate_cc(ex: DataFrame) -> DataFrame:
     """CC cluster labels over the survivors' near-dup graph — the
     expensive iterative stage of the curation pipeline.  Runs on the
-    exact-dedup SURVIVORS (a different node set than the full-corpus
-    ``_shared_cc_star`` spine), so it is its own shared frame.  The
-    caller passes its (materialized or shared) survivors frame so the
-    off path builds from the same single checkpoint it used before
-    the refactor; ``ex`` is itself a pure function of ``sf_dir``, so
-    the cache key stays well-defined."""
+    exact-dedup SURVIVORS ``ex`` (a different node set than the
+    full-corpus ``_shared_cc_star`` spine)."""
     from ..operators.graph import connected_components
 
-    def build() -> DataFrame:
-        # Near-dup pairs among the exact-dedup survivors only (>= 20
-        # tokens by the quality gate, so the shingle precondition
-        # holds).
-        docs = ex.select("doc_id", "text")
-        sigs = minhash_signatures(docs, "doc_id", "text")
-        pairs = lsh_candidate_pairs(lsh_band_keys(sigs, "doc_id"), "doc_id")
-        sh = shingle_rows(docs, "doc_id", "text")
-        verified = jaccard_verify(pairs, sh, "doc_id").filter(
-            F.col("jaccard") >= CC_JACCARD_THRESHOLD
-        )
-        return connected_components(verified.select("doc_a", "doc_b"))
-
-    return shared_frame(spark, f"curate_cc:{sf_dir}", build)
+    # Near-dup pairs among the exact-dedup survivors only (>= 20
+    # tokens by the quality gate, so the shingle precondition holds).
+    docs = ex.select("doc_id", "text")
+    sigs = minhash_signatures(docs, "doc_id", "text")
+    pairs = lsh_candidate_pairs(lsh_band_keys(sigs, "doc_id"), "doc_id")
+    sh = shingle_rows(docs, "doc_id", "text")
+    verified = jaccard_verify(pairs, sh, "doc_id").filter(
+        F.col("jaccard") >= CC_JACCARD_THRESHOLD
+    )
+    return connected_components(verified.select("doc_a", "doc_b"))
 
 
 @query("curate_training_corpus", oracle=_curate_oracle())
@@ -1292,15 +1242,8 @@ def curate_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import hash32
     from .text import SAMPLE_DEFAULT_RATE, SAMPLE_RATES
 
-    # r16b: the curation pipeline's upstream — quality filter → exact
-    # dedup → LSH near-dup pairs → CC cluster labels — is ingest-time
-    # corpus prep (a deployment curates a corpus once), so both stages
-    # ride shared_frame: built once per JVM under the bench's
-    # SPARK_GRAFT_SHARED_FRAMES=1, the exact per-query build otherwise
-    # (the survivors frame keeps its pre-refactor materialize on the
-    # off path).  The keep-join + stratified sample stay live per run.
     ex = _curate_survivors(spark, sf_dir)
-    cc = _curate_cc(spark, sf_dir, ex)
+    cc = _curate_cc(ex)
 
     keep = ex.join(
         cc.select(F.col("id").alias("doc_id"), "cluster_id"), "doc_id", "left"
@@ -1771,8 +1714,8 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15: per-doc shingle-SET arrays + per-row array_intersect replace
     # the exploded candidate⋈shingle join, the per-pair re-aggregation,
     # and the two size join-backs (same shape change as jaccard_verify;
-    # sizes are array lengths, exact as before).  r16c: the set frame
-    # is the shared one (identical build, shared per JVM in the bench).
+    # sizes are array lengths, exact as before).  The set frame is the
+    # family's shared builder.
     sets_ = _shared_shingle_sets(spark, sf_dir)
     sa = sets_.select(F.col("doc_id").alias("doc_a"), F.col("_sh_set").alias("_set_a"))
     sb = sets_.select(F.col("doc_id").alias("doc_b"), F.col("_sh_set").alias("_set_b"))
@@ -2028,14 +1971,13 @@ def dedup_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.dedup import lsh_band_keys
 
-    # r16c: both corpus-prep frames come from the family's shared
-    # builders — the signature table (row-identical over full vs
-    # eligible docs: shingle-less docs produce no signature row) and
-    # the per-doc shingle-SET frame every config's verification
-    # consumes (the corpus-sized explode+grouped-collect was the
-    # sweep's dominant cost; r15 already built it once per invocation,
-    # r16c shares it per JVM under the bench flag).
-    sigs = _shared_sigs(spark, sf_dir, off_materialize=True)
+    # Both corpus-prep frames come from the family's shared builders —
+    # the signature table (row-identical over full vs eligible docs:
+    # shingle-less docs produce no signature row) and the per-doc
+    # shingle-SET frame every config's verification consumes (the
+    # corpus-sized explode+grouped-collect is the sweep's dominant
+    # cost, so it is built once per invocation).
+    sigs = _shared_sigs(spark, sf_dir, checkpoint=True)
     shd = _shared_shingle_sets(spark, sf_dir)
 
     out = None

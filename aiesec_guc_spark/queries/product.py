@@ -433,23 +433,17 @@ def _brand_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _baskets_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The basket frame, built ONCE per query (and once per JVM under
-    the bench's shared-frames mode): every basket-family query consumes
-    it from 2-3 plan branches (pair counts + marginals + order total,
-    or edge build + order total), and Catalyst does no cross-branch
-    CSE — without the cut each branch re-runs the fact scan + basket
-    shuffle.  At 100 TB this is "materialize the basket table", the
+    """The basket frame, built ONCE per query: every basket-family
+    query consumes it from 2-3 plan branches (pair counts + marginals
+    + order total, or edge build + order total), and Catalyst does no
+    cross-branch CSE — without the cut each branch re-runs the fact
+    scan + basket shuffle.  At 100 TB this is "materialize the basket table", the
     layout every market-basket pipeline uses anyway.  The pure builder
     stays separate so the single-fact-exchange plan assertion
     (tests/test_plans.py) can inspect the un-truncated plan."""
-    from ..operators.dedup import shared_frame
+    from ..operators.dedup import materialize
 
-    return shared_frame(
-        spark,
-        f"brand_baskets:{sf_dir}",
-        lambda: _brand_baskets(spark, sf_dir),
-        off_materialize=True,
-    )
+    return materialize(_brand_baskets(spark, sf_dir))
 
 
 def _brand_pair_counts(baskets: DataFrame) -> DataFrame:
@@ -479,8 +473,7 @@ def _support_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared by the triangle and PageRank queries.  Integer-exact
     threshold; the 1-row order total broadcasts.
 
-    MATERIALIZED before return (shared per-JVM under the bench's
-    shared-frames mode): both downstream queries consume the edge
+    MATERIALIZED before return: both downstream queries consume the edge
     frame from several plan branches (two-path joins + degree /
     per-iteration rank joins), and Catalyst does no cross-branch CSE
     — without the cut, each branch re-runs the whole fact scan +
@@ -489,19 +482,17 @@ def _support_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket input comes through _baskets_shared for the same reason
     (two consumers here: order total + pair counts).
     """
-    from ..operators.dedup import shared_frame
+    from ..operators.dedup import materialize
 
-    def build() -> DataFrame:
-        baskets = _baskets_shared(spark, sf_dir)
-        tot = baskets.agg(F.count(F.lit(1)).alias("n_orders"))
-        return (
-            _brand_pair_counts(baskets)
-            .crossJoin(F.broadcast(tot))
-            .filter(F.lit(100) * F.col("n_ab") >= F.lit(2) * F.col("n_orders"))
-            .select(F.col("brand_a").alias("a"), F.col("brand_b").alias("b"))
-        )
+    baskets = _baskets_shared(spark, sf_dir)
+    tot = baskets.agg(F.count(F.lit(1)).alias("n_orders"))
+    return materialize(
+        _brand_pair_counts(baskets)
+        .crossJoin(F.broadcast(tot))
+        .filter(F.lit(100) * F.col("n_ab") >= F.lit(2) * F.col("n_orders"))
+        .select(F.col("brand_a").alias("a"), F.col("brand_b").alias("b"))
+    )
 
-    return shared_frame(spark, f"basket_edges:{sf_dir}", build, off_materialize=True)
 
 _BASKET_ORACLE = f"""
 WITH ob AS (

@@ -34,18 +34,6 @@ _DOT_SQL = (
 )
 
 
-def _shared(spark: SparkSession, key: str, sf_dir: str, build) -> DataFrame:
-    """Bench-only cross-query CSE (operators/dedup.py shared_frame):
-    the exact top-k spine and the ANN variant outputs are each
-    consumed by 2-4 gate queries (ann_recall re-runs all four
-    pipelines; rrf_fusion and int8_topk_recall re-rank the exact list)
-    — under SPARK_GRAFT_SHARED_FRAMES=1 each is computed once per JVM.
-    Off (tests, oracle gate) this is exactly ``build()``."""
-    from ..operators.dedup import shared_frame
-
-    return shared_frame(spark, f"{key}:{sf_dir}", build)
-
-
 def _dot(a: Column, b: Column) -> Column:
     # Statically-unrolled for the corpus dimension — stays inside
     # whole-stage codegen (the generic HOF fold is interpreted and
@@ -97,52 +85,48 @@ def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen'd higher-order dot product; top-k is orderBy+limit with a
     unique-key tie-break (Spark runs it as TakeOrderedAndProject — a
     per-partition heap + driver merge, no full sort shuffle)."""
-
-    def build() -> DataFrame:
-        e = load_table(spark, sf_dir, "embeddings")
-        # r16: evaluation volume here is corpus-LINEAR (2 dots per
-        # corpus row), so the kernel is size-gated: below the ~600k
-        # crossover the unrolled form's per-instance recompile
-        # (measured 3.6-7.7 s vs 0.5-1.4 s HOF on this build at sf0.1)
-        # never amortizes; at production scan sizes the gate picks the
-        # codegen'd unrolled form.  Bit-identical doubles either way.
-        rows = estimated_scan_rows(e)
-        dot = lambda a, b: adaptive_dot(  # noqa: E731
-            a, b, None if rows is None else 2 * rows
+    e = load_table(spark, sf_dir, "embeddings")
+    # r16: evaluation volume here is corpus-LINEAR (2 dots per
+    # corpus row), so the kernel is size-gated: below the ~600k
+    # crossover the unrolled form's per-instance recompile
+    # (measured 3.6-7.7 s vs 0.5-1.4 s HOF on this build at sf0.1)
+    # never amortizes; at production scan sizes the gate picks the
+    # codegen'd unrolled form.  Bit-identical doubles either way.
+    rows = estimated_scan_rows(e)
+    dot = lambda a, b: adaptive_dot(  # noqa: E731
+        a, b, None if rows is None else 2 * rows
+    )
+    # The probe's norm is hoisted to the (1-row) probe side:
+    # computing sqrt(dot(p,p)) per corpus row would add 64 codegen
+    # terms and a third more per-row flops for a value that never
+    # changes.  The multiplication order (row_norm * probe_norm)
+    # matches the inlined form, so doubles stay bit-identical to
+    # the oracle.
+    probe = e.orderBy("vec_id").limit(1).select(
+        F.col("vec_id").alias("probe_id"),
+        F.col("embedding").alias("p"),
+        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("p_nrm"),
+    )
+    scored = (
+        e.join(F.broadcast(probe))
+        .filter(F.col("vec_id") != F.col("probe_id"))
+        .select(
+            "vec_id",
+            "label",
+            (
+                dot(F.col("embedding"), F.col("p"))
+                / (
+                    F.sqrt(dot(F.col("embedding"), F.col("embedding")))
+                    * F.col("p_nrm")
+                )
+            ).alias("cosine"),
         )
-        # The probe's norm is hoisted to the (1-row) probe side:
-        # computing sqrt(dot(p,p)) per corpus row would add 64 codegen
-        # terms and a third more per-row flops for a value that never
-        # changes.  The multiplication order (row_norm * probe_norm)
-        # matches the inlined form, so doubles stay bit-identical to
-        # the oracle.
-        probe = e.orderBy("vec_id").limit(1).select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("embedding").alias("p"),
-            F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("p_nrm"),
-        )
-        scored = (
-            e.join(F.broadcast(probe))
-            .filter(F.col("vec_id") != F.col("probe_id"))
-            .select(
-                "vec_id",
-                "label",
-                (
-                    dot(F.col("embedding"), F.col("p"))
-                    / (
-                        F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-                        * F.col("p_nrm")
-                    )
-                ).alias("cosine"),
-            )
-        )
-        return (
-            scored.orderBy(F.desc("cosine"), F.asc("vec_id"))
-            .limit(TOPK)
-            .select("vec_id", "label", F.round("cosine", 9).alias("cosine"))
-        )
-
-    return _shared(spark, "sim_cosine_topk", sf_dir, build)
+    )
+    return (
+        scored.orderBy(F.desc("cosine"), F.asc("vec_id"))
+        .limit(TOPK)
+        .select("vec_id", "label", F.round("cosine", 9).alias("cosine"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -224,49 +208,45 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket table is materialized once (the ingest step in miniature)
     so the plane dots run once per row, and both the probe lookup and
     the candidate fetch read the materialized column."""
+    from ..operators.dedup import materialize
 
-    def build() -> DataFrame:
-        from ..operators.dedup import materialize
-
-        e = load_table(spark, sf_dir, "embeddings")
-        b = materialize(
-            e.select(
-                "vec_id", "label", "embedding", _bucket(F.col("embedding")).alias("bucket")
-            )
+    e = load_table(spark, sf_dir, "embeddings")
+    b = materialize(
+        e.select(
+            "vec_id", "label", "embedding", _bucket(F.col("embedding")).alias("bucket")
         )
-        # Candidate scoring uses the interpreted HOF dot, not the unrolled
-        # form: a bucket holds ~corpus/256 rows, so per-row cost is
-        # negligible while the unrolled expression's multi-second
-        # whole-stage compile (no codegen-cache hit across plan instances)
-        # dominated this query's cold time (measured 16.5 s cold with
-        # 12.3 s spread at sf0.1).  Bit-identical fold order, so the
-        # oracle hash is unchanged.
-        probe = b.orderBy("vec_id").limit(1).select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("embedding").alias("p"),
-            F.col("bucket").alias("probe_bucket"),
-            F.sqrt(hof_dot(F.col("embedding"), F.col("embedding"))).alias("p_nrm"),
-        )
-        cand = (
-            b.join(F.broadcast(probe), b.bucket == F.col("probe_bucket"))
-            .filter(F.col("vec_id") != F.col("probe_id"))
-        )
-        scored = cand.select(
-            "vec_id",
-            "label",
-            F.col("bucket").cast("int").alias("bucket"),
-            (
-                hof_dot(F.col("embedding"), F.col("p"))
-                / (F.sqrt(hof_dot(F.col("embedding"), F.col("embedding"))) * F.col("p_nrm"))
-            ).alias("cosine"),
-        )
-        return (
-            scored.orderBy(F.desc("cosine"), F.asc("vec_id"))
-            .limit(TOPK)
-            .select("vec_id", "label", "bucket", F.round("cosine", 9).alias("cosine"))
-        )
-
-    return _shared(spark, "sim_ann_lsh", sf_dir, build)
+    )
+    # Candidate scoring uses the interpreted HOF dot, not the unrolled
+    # form: a bucket holds ~corpus/256 rows, so per-row cost is
+    # negligible while the unrolled expression's multi-second
+    # whole-stage compile (no codegen-cache hit across plan instances)
+    # dominated this query's cold time (measured 16.5 s cold with
+    # 12.3 s spread at sf0.1).  Bit-identical fold order, so the
+    # oracle hash is unchanged.
+    probe = b.orderBy("vec_id").limit(1).select(
+        F.col("vec_id").alias("probe_id"),
+        F.col("embedding").alias("p"),
+        F.col("bucket").alias("probe_bucket"),
+        F.sqrt(hof_dot(F.col("embedding"), F.col("embedding"))).alias("p_nrm"),
+    )
+    cand = (
+        b.join(F.broadcast(probe), b.bucket == F.col("probe_bucket"))
+        .filter(F.col("vec_id") != F.col("probe_id"))
+    )
+    scored = cand.select(
+        "vec_id",
+        "label",
+        F.col("bucket").cast("int").alias("bucket"),
+        (
+            hof_dot(F.col("embedding"), F.col("p"))
+            / (F.sqrt(hof_dot(F.col("embedding"), F.col("embedding"))) * F.col("p_nrm"))
+        ).alias("cosine"),
+    )
+    return (
+        scored.orderBy(F.desc("cosine"), F.asc("vec_id"))
+        .limit(TOPK)
+        .select("vec_id", "label", "bucket", F.round("cosine", 9).alias("cosine"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -315,51 +295,47 @@ def similarity_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the probe's bucket plus the 8 single-bit-flip buckets; exact
     cosine top-k on candidates only.  Candidate superset of
     similarity_ann_lsh by construction, so recall can only improve."""
+    from ..operators.dedup import materialize
 
-    def build() -> DataFrame:
-        from ..operators.dedup import materialize
-
-        e = load_table(spark, sf_dir, "embeddings")
-        b = materialize(
-            e.select(
-                "vec_id", "label", "embedding", _bucket(F.col("embedding")).alias("bucket")
-            )
+    e = load_table(spark, sf_dir, "embeddings")
+    b = materialize(
+        e.select(
+            "vec_id", "label", "embedding", _bucket(F.col("embedding")).alias("bucket")
         )
-        flips = [0] + [1 << p for p in range(LSH_PLANES)]
-        # HOF dots for the same compile-vs-evaluate reason as
-        # similarity_ann_lsh: 9 buckets ≈ corpus/28 candidate rows.
-        probe = (
-            b.orderBy("vec_id")
-            .limit(1)
-            .select(
-                F.col("vec_id").alias("probe_id"),
-                F.col("embedding").alias("p"),
-                F.sqrt(hof_dot(F.col("embedding"), F.col("embedding"))).alias("p_nrm"),
-                F.explode(
-                    F.array(*[F.col("bucket").bitwiseXOR(F.lit(f)) for f in flips])
-                ).alias("pbucket"),
-            )
+    )
+    flips = [0] + [1 << p for p in range(LSH_PLANES)]
+    # HOF dots for the same compile-vs-evaluate reason as
+    # similarity_ann_lsh: 9 buckets ≈ corpus/28 candidate rows.
+    probe = (
+        b.orderBy("vec_id")
+        .limit(1)
+        .select(
+            F.col("vec_id").alias("probe_id"),
+            F.col("embedding").alias("p"),
+            F.sqrt(hof_dot(F.col("embedding"), F.col("embedding"))).alias("p_nrm"),
+            F.explode(
+                F.array(*[F.col("bucket").bitwiseXOR(F.lit(f)) for f in flips])
+            ).alias("pbucket"),
         )
-        cand = (
-            b.join(F.broadcast(probe), b.bucket == F.col("pbucket"))
-            .filter(F.col("vec_id") != F.col("probe_id"))
-        )
-        scored = cand.select(
-            "vec_id",
-            "label",
-            F.col("bucket").cast("int").alias("bucket"),
-            (
-                hof_dot(F.col("embedding"), F.col("p"))
-                / (F.sqrt(hof_dot(F.col("embedding"), F.col("embedding"))) * F.col("p_nrm"))
-            ).alias("cosine"),
-        )
-        return (
-            scored.orderBy(F.desc("cosine"), F.asc("vec_id"))
-            .limit(TOPK)
-            .select("vec_id", "label", "bucket", F.round("cosine", 9).alias("cosine"))
-        )
-
-    return _shared(spark, "sim_ann_multiprobe", sf_dir, build)
+    )
+    cand = (
+        b.join(F.broadcast(probe), b.bucket == F.col("pbucket"))
+        .filter(F.col("vec_id") != F.col("probe_id"))
+    )
+    scored = cand.select(
+        "vec_id",
+        "label",
+        F.col("bucket").cast("int").alias("bucket"),
+        (
+            hof_dot(F.col("embedding"), F.col("p"))
+            / (F.sqrt(hof_dot(F.col("embedding"), F.col("embedding"))) * F.col("p_nrm"))
+        ).alias("cosine"),
+    )
+    return (
+        scored.orderBy(F.desc("cosine"), F.asc("vec_id"))
+        .limit(TOPK)
+        .select("vec_id", "label", "bucket", F.round("cosine", 9).alias("cosine"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -618,74 +594,70 @@ def similarity_ivf_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     table partitioned by `cid`, a partition-pruned fetch, never a
     scan.  Recall follows the data distribution rather than sign-LSH's
     fixed hyperplane grid."""
+    from ..operators.dedup import materialize
 
-    def build() -> DataFrame:
-        from ..operators.dedup import materialize
+    raw = load_table(spark, sf_dir, "embeddings")
+    # Train and score on double components (the oracle widens the same
+    # way): float→double is exact, and keeping one element type means
+    # seed centroids and Lloyd means coalesce without implicit casts.
+    e = raw.select(
+        "vec_id", "label", F.col("embedding").cast("array<double>").alias("emb")
+    )
+    # Already materialized per-round inside _kmeans_centroids.
+    cents = _kmeans_centroids(e)
 
-        raw = load_table(spark, sf_dir, "embeddings")
-        # Train and score on double components (the oracle widens the same
-        # way): float→double is exact, and keeping one element type means
-        # seed centroids and Lloyd means coalesce without implicit casts.
-        e = raw.select(
-            "vec_id", "label", F.col("embedding").cast("array<double>").alias("emb")
-        )
-        # Already materialized per-round inside _kmeans_centroids.
-        cents = _kmeans_centroids(e)
+    # Final assignment against the trained centroids — same broadcast
+    # argmax as the training rounds (see _assign_nearest: skinny rows,
+    # hoisted norms, deterministic max_by tie-break).  Corpus-side
+    # dots are size-gated (adaptive_dot): locally the estimate sits
+    # far below the crossover so the plan keeps the interpreted HOF
+    # fold (measured 3× faster end-to-end at this SF — the unrolled
+    # form recompiles per plan instance); at production scan sizes
+    # the same gate picks the codegen'd kernel.  Fold order matches
+    # unrolled_dot and the oracle's list_sum, so hashes still match.
+    est_rows = estimated_scan_rows(e)
+    assign = _assign_nearest(e, cents, est_rows)
+    lists = materialize(e.join(assign, "vec_id"))
 
-        # Final assignment against the trained centroids — same broadcast
-        # argmax as the training rounds (see _assign_nearest: skinny rows,
-        # hoisted norms, deterministic max_by tie-break).  Corpus-side
-        # dots are size-gated (adaptive_dot): locally the estimate sits
-        # far below the crossover so the plan keeps the interpreted HOF
-        # fold (measured 3× faster end-to-end at this SF — the unrolled
-        # form recompiles per plan instance); at production scan sizes
-        # the same gate picks the codegen'd kernel.  Fold order matches
-        # unrolled_dot and the oracle's list_sum, so hashes still match.
-        est_rows = estimated_scan_rows(e)
-        assign = _assign_nearest(e, cents, est_rows)
-        lists = materialize(e.join(assign, "vec_id"))
+    probe = e.orderBy("vec_id").limit(1).select(
+        F.col("vec_id").alias("probe_id"),
+        F.col("emb").alias("p"),
+        F.sqrt(hof_dot(F.col("emb"), F.col("emb"))).alias("p_nrm"),
+    )
+    pc_cos = hof_dot(F.col("cvec"), F.col("p")) / (
+        F.sqrt(hof_dot(F.col("cvec"), F.col("cvec")))
+        * F.sqrt(hof_dot(F.col("p"), F.col("p")))
+    )
+    pcents = (
+        cents.crossJoin(F.broadcast(probe))
+        .orderBy(F.desc(pc_cos), F.asc("cid"))
+        .limit(IVF_NPROBE)
+        .select("cid", "probe_id", "p", "p_nrm")
+    )
 
-        probe = e.orderBy("vec_id").limit(1).select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("emb").alias("p"),
-            F.sqrt(hof_dot(F.col("emb"), F.col("emb"))).alias("p_nrm"),
-        )
-        pc_cos = hof_dot(F.col("cvec"), F.col("p")) / (
-            F.sqrt(hof_dot(F.col("cvec"), F.col("cvec")))
-            * F.sqrt(hof_dot(F.col("p"), F.col("p")))
-        )
-        pcents = (
-            cents.crossJoin(F.broadcast(probe))
-            .orderBy(F.desc(pc_cos), F.asc("cid"))
-            .limit(IVF_NPROBE)
-            .select("cid", "probe_id", "p", "p_nrm")
-        )
-
-        cand = lists.join(F.broadcast(pcents), "cid").filter(
-            F.col("vec_id") != F.col("probe_id")
-        )
-        # Candidate scoring is corpus-linear (rows×NPROBE/K pairs) —
-        # same size gate; est_rows over-estimates the candidate count,
-        # biasing toward the scale-safe unrolled side.
-        scored = cand.select(
-            "vec_id",
-            "label",
-            F.col("cid").cast("bigint").alias("cid"),
-            (
-                adaptive_dot(F.col("emb"), F.col("p"), est_rows)
-                / (
-                    F.sqrt(adaptive_dot(F.col("emb"), F.col("emb"), est_rows))
-                    * F.col("p_nrm")
-                )
-            ).alias("cosine"),
-        )
-        return (
-            scored.orderBy(F.desc("cosine"), F.asc("vec_id"))
-            .limit(TOPK)
-            .select("vec_id", "label", "cid", F.round("cosine", 9).alias("cosine"))
-        )
-
-    return _shared(spark, "sim_ivf_flat", sf_dir, build)
+    cand = lists.join(F.broadcast(pcents), "cid").filter(
+        F.col("vec_id") != F.col("probe_id")
+    )
+    # Candidate scoring is corpus-linear (rows×NPROBE/K pairs) —
+    # same size gate; est_rows over-estimates the candidate count,
+    # biasing toward the scale-safe unrolled side.
+    scored = cand.select(
+        "vec_id",
+        "label",
+        F.col("cid").cast("bigint").alias("cid"),
+        (
+            adaptive_dot(F.col("emb"), F.col("p"), est_rows)
+            / (
+                F.sqrt(adaptive_dot(F.col("emb"), F.col("emb"), est_rows))
+                * F.col("p_nrm")
+            )
+        ).alias("cosine"),
+    )
+    return (
+        scored.orderBy(F.desc("cosine"), F.asc("vec_id"))
+        .limit(TOPK)
+        .select("vec_id", "label", "cid", F.round("cosine", 9).alias("cosine"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -981,51 +953,47 @@ def _int8_centered_dots(spark: SparkSession, sf_dir: str) -> DataFrame:
     under ``similarity_int8_topk_recall`` and
     ``similarity_rrf_fusion`` (matches the oracles' codes / pcodes /
     dots CTE chain exactly)."""
-
-    def build() -> DataFrame:
-        e = load_table(spark, sf_dir, "embeddings")
-        flat = e.select(
-            "vec_id", F.posexplode("embedding").alias("d0", "v")
-        ).select(
-            "vec_id", (F.col("d0") + 1).alias("dim"), F.col("v").cast("double").alias("val")
-        )
-        stats = flat.groupBy("dim").agg(F.min("val").alias("mn"), F.max("val").alias("mx"))
-        codes = flat.join(F.broadcast(stats), on="dim").select(
-            "vec_id",
-            "dim",
-            F.when(F.col("mx") == F.col("mn"), F.lit(0))
-            .otherwise(
-                F.greatest(
-                    F.lit(0),
-                    F.least(
-                        F.lit(255),
-                        F.floor(
-                            (F.col("val") - F.col("mn"))
-                            / (F.col("mx") - F.col("mn"))
-                            * 255
-                        ).cast("int"),
-                    ),
-                )
-            )
-            .alias("q"),
-        )
-        pid = e.agg(F.min("vec_id").alias("pid"))
-        pcodes = codes.join(F.broadcast(pid), codes.vec_id == F.col("pid")).select(
-            "dim", F.col("q").alias("pq"), "pid"
-        )
-        dots = (
-            codes.join(F.broadcast(pcodes), on="dim")
-            .filter(F.col("vec_id") != F.col("pid"))
-            .groupBy("vec_id")
-            .agg(
-                F.sum((2 * F.col("q") - 255) * (2 * F.col("pq") - 255))
-                .cast("bigint")
-                .alias("dot")
+    e = load_table(spark, sf_dir, "embeddings")
+    flat = e.select(
+        "vec_id", F.posexplode("embedding").alias("d0", "v")
+    ).select(
+        "vec_id", (F.col("d0") + 1).alias("dim"), F.col("v").cast("double").alias("val")
+    )
+    stats = flat.groupBy("dim").agg(F.min("val").alias("mn"), F.max("val").alias("mx"))
+    codes = flat.join(F.broadcast(stats), on="dim").select(
+        "vec_id",
+        "dim",
+        F.when(F.col("mx") == F.col("mn"), F.lit(0))
+        .otherwise(
+            F.greatest(
+                F.lit(0),
+                F.least(
+                    F.lit(255),
+                    F.floor(
+                        (F.col("val") - F.col("mn"))
+                        / (F.col("mx") - F.col("mn"))
+                        * 255
+                    ).cast("int"),
+                ),
             )
         )
-        return dots
-
-    return _shared(spark, "sim_int8_dots", sf_dir, build)
+        .alias("q"),
+    )
+    pid = e.agg(F.min("vec_id").alias("pid"))
+    pcodes = codes.join(F.broadcast(pid), codes.vec_id == F.col("pid")).select(
+        "dim", F.col("q").alias("pq"), "pid"
+    )
+    dots = (
+        codes.join(F.broadcast(pcodes), on="dim")
+        .filter(F.col("vec_id") != F.col("pid"))
+        .groupBy("vec_id")
+        .agg(
+            F.sum((2 * F.col("q") - 255) * (2 * F.col("pq") - 255))
+            .cast("bigint")
+            .alias("dot")
+        )
+    )
+    return dots
 
 
 # ---------------------------------------------------------------------------
@@ -1922,59 +1890,51 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("emb")
     )
 
-    # r16 (VERDICT r15 item 1): the corpus prep — trained codebook →
-    # codes → reconstructed (quantized) vectors — is INGEST-time work
-    # a production deployment pays once, so it goes through the same
-    # shared_frame machinery as the IVF/LSH/int8 arms instead of
-    # re-training per invocation; probe scoring below stays live
-    # per-run work.  Deterministic (md5 seed + decimal means), so the
-    # shared frame is bit-stable across consumers.
-    def build_recon() -> DataFrame:
-        subs = F.array(
-            *[
-                F.struct(
-                    F.lit(m).cast("int").alias("m"),
-                    F.expr(f"slice(emb, {m * PQ_SUBDIM + 1}, {PQ_SUBDIM})").alias(
-                        "semb"
-                    ),
-                )
-                for m in range(PQ_M)
-            ]
-        )
-        sub = e.select("vec_id", F.explode(subs).alias("s")).select(
-            "vec_id",
-            F.col("s.m").alias("m"),
-            (F.col("vec_id") * PQ_M + F.col("s.m")).alias("sid"),
-            F.col("s.semb").alias("semb"),
-        )
-        train = sub.select(F.col("sid").alias("vec_id"), F.col("semb").alias("emb"))
-        cb = _kmeans_centroids(train, dim=PQ_SUBDIM)
+    # Corpus prep: trained codebook → codes → reconstructed (quantized)
+    # vectors.  Deterministic (md5 seed + decimal means).
+    subs = F.array(
+        *[
+            F.struct(
+                F.lit(m).cast("int").alias("m"),
+                F.expr(f"slice(emb, {m * PQ_SUBDIM + 1}, {PQ_SUBDIM})").alias(
+                    "semb"
+                ),
+            )
+            for m in range(PQ_M)
+        ]
+    )
+    sub = e.select("vec_id", F.explode(subs).alias("s")).select(
+        "vec_id",
+        F.col("s.m").alias("m"),
+        (F.col("vec_id") * PQ_M + F.col("s.m")).alias("sid"),
+        F.col("s.semb").alias("semb"),
+    )
+    train = sub.select(F.col("sid").alias("vec_id"), F.col("semb").alias("emb"))
+    cb = _kmeans_centroids(train, dim=PQ_SUBDIM)
 
-        # Sub-vector rows = PQ_M × corpus rows (the estimate rides the
-        # pre-explode scan, so scale it up by the static fan-out).
-        sub_rows = estimated_scan_rows(e)
-        codes = (
-            _assign_nearest(
-                train, cb, None if sub_rows is None else sub_rows * PQ_M, PQ_SUBDIM
-            )
-            .select(
-                F.expr(f"vec_id div {PQ_M}").alias("ovec"),
-                (F.col("vec_id") % PQ_M).cast("int").alias("m"),
-                "cid",
-            )
+    # Sub-vector rows = PQ_M × corpus rows (the estimate rides the
+    # pre-explode scan, so scale it up by the static fan-out).
+    sub_rows = estimated_scan_rows(e)
+    codes = (
+        _assign_nearest(
+            train, cb, None if sub_rows is None else sub_rows * PQ_M, PQ_SUBDIM
         )
-        return (
-            codes.join(F.broadcast(cb), "cid")
-            .groupBy("ovec")
-            .agg(
-                F.expr(
-                    "flatten(transform(array_sort(collect_list(struct(m, cvec))),"
-                    " s -> s.cvec))"
-                ).alias("remb")
-            )
+        .select(
+            F.expr(f"vec_id div {PQ_M}").alias("ovec"),
+            (F.col("vec_id") % PQ_M).cast("int").alias("m"),
+            "cid",
         )
-
-    recon = _shared(spark, "sim_pq_recon", sf_dir, build_recon)
+    )
+    recon = (
+        codes.join(F.broadcast(cb), "cid")
+        .groupBy("ovec")
+        .agg(
+            F.expr(
+                "flatten(transform(array_sort(collect_list(struct(m, cvec))),"
+                " s -> s.cvec))"
+            ).alias("remb")
+        )
+    )
     probe = e.orderBy("vec_id").limit(1).select(
         F.col("vec_id").alias("probe_id"),
         F.col("emb").alias("p"),

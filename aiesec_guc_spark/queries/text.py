@@ -880,6 +880,59 @@ chars AS MATERIALIZED (
     return "".join(parts) + "\n" + "\nUNION ALL\n".join(selects)
 
 
+def _bpe_train(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list[DataFrame], DataFrame]:
+    """Run the _BPE_ROUNDS training rounds over the corpus's
+    word-frequency table.  Returns each round's one-row argmax merge
+    ``(a, b, n)`` and the final ``(term, wf, toks)`` word frame."""
+    words = (
+        load_table(spark, sf_dir, "documents")
+        .select(
+            F.explode(
+                F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
+            ).alias("term")
+        )
+        .filter(F.length("term") >= 2)
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("wf"))
+    )
+    # char split via between-chars positions: not-at-start AND
+    # followed by a char — a bare (?!^) also matches at END and
+    # leaves a trailing "" token (Java split keeps trailing empties
+    # at limit -1)
+    cur = words.select(
+        "term", "wf", F.split(F.col("term"), "(?!^)(?=.)").alias("toks")
+    )
+    merges = []
+    for _ in range(_BPE_ROUNDS):
+        pairs = (
+            cur.filter(F.size("toks") >= 2)
+            .select(
+                "wf",
+                F.explode(F.sequence(F.lit(1), F.size("toks") - 1)).alias("i"),
+                F.col("toks"),
+            )
+            .select(
+                F.element_at("toks", F.col("i")).alias("a"),
+                F.element_at("toks", F.col("i") + 1).alias("b"),
+                "wf",
+            )
+            .groupBy("a", "b")
+            .agg(F.sum("wf").cast("bigint").alias("n"))
+        )
+        merge = pairs.orderBy(F.desc("n"), F.asc("a"), F.asc("b")).limit(1)
+        merges.append(merge)
+        cur = _apply_merge(
+            cur.crossJoin(
+                F.broadcast(
+                    merge.select(F.col("a").alias("_ma"), F.col("b").alias("_mb"))
+                )
+            )
+        )
+    return merges, cur
+
+
 @query("bpe_learn_merges", oracle=_bpe_learn_oracle())
 def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE vocabulary induction, the REAL loop (_BPE_ROUNDS = 3 rounds):
@@ -902,77 +955,19 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase pair count; the argmax row broadcasts into the next
     round's fold.  Rounds chain lineage; a long training run would
     localCheckpoint per round exactly like connected components.
-
-    r16b: the trained merge table is tokenizer-TRAINING output — work
-    a deployment pays once per corpus, like the IVF centroids and PQ
-    codebook in the similarity family — so it goes through
-    ``shared_frame`` (built once per JVM under the bench's
-    SPARK_GRAFT_SHARED_FRAMES=1, plain per-query build otherwise).
     """
-    from ..operators.dedup import shared_frame
-
-    def build() -> DataFrame:
-        d = load_table(spark, sf_dir, "documents")
-        toks = d.select(
-            F.explode(
-                F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
-            ).alias("term")
-        ).filter(F.length("term") >= 2)
-        words = toks.groupBy("term").agg(F.count(F.lit(1)).alias("wf"))
-        # char split via between-chars positions: not-at-start AND
-        # followed by a char — a bare (?!^) also matches at END and
-        # leaves a trailing "" token (Java split keeps trailing empties
-        # at limit -1)
-        cur = words.select(
-            "term", "wf", F.split(F.col("term"), "(?!^)(?=.)").alias("toks")
+    merges, _ = _bpe_train(spark, sf_dir)
+    out = None
+    for r, merge in enumerate(merges, 1):
+        frame = merge.select(
+            F.lit(r).alias("round"),
+            F.col("a").alias("pair_a"),
+            F.col("b").alias("pair_b"),
+            F.concat("a", "b").alias("merged"),
+            "n",
         )
-
-        apply_merge = _apply_merge
-
-        out_rows = []
-        for r in range(1, _BPE_ROUNDS + 1):
-            pairs = (
-                cur.filter(F.size("toks") >= 2)
-                .select(
-                    "wf",
-                    F.explode(
-                        F.sequence(F.lit(1), F.size("toks") - 1)
-                    ).alias("i"),
-                    F.col("toks"),
-                )
-                .select(
-                    F.element_at("toks", F.col("i")).alias("a"),
-                    F.element_at("toks", F.col("i") + 1).alias("b"),
-                    "wf",
-                )
-                .groupBy("a", "b")
-                .agg(F.sum("wf").cast("bigint").alias("n"))
-            )
-            merge = pairs.orderBy(F.desc("n"), F.asc("a"), F.asc("b")).limit(1)
-            out_rows.append(
-                merge.select(
-                    F.lit(r).alias("round"),
-                    F.col("a").alias("pair_a"),
-                    F.col("b").alias("pair_b"),
-                    F.concat("a", "b").alias("merged"),
-                    "n",
-                )
-            )
-            cur = apply_merge(
-                cur.crossJoin(
-                    F.broadcast(
-                        merge.select(
-                            F.col("a").alias("_ma"), F.col("b").alias("_mb")
-                        )
-                    )
-                )
-            )
-        out = out_rows[0]
-        for frame in out_rows[1:]:
-            out = out.unionByName(frame)
-        return out
-
-    return shared_frame(spark, f"bpe_merges:{sf_dir}", build)
+        out = frame if out is None else out.unionByName(frame)
+    return out
 
 
 def _bpe_apply_oracle() -> str:
@@ -1025,64 +1020,10 @@ def bpe_apply_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("term"),
     )
 
-    # relearn the merges (same pipeline as bpe_learn_merges), tracking
-    # only what apply needs: the final token arrays per word.  r16b:
-    # the (term → n_tok) table is the trained-tokenizer state — shared
-    # per JVM under the bench flag like the merge table above; the
-    # per-document explode + join + rollup (the APPLY work) stays live
-    # per run either way.
-    from ..operators.dedup import shared_frame
-
-    def build_term_tok() -> DataFrame:
-        words = (
-            load_table(spark, sf_dir, "documents")
-            .select(
-                F.explode(
-                    F.regexp_extract_all(
-                        F.lower(F.col("text")), F.lit("[a-z]+"), 0
-                    )
-                ).alias("term")
-            )
-            .filter(F.length("term") >= 2)
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("wf"))
-        )
-        cur = words.select(
-            "term", "wf", F.split(F.col("term"), "(?!^)(?=.)").alias("toks")
-        )
-        apply_merge = _apply_merge
-
-        for _ in range(_BPE_ROUNDS):
-            pairs = (
-                cur.filter(F.size("toks") >= 2)
-                .select(
-                    "wf",
-                    F.explode(
-                        F.sequence(F.lit(1), F.size("toks") - 1)
-                    ).alias("i"),
-                    F.col("toks"),
-                )
-                .select(
-                    F.element_at("toks", F.col("i")).alias("a"),
-                    F.element_at("toks", F.col("i") + 1).alias("b"),
-                    "wf",
-                )
-                .groupBy("a", "b")
-                .agg(F.sum("wf").cast("bigint").alias("n"))
-            )
-            merge = pairs.orderBy(F.desc("n"), F.asc("a"), F.asc("b")).limit(1)
-            cur = apply_merge(
-                cur.crossJoin(
-                    F.broadcast(
-                        merge.select(
-                            F.col("a").alias("_ma"), F.col("b").alias("_mb")
-                        )
-                    )
-                )
-            )
-        return cur.select("term", F.size("toks").alias("n_tok"))
-
-    term_tok = shared_frame(spark, f"bpe_term_toks:{sf_dir}", build_term_tok)
+    # retrain with bpe_learn_merges' rounds, keeping only what apply
+    # needs: the final token count per word
+    _, words = _bpe_train(spark, sf_dir)
+    term_tok = words.select("term", F.size("toks").alias("n_tok"))
     # r15 added an explicit broadcast of the (term → n_tok) side so
     # the exploded per-occurrence stream never shuffles for this join
     # (guide §3.1; the planner can't size the deep merge-round plan).

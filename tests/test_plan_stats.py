@@ -205,13 +205,38 @@ def test_rank_small_path_gate(spark, sf_dir, monkeypatch):
     assert _fits_single_partition(rdd_df, 10)
 
 
+def test_range_part_target_bytes_validates_env(monkeypatch):
+    """A non-numeric / zero / negative override of
+    SPARK_GRAFT_RANGE_PART_BYTES must fall back to the 64 MB default
+    instead of crashing every offset-merge query."""
+    from aiesec_guc_spark.operators.quantiles import _range_part_target_bytes
+
+    default = 64 << 20
+    monkeypatch.delenv("SPARK_GRAFT_RANGE_PART_BYTES", raising=False)
+    assert _range_part_target_bytes() == default
+    monkeypatch.setenv("SPARK_GRAFT_RANGE_PART_BYTES", "not-a-number")
+    assert _range_part_target_bytes() == default
+    monkeypatch.setenv("SPARK_GRAFT_RANGE_PART_BYTES", "0")
+    assert _range_part_target_bytes() == default
+    monkeypatch.setenv("SPARK_GRAFT_RANGE_PART_BYTES", "-5")
+    assert _range_part_target_bytes() == default
+    monkeypatch.setenv("SPARK_GRAFT_RANGE_PART_BYTES", str(128 << 20))
+    assert _range_part_target_bytes() == 128 << 20
+
+
 def test_maxsim_presliced_hof_equals_unrolled(spark, sf_dir, monkeypatch):
     """similarity_maxsim's two sub-dot forms (r16b pre-sliced HOF below
     the crossover, unrolled at/above it) must return identical rows —
     slice-then-zip_with folds the same index order as
-    zip_with-over-slices, so even the doubles are bit-equal."""
+    zip_with-over-slices, so even the doubles are bit-equal.
+
+    The scan estimator is pinned so the gate decision depends only on
+    the threshold: with no scan statistics it would return None and
+    force the unrolled form on both runs."""
+    import aiesec_guc_spark.queries.similarity as sim
     from aiesec_guc_spark.queries import spark_queries
 
+    monkeypatch.setattr(sim, "estimated_scan_rows", lambda df: 1000)
     q = spark_queries()["similarity_maxsim"]
     monkeypatch.setenv("SPARK_GRAFT_UNROLLED_DOT_MIN_EVALS", "1")
     unrolled = q(spark, sf_dir)

@@ -120,7 +120,7 @@ def test_random_projection_compiles_codegen(spark, sf_dir):
 
 def test_events_stream_reads_directory_form_table(spark, sf_dir, tmp_path):
     """events.parquet as a DIRECTORY of part files — the production
-    layout, and what tools/scale_probe.py builds — must stream exactly
+    layout, and what an N×-replicated scale corpus uses — must stream exactly
     the rows the single-file test layout streams.  The single-file
     fallback's pathGlobFilter matches LEAF file names, so pointing it
     at a directory-form table matches nothing and silently drains an

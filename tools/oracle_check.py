@@ -132,8 +132,7 @@ def main() -> int:
     unknown = sorted(only - set(qs))
     if unknown:
         # A typo'd name must not yield "OK: 0 mismatching" from a gate
-        # that never ran anything (same convention as scale_probe);
-        # checked BEFORE the ~30-60 s session build.
+        # that never ran anything; checked BEFORE the ~30-60 s session build.
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
 

@@ -24,9 +24,9 @@ flagged queries in isolation).  cgroup quota and PSI are printed for
 completeness — on this container they are unlimited/flat, which is
 what rules out in-guest causes (see SCALING.md).
 
-The same counters are recorded automatically by every bench.py run
-(canary.host + host_suite); this probe is for dedicated re-measurement
-at higher resolution.
+The same counters are recorded automatically by every perfbench run
+(its host record); this probe is for dedicated re-measurement at
+higher resolution.
 
 Caveat: /proc/stat is BOX-WIDE — user% and work_ratio include every
 process on the box, so run the probe on an otherwise-idle box for a
@@ -177,7 +177,7 @@ def main() -> int:
     reps, sec = 6, 3.0
     argv = sys.argv[1:]
     i = 0
-    try:  # argument-strict like gen_priority: bad input = usage, not a traceback
+    try:  # argument-strict: bad input = usage, not a traceback
         while i < len(argv):
             if argv[i] == "--reps":
                 i += 1
