@@ -23,9 +23,9 @@ Design:
 - The rewrite goes to a sibling temp directory first and swaps in
   with two renames, so a reader never observes a half-written table
   and a crash mid-compaction leaves the original intact (the temp
-  dir is abandoned, never the live one).  On HDFS/local the renames
-  are atomic metadata ops; on S3-like stores swap via a metastore /
-  table-format pointer instead (documented, not emulated here).
+  dir is abandoned, never the live one).  On a local filesystem the
+  renames are atomic metadata ops; on HDFS or S3-like stores swap via
+  a metastore / table-format pointer instead (not emulated here).
 - Swap siblings are HIDDEN (dot-prefixed basenames).  This matters
   when the compacted path is itself a partition directory inside a
   larger table (e.g. ``base/run_date=X``): Spark's data-source file
@@ -34,12 +34,16 @@ Design:
   temp or the abandoned old copy as a bogus extra partition — the
   swap stays invisible to ``base`` readers, not just to readers of
   the compacted path itself.
+- Every table rewrite (merge, SCD2, compaction, z-order) goes through
+  ``swap_in``.  It is LOCAL-ONLY (POSIX ``rename``): a path with a URI
+  scheme (``file://``, ``hdfs://`` ...) raises ``ValueError`` first.
 """
 
 from __future__ import annotations
 
 import math
 import os
+import re
 import shutil
 import uuid
 
@@ -100,6 +104,41 @@ def clear_table_dir(path: str) -> None:
                     f"{os.path.join(root, f)!r}"
                 )
     shutil.rmtree(path)
+
+
+def swap_in(
+    df: DataFrame,
+    path: str,
+    replace: bool,
+    fmt: str = "parquet",
+    marker: str | None = None,
+) -> None:
+    """The one table swap: write ``df`` into a hidden sibling, then
+    rename it in — also when creating, so a crash never leaves a
+    partial table.  ``replace`` is the caller's existence decision:
+    True moves the live table to an ``__old_`` sibling first (what
+    ``recover_interrupted_swap`` restores); False clears a data-free
+    skeleton (``clear_table_dir``).  ``marker`` is a dot-file dropped
+    in the sibling, so it appears in the same rename as the data.
+    Local-only: a URI path raises ``ValueError`` before any write."""
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", path):
+        raise ValueError(
+            f"table swaps are local-only (POSIX rename); got URI {path!r}"
+        )
+    path = path.rstrip("/")
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    tmp = swap_sibling(path, "swap")
+    write_table(df, tmp, fmt)
+    if marker is not None:
+        open(os.path.join(tmp, marker), "w").close()
+    if replace:
+        old = swap_sibling(path, "old")
+        os.rename(path, old)
+        os.rename(tmp, path)
+        shutil.rmtree(old)
+    else:
+        clear_table_dir(path)
+        os.rename(tmp, path)
 
 
 def file_stats(path: str) -> dict:
@@ -167,16 +206,14 @@ def compact_table(
         df: DataFrame = getattr(spark.read, fmt)(path)
     else:
         df = read_table(spark, path, schema, fmt)
-    tmp = swap_sibling(path, "compact")
-    old = swap_sibling(path, "old")
-    write_table(df.repartition(n_target), tmp, fmt)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    swap_in(df.repartition(n_target), path, replace=True, fmt=fmt)
     return {"before": before, "after": file_stats(path), "n_target": n_target}
 
 
+#: ``swap_in`` writes only ``__swap_``/``__old_``; the legacy tags stay
+#: so vacuum and recovery still heal siblings left by older runs.
 _SWAP_MARKERS = (
+    "__swap_",
     "__compact_",
     "__merge_",
     "__old_",
@@ -188,6 +225,21 @@ _SWAP_MARKERS = (
 #: The "old" half of a two-rename swap — restorable when the second
 #: rename never happened (see recover_interrupted_swap).
 _OLD_MARKERS = ("__old_", "__zorder_old_")
+
+
+def _siblings(path: str, markers: tuple[str, ...]) -> list[str]:
+    """Sorted paths of ``path``'s swap siblings tagged with any of
+    ``markers``, in both the hidden form (``.name__tag_*``) and the
+    legacy visible one (``name__tag_*``)."""
+    parent, name = os.path.split(path.rstrip("/"))
+    if not os.path.isdir(parent or "."):
+        return []
+    prefixes = tuple(f"{dot}{name}{m}" for dot in ("", ".") for m in markers)
+    return sorted(
+        os.path.join(parent, f)
+        for f in os.listdir(parent or ".")
+        if f.startswith(prefixes)
+    )
 
 
 def recover_interrupted_swap(path: str) -> str | None:
@@ -210,13 +262,7 @@ def recover_interrupted_swap(path: str) -> str | None:
     """
     if os.path.isdir(path.rstrip("/")):
         return None
-    parent, name = os.path.split(path.rstrip("/"))
-    olds = sorted(
-        f
-        for f in (os.listdir(parent) if os.path.isdir(parent or ".") else [])
-        for m in _OLD_MARKERS
-        if f.startswith((f".{name}{m}", f"{name}{m}"))
-    )
+    olds = _siblings(path, _OLD_MARKERS)
     if not olds:
         return None
     if len(olds) > 1:
@@ -224,16 +270,15 @@ def recover_interrupted_swap(path: str) -> str | None:
             f"multiple __old_ siblings for missing table {path!r}: {olds} "
             "— manual inspection required (never auto-pick one)"
         )
-    src = os.path.join(parent, olds[0])
-    os.rename(src, path.rstrip("/"))
-    return src
+    os.rename(olds[0], path.rstrip("/"))
+    return olds[0]
 
 
 def vacuum_siblings(path: str, dry_run: bool = False) -> list[str]:
-    """Remove orphaned swap siblings (``tbl__compact_*`` /
-    ``tbl__merge_*`` / ``tbl__old_*`` / ``tbl__zorder_tmp_*`` /
-    ``tbl__zorder_old_*``) left by a compaction, merge, or layout
-    rewrite that crashed between write and rename.
+    """Remove orphaned swap siblings (``tbl__swap_*`` / ``tbl__old_*``
+    and the legacy ``tbl__compact_*`` / ``tbl__merge_*`` /
+    ``tbl__zorder_tmp_*`` / ``tbl__zorder_old_*``) left by a swap that
+    crashed between write and rename.
 
     The swap protocol guarantees the LIVE table is never the damaged
     party — a crash abandons only temp/old siblings — so vacuuming is
@@ -247,34 +292,17 @@ def vacuum_siblings(path: str, dry_run: bool = False) -> list[str]:
     Returns the removed (or, with ``dry_run``, matched) paths.
     """
     if not os.path.isdir(path.rstrip("/")):
-        parent_, name_ = os.path.split(path.rstrip("/"))
-        if os.path.isdir(parent_ or "."):
-            stranded = [
-                f
-                for f in os.listdir(parent_ or ".")
-                for m in _OLD_MARKERS
-                if f.startswith((f".{name_}{m}", f"{name_}{m}"))
-            ]
-            if stranded:
-                raise RuntimeError(
-                    f"table {path!r} is missing and {stranded} may be its "
-                    "only copy — run recover_interrupted_swap first"
-                )
-    parent, name = os.path.split(path.rstrip("/"))
-    # both the current hidden form (.name__tag_) and the legacy
-    # visible form (name__tag_) from older runs
-    prefixes = [
-        f"{dot}{name}{m}" for dot in ("", ".") for m in _SWAP_MARKERS
-    ]
-    victims = [
-        os.path.join(parent, f)
-        for f in os.listdir(parent or ".")
-        if any(f.startswith(p) for p in prefixes)
-    ]
+        stranded = _siblings(path, _OLD_MARKERS)
+        if stranded:
+            raise RuntimeError(
+                f"table {path!r} is missing and {stranded} may be its "
+                "only copy — run recover_interrupted_swap first"
+            )
+    victims = _siblings(path, _SWAP_MARKERS)
     if not dry_run:
         for v in victims:
             shutil.rmtree(v)
-    return sorted(victims)
+    return victims
 
 
 def fs_listdir(path: str, spark=None) -> list[str] | None:
@@ -299,12 +327,11 @@ def fs_listdir(path: str, spark=None) -> list[str] | None:
     rather than raising, because every caller already carries a safe
     blind-path branch.
 
-    NOT a general filesystem abstraction: the compaction/atomic-swap
-    machinery (``compact_table``, ``vacuum_siblings``,
-    ``recover_interrupted_swap``) stays on raw local ``os`` calls BY
-    DESIGN — its atomicity comes from POSIX ``rename``, which object
-    stores do not offer; its documented cluster story is a different
-    mechanism (see ``compact_table``), not this seam.
+    NOT a general filesystem abstraction: the table-swap machinery
+    (``swap_in``, ``vacuum_siblings``, ``recover_interrupted_swap``)
+    stays on raw local ``os`` calls BY DESIGN — its atomicity comes
+    from POSIX ``rename``, which object stores do not offer.  Swaps
+    are local-only; ``swap_in`` rejects any path with a URI scheme.
     """
     if spark is not None:
         try:
@@ -427,9 +454,8 @@ def zorder_rewrite(
     per-file (x, y) bounding boxes), ``sortWithinPartitions`` so row
     groups inside each file cluster too, then drop the key before
     writing — the layout survives in the file/row-group min/max
-    stats, not as a stored column.  The write goes through the same
-    hidden-sibling two-rename swap as ``compact_table`` so readers
-    never see a half-written table.
+    stats, not as a stored column.  The write goes through
+    ``swap_in`` so readers never see a half-written table.
 
     Scale: one range shuffle of the rewritten slice — the same cost
     as any compaction pass, and like ``compact_partitions`` it should
@@ -438,21 +464,12 @@ def zorder_rewrite(
     after the swap.
     """
     z = zorder_key_expr(x_col, y_col, bits)
-    spark = df.sparkSession
     recover_interrupted_swap(path)
-    tmp = swap_sibling(path, "zorder_tmp")
-    (
+    clustered = (
         df.withColumn("_zkey", F.expr(z))
         .repartitionByRange(n_files, "_zkey")
         .sortWithinPartitions("_zkey")
         .drop("_zkey")
-        .write.mode("overwrite")
-        .parquet(tmp)
     )
-    old = swap_sibling(path, "zorder_old")
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+    swap_in(clustered, path, replace=os.path.exists(path))
     return file_stats(path)

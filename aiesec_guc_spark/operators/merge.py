@@ -21,26 +21,19 @@ Scale shape: ONE shuffle on the merge keys over target ∪ updates
 (row_number + keep rank 1); at real table sizes you partition the
 target (e.g. by key range or date), prune the union to partitions the
 updates touch, and merge per partition — the helper takes any path,
-so partition-wise application is the same call.  The rewrite uses the
-temp-sibling + two-rename swap from operators/maintenance.py: readers
-never observe a half-merged table and a crash leaves the original.
+so partition-wise application is the same call.  The rewrite goes
+through ``maintenance.swap_in``: readers never observe a half-merged
+table and a crash leaves the original.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .maintenance import (
-    clear_table_dir,
-    parquet_table_exists,
-    recover_interrupted_swap,
-    swap_sibling,
-)
+from .maintenance import parquet_table_exists, recover_interrupted_swap, swap_in
 
 
 def merge_upsert(
@@ -92,29 +85,7 @@ def merge_upsert(
         .drop("_rn", "_src")
     )
 
-    if not exists:
-        # creation via the same swap-sibling rename as the merge path:
-        # a crash mid-initial-write must never leave a partial table
-        # that the next run's exists probe treats as authoritative,
-        # and a concurrent reader must never see a half-written table
-        os.makedirs(os.path.dirname(target_path.rstrip("/")) or ".", exist_ok=True)
-        tmp = swap_sibling(target_path, "merge")
-        merged.write.mode("overwrite").parquet(tmp)
-        # data-free per the recursive probe; refuses non-marker content
-        clear_table_dir(target_path)
-        os.rename(tmp, target_path)
-        return {
-            "n_before": 0,
-            "n_updates": updates.count(),
-            "n_after": spark.read.parquet(target_path).count(),
-        }
-
-    tmp = swap_sibling(target_path, "merge")
-    old = swap_sibling(target_path, "old")
-    merged.write.mode("overwrite").parquet(tmp)
-    os.rename(target_path, old)
-    os.rename(tmp, target_path)
-    shutil.rmtree(old)
+    swap_in(merged, target_path, replace=exists)
     return {
         "n_before": n_before,
         "n_updates": updates.count(),

@@ -85,10 +85,10 @@ def scd2_apply(
     partition the table by ``valid_to IS NULL`` — then this job reads
     and rewrites only the open slice plus the batch).  The apply is
     one shuffle of open∪changes on the key; windows partition per
-    key.  The rewrite uses the hidden-sibling two-rename swap
-    (operators/maintenance.py), so readers never observe a
-    half-applied table.  Applying batches b1 then b2 equals applying
-    b1∪b2 at once — differential-tested in tests/test_scd2_apply.py.
+    key.  The rewrite goes through ``maintenance.swap_in``, so readers
+    never observe a half-applied table.  Applying batches b1 then b2
+    equals applying b1∪b2 at once — differential-tested in
+    tests/test_scd2_apply.py.
 
     ``applied_marker``: a dot-prefixed filename dropped INSIDE the
     table directory before the rename, making "this batch was
@@ -100,15 +100,7 @@ def scd2_apply(
     Spark listings skip dot-files, so the marker is invisible to
     readers.
     """
-    import os
-    import shutil
-
-    from .maintenance import (
-        clear_table_dir,
-        parquet_table_exists,
-        recover_interrupted_swap,
-        swap_sibling,
-    )
+    from .maintenance import parquet_table_exists, recover_interrupted_swap, swap_in
 
     # Heal a swap that crashed between its two renames BEFORE probing
     # existence: with the table renamed away and nothing renamed in,
@@ -174,30 +166,7 @@ def scd2_apply(
     )
     result = segments if closed is None else closed.select(*out_cols).unionByName(segments)
 
-    def _mark(tmp_dir: str) -> None:
-        # inside the pre-rename sibling: marker + data become visible
-        # in ONE rename — no crash window between apply and marker
-        if applied_marker is not None:
-            open(os.path.join(tmp_dir, applied_marker), "w").close()
-
-    if not exists:
-        # same write-then-rename as the merge path: a concurrent
-        # reader must never observe a half-written initial table
-        os.makedirs(os.path.dirname(target_path.rstrip("/")) or ".", exist_ok=True)
-        tmp = swap_sibling(target_path, "merge")
-        result.write.mode("overwrite").parquet(tmp)
-        _mark(tmp)
-        # data-free per the recursive probe; refuses non-marker content
-        clear_table_dir(target_path)
-        os.rename(tmp, target_path)
-    else:
-        tmp = swap_sibling(target_path, "merge")
-        old = swap_sibling(target_path, "old")
-        result.write.mode("overwrite").parquet(tmp)
-        _mark(tmp)
-        os.rename(target_path, old)
-        os.rename(tmp, target_path)
-        shutil.rmtree(old)
+    swap_in(result, target_path, replace=exists, marker=applied_marker)
     final = spark.read.parquet(target_path)
     return {
         "n_versions": final.count(),

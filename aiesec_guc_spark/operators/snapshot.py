@@ -124,17 +124,13 @@ def write_snapshot(df: DataFrame, base_path: str, run_date: str) -> None:
     spark = df.sparkSession
     part_dir = f"{base_path.rstrip('/')}/run_date={run_date}"
     listing_before = fs_listdir(part_dir, spark=spark)
-    prev = df.sparkSession.conf.get("spark.sql.sources.partitionOverwriteMode")
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.withColumn("run_date", F.lit(run_date))
-            .write.mode("overwrite")
-            .partitionBy("run_date")
-            .parquet(base_path)
-        )
-    finally:
-        df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        df.withColumn("run_date", F.lit(run_date))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("run_date")
+        .parquet(base_path)
+    )
     # partitionBy over ZERO rows writes no partition directory at all
     # (just _SUCCESS) — the base then fails every later read with
     # UNABLE_TO_INFER_SCHEMA, wedging the quiet-day publish.  A

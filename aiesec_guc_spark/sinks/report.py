@@ -5,8 +5,12 @@ nature, fed by an already-reduced (small) DataFrame.
   (aiesec.py:188-233) computed distributed (format-string projection),
   folded to one string driver-side.
 - ``write_styled_report``: the styled-Excel report (aiesec.py:148-183)
-  when openpyxl is available, CSV fallback otherwise — the styling
-  predicate (premium == "Yes") is the same `when()` both ways.
+  with its header fill, premium highlight and autofit.
+- ``read_snapshot_xlsx`` / ``write_snapshot_partitioned`` /
+  ``read_snapshot_dir``: the xlsx snapshot edges, driver-side and
+  per-partition.  Every workbook is written and read by one codec,
+  the stdlib-only ``sinks/xlsxlite.py``; a ``.csv`` path is the only
+  other format.
 - ``notify_if_nonempty``: the count-guarded send (aiesec.py:236-251)
   with the transport injected (no SMTP here; the default logs).
 """
@@ -19,6 +23,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import xlsxlite
 
 log = logging.getLogger(__name__)
 
@@ -66,59 +72,34 @@ def render_email_html(delta: DataFrame, title: str = "New Opportunities") -> str
 
 
 def write_styled_report(delta: DataFrame, path: str) -> str:
-    """Small-result edge sink: styled xlsx via openpyxl when
-    installed, otherwise via the vendored stdlib writer
-    (``sinks/xlsxlite.py``) — REAL xlsx bytes either way, with the
-    same header fill / premium highlight / autofit (aiesec.py:148-183).
-    An explicit ``.csv`` path still writes CSV.  Returns the path
-    written."""
+    """Small-result edge sink: a styled xlsx written by ``xlsxlite``
+    with the reference's header fill / premium highlight / autofit
+    (aiesec.py:148-183).  An explicit ``.csv`` path still writes CSV.
+    Returns the path written."""
     pdf = delta.toPandas()
     if path.endswith(".csv"):
         pdf.to_csv(path, index=False)
         return path
     xlsx = path if path.endswith(".xlsx") else path + ".xlsx"
-    try:
-        import openpyxl  # noqa: F401
-        from openpyxl.styles import Font, PatternFill
+    highlight = (
+        {i for i, v in enumerate(pdf["premium"]) if v == "Yes"}
+        if "premium" in pdf.columns
+        else set()
+    )
+    return xlsxlite.write_xlsx(
+        xlsx, list(pdf.columns), pdf.values.tolist(), highlight_rows=highlight
+    )
 
-        pdf.to_excel(xlsx, index=False)
-        wb = openpyxl.load_workbook(xlsx)
-        ws = wb.active
-        header_fill = PatternFill("solid", fgColor="1F4E79")
-        for cell in ws[1]:
-            cell.font = Font(bold=True, color="FFFFFF")
-            cell.fill = header_fill
-        premium_fill = PatternFill("solid", fgColor="FFFF00")
-        cols = {c.value: i for i, c in enumerate(ws[1], start=1)}
-        pcol = cols.get("premium")
-        if pcol:
-            for row in ws.iter_rows(min_row=2):
-                if row[pcol - 1].value == "Yes":
-                    for cell in row:
-                        cell.fill = premium_fill
-        # Column autofit (aiesec.py:175-181): width = longest cell + 3.
-        from openpyxl.utils import get_column_letter
 
-        for col in ws.columns:
-            max_length = 0
-            col_letter = get_column_letter(col[0].column)
-            for cell in col:
-                if cell.value:
-                    max_length = max(max_length, len(str(cell.value)))
-            ws.column_dimensions[col_letter].width = max_length + 3
-        wb.save(xlsx)
-        return xlsx
-    except ImportError:
-        from . import xlsxlite
+def _xlsx_frame(path: str, sheet_name: str | None = None):
+    """One worksheet as an all-strings pandas frame.  Empty cells read
+    back as "" (never the stringified "None"), so "N/A" sentinels and
+    blanks round-trip exactly."""
+    import pandas as pd
 
-        columns = list(pdf.columns)
-        rows = pdf.values.tolist()
-        highlight = (
-            {i for i, v in enumerate(pdf["premium"]) if v == "Yes"}
-            if "premium" in pdf.columns
-            else set()
-        )
-        return xlsxlite.write_xlsx(xlsx, columns, rows, highlight_rows=highlight)
+    cols, rows = xlsxlite.read_xlsx(path, sheet_name=sheet_name)
+    rows = [["" if v is None else v for v in r] for r in rows]
+    return pd.DataFrame(rows, columns=cols).astype(str)
 
 
 def read_snapshot_xlsx(spark, path: str, sheet_name: str = "Sheet1") -> DataFrame:
@@ -127,38 +108,21 @@ def read_snapshot_xlsx(spark, path: str, sheet_name: str = "Sheet1") -> DataFram
     (the reference's all-strings schema, SURVEY.md §1.2).
 
     Edge-format reader by design: xlsx is a small presentation
-    artifact, so a driver-side ``pd.read_excel`` → ``createDataFrame``
+    artifact, so a driver-side ``xlsxlite`` read → ``createDataFrame``
     is the right shape; the canonical at-scale snapshot store is the
     run_date-partitioned parquet table (operators/snapshot.py).
 
-    Mirrors ``write_styled_report``'s fallback: a ``.csv`` path (or a
-    missing openpyxl) reads via ``pd.read_csv``.  ``"N/A"`` sentinels
-    are kept as literal strings (``keep_default_na=False``) so a
-    write→read round-trip is lossless — unlike the reference, whose
-    default pandas NA coercion silently turns them into NaN.
+    Mirrors ``write_styled_report``: a ``.csv`` path reads via
+    ``pd.read_csv``.  ``"N/A"`` sentinels are kept as literal strings
+    so a write→read round-trip is lossless — unlike the reference,
+    whose default pandas NA coercion silently turns them into NaN.
     """
     import pandas as pd
 
     if path.endswith(".csv"):
-        pdf = pd.read_csv(path, dtype=str, keep_default_na=False)
+        pdf = pd.read_csv(path, dtype=str, keep_default_na=False).astype(str)
     else:
-        try:
-            pdf = pd.read_excel(
-                path, sheet_name=sheet_name, keep_default_na=False
-            )
-        except ImportError:  # pandas needs openpyxl for xlsx
-            from . import xlsxlite
-
-            cols, rows = xlsxlite.read_xlsx(path, sheet_name=sheet_name)
-            # Empty cells must read back as "" exactly like the
-            # openpyxl path (keep_default_na=False) — astype(str)
-            # alone would stringify None into the literal "None" and
-            # the same snapshot pair would diff by environment.
-            rows = [
-                tuple("" if v is None else v for v in r) for r in rows
-            ]
-            pdf = pd.DataFrame(rows, columns=cols)
-    pdf = pdf.astype(str)
+        pdf = _xlsx_frame(path, sheet_name)
     # Explicit all-strings schema: inference reads it from the DATA,
     # so a legitimately empty snapshot (count-guarded day with no
     # delta) raised CANNOT_INFER_EMPTY_SCHEMA instead of returning the
@@ -185,14 +149,11 @@ def write_snapshot_partitioned(df: DataFrame, out_dir: str) -> DataFrame:
     (local dir here; a shared filesystem on a real cluster — same
     contract as every Spark file sink).  Size the partitions with
     ``df.repartition(n)`` before calling: xlsx has a hard 1,048,576-row
-    sheet cap and openpyxl memory tracks sheet size, so ~100k rows per
-    partition is the practical ceiling.
+    sheet cap and the writer builds each sheet in memory, so ~100k
+    rows per partition is the practical ceiling.
 
-    Mirrors ``write_styled_report``'s format contract: styled-header
-    xlsx via openpyxl when importable in the WORKER (the format probe
-    runs per-task, since workers may have different environments than
-    the driver), via the vendored stdlib writer (``xlsxlite``)
-    otherwise — real xlsx part files either way.  The per-row premium
+    Each part is a styled-header workbook written by ``xlsxlite``, the
+    same codec as ``write_styled_report``.  The per-row premium
     highlight is skipped on purpose — it is an O(cells) driver-format
     concern for small reports, not a bulk snapshot feature.
     """
@@ -226,24 +187,7 @@ def write_snapshot_partitioned(df: DataFrame, out_dir: str) -> DataFrame:
         # the reader unioned today's parts 0-2 with yesterday's
         # part 3 and nothing looked wrong.
         tmp = f"{path}.{ctx.taskAttemptId()}.tmp"
-        try:
-            import openpyxl
-            from openpyxl.styles import Font, PatternFill
-
-            # engine is explicit: pandas infers it from the extension
-            # and ".tmp" is not a recognized one
-            pdf.to_excel(tmp, index=False, engine="openpyxl")
-            wb = openpyxl.load_workbook(tmp)
-            ws = wb.active
-            header_fill = PatternFill("solid", fgColor="1F4E79")
-            for cell in ws[1]:
-                cell.font = Font(bold=True, color="FFFFFF")
-                cell.fill = header_fill
-            wb.save(tmp)
-        except ImportError:
-            from . import xlsxlite
-
-            xlsxlite.write_xlsx(tmp, list(pdf.columns), pdf.values.tolist())
+        xlsxlite.write_xlsx(tmp, list(pdf.columns), pdf.values.tolist())
         yield pd.DataFrame(
             {"file": [path], "n_rows": [len(pdf)], "tmp": [tmp]}
         )
@@ -284,8 +228,8 @@ def write_snapshot_partitioned(df: DataFrame, out_dir: str) -> DataFrame:
 def read_snapshot_dir(spark, path: str) -> DataFrame:
     """Read a ``write_snapshot_partitioned`` directory back,
     distributed: the file list parallelizes across executors and each
-    file is parsed worker-side with pandas — no driver-side row
-    funnel.  Handles both part formats (.xlsx/.csv); all columns come
+    file is parsed worker-side (``xlsxlite`` or pandas CSV) — no
+    driver-side row funnel.  Handles both part formats (.xlsx/.csv); all columns come
     back string-typed (the reference's all-strings schema, same
     contract as ``read_snapshot_xlsx``), with "N/A" sentinels kept as
     literal strings."""
@@ -294,18 +238,7 @@ def read_snapshot_dir(spark, path: str) -> DataFrame:
     def _read_one(f: str) -> "pd.DataFrame":
         if f.endswith(".csv"):
             return pd.read_csv(f, dtype=str, keep_default_na=False)
-        try:
-            return pd.read_excel(f, keep_default_na=False).astype(str)
-        except ImportError:  # pandas needs openpyxl for xlsx
-            from . import xlsxlite
-
-            cols, rows = xlsxlite.read_xlsx(f)
-            # "" for empty cells, matching the openpyxl path (see
-            # read_snapshot_xlsx) — never the stringified "None"
-            rows = [
-                tuple("" if v is None else v for v in r) for r in rows
-            ]
-            return pd.DataFrame(rows, columns=cols).astype(str)
+        return _xlsx_frame(f)
 
     files = sorted(
         os.path.join(path, f)
@@ -319,12 +252,7 @@ def read_snapshot_dir(spark, path: str) -> DataFrame:
     if files[0].endswith(".csv"):
         cols = list(pd.read_csv(files[0], dtype=str, nrows=0).columns)
     else:
-        try:
-            cols = list(pd.read_excel(files[0], nrows=0).columns)
-        except ImportError:
-            from . import xlsxlite
-
-            cols, _ = xlsxlite.read_xlsx(files[0])
+        cols, _ = xlsxlite.read_xlsx(files[0])
     schema = ", ".join(f"`{c}` string" for c in cols)
 
     def _read(batches):

@@ -1,6 +1,8 @@
-"""Minimal stdlib-only xlsx writer/reader — the vendored fallback that
-keeps the styled-Excel sink (reference aiesec.py:148-183, S3/S6) on
-the REAL Excel path when openpyxl isn't installed.
+"""Minimal stdlib-only xlsx writer/reader — the package's one workbook
+codec.  Every xlsx the sinks write or read (the styled report of
+reference aiesec.py:148-183, S3/S6, and the snapshot edges in
+``sinks/report.py``) goes through this module; there is no second
+(openpyxl or pandas) Excel path.
 
 An .xlsx file is a zip of XML parts (ECMA-376 / ISO 29500
 SpreadsheetML — public spec).  This module implements exactly the
@@ -14,9 +16,9 @@ slice the reference's report needs:
 - column autofit widths = longest cell + 3 (aiesec.py:175-181).
 
 The reader parses back inlineStr, sharedStrings, and plain numeric
-cells, so it round-trips both this writer's output and workbooks
-written by openpyxl/pandas.  Pure stdlib (zipfile + ElementTree); no
-third-party imports anywhere.
+cells, so it reads both this writer's output and workbooks written by
+other tools (Excel, openpyxl, pandas).  Pure stdlib (zipfile +
+ElementTree); no third-party imports anywhere.
 """
 
 from __future__ import annotations

@@ -264,3 +264,110 @@ def test_recover_interrupted_swap_restores_renamed_away_table(spark, sf_dir, tmp
         spark, path, upd, keys=["n_nationkey"], order_col="n_nationkey"
     )
     assert stats["n_before"] == n_rows  # NOT 0 — history survived
+
+
+def test_bare_relative_table_name_recovers_and_vacuums(tmp_path, monkeypatch):
+    """A table named without any directory part ("latest") has an empty
+    parent; recovery and vacuum must list the cwd, not ``""``."""
+    from aiesec_guc_spark.operators.maintenance import (
+        recover_interrupted_swap,
+        vacuum_siblings,
+    )
+
+    monkeypatch.chdir(tmp_path)
+    os.makedirs(".latest__old_dead1")
+    os.makedirs(".latest__swap_dead2")
+    with pytest.raises(RuntimeError, match="only copy"):
+        vacuum_siblings("latest")
+    assert recover_interrupted_swap("latest") == ".latest__old_dead1"
+    assert os.path.isdir("latest")
+    assert recover_interrupted_swap("latest") is None
+    assert vacuum_siblings("latest") == [".latest__swap_dead2"]
+    assert sorted(os.listdir(tmp_path)) == ["latest"]
+
+
+def _kv(spark, keys, v, ts):
+    return spark.createDataFrame(
+        [(k, f"{v}{k}", ts) for k in keys], "k long, v string, ts long"
+    )
+
+
+def test_swap_rejects_uri_paths_before_writing(spark, tmp_path, monkeypatch):
+    """Table swaps are local-only: a ``file://`` target must fail with
+    ValueError before anything is created — no junk ``file:`` directory
+    in the cwd and no orphaned swap sibling beside the target."""
+    from aiesec_guc_spark.operators.merge import merge_upsert
+    from aiesec_guc_spark.operators.scd import scd2_apply
+
+    monkeypatch.chdir(tmp_path)
+    uri = f"file://{tmp_path}/t"
+    batch = _kv(spark, range(3), "v", 1)
+    with pytest.raises(ValueError, match="local-only"):
+        merge_upsert(spark, uri, batch, keys=["k"], order_col="ts")
+    with pytest.raises(ValueError, match="local-only"):
+        scd2_apply(spark, uri, batch, "k", ["v"], "ts")
+    assert os.listdir(tmp_path) == []
+
+
+@pytest.mark.parametrize("op", ["merge", "scd2", "compact", "zorder"])
+def test_swap_crash_between_renames_heals_on_next_call(
+    spark, tmp_path, monkeypatch, op
+):
+    """Every swap caller: when the second rename of the swap fails, the
+    live table is only its ``__old_`` sibling.  The next call must heal
+    it and keep every pre-swap row, and SCD2's applied marker must not
+    be in the copy that recovery restores."""
+    from aiesec_guc_spark.operators.maintenance import (
+        vacuum_siblings,
+        zorder_rewrite,
+    )
+    from aiesec_guc_spark.operators.merge import merge_upsert
+    from aiesec_guc_spark.operators.scd import scd2_apply
+
+    path = str(tmp_path / "tbl")
+    base = _kv(spark, range(8), "v", 1)
+    batch = _kv(spark, [100, 101], "new", 2)
+    marker = ".applied_b1"
+    if op == "scd2":
+        scd2_apply(spark, path, base, "k", ["v"], "ts")
+    else:
+        base.repartition(4).write.parquet(path)
+    pre = sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    def call():
+        if op == "merge":
+            merge_upsert(spark, path, batch, keys=["k"], order_col="ts")
+        elif op == "scd2":
+            scd2_apply(spark, path, batch, "k", ["v"], "ts", applied_marker=marker)
+        elif op == "compact":
+            compact_table(spark, path, target_bytes=1 << 30)
+        else:
+            zorder_rewrite(base, path, "k", "ts", n_files=2)
+
+    real_rename = os.rename
+    renames = []
+
+    def crash_on_second(src, dst):
+        renames.append(src)
+        if len(renames) == 2:
+            raise OSError("simulated crash between the swap's renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_second)
+    with pytest.raises(OSError, match="simulated crash"):
+        call()
+    monkeypatch.setattr(os, "rename", real_rename)
+
+    assert not os.path.exists(path)
+    olds = [f for f in os.listdir(tmp_path) if f.startswith(".tbl__old_")]
+    assert len(olds) == 1
+    assert marker not in os.listdir(tmp_path / olds[0])
+
+    call()
+    after = set(map(tuple, spark.read.parquet(path).collect()))
+    assert set(pre) <= after
+    if op in ("compact", "zorder"):
+        assert sorted(after) == pre
+    assert not [f for f in os.listdir(tmp_path) if f.startswith(".tbl__old_")]
+    # only the crashed call's abandoned temp is left to vacuum
+    assert len(vacuum_siblings(path)) == 1

@@ -49,8 +49,7 @@ def test_snapshot_write_read_roundtrip_delta(spark, tmp_path):
     """S4: write both snapshots via the edge sink, read them back, and
     the anti-join of the round-tripped frames equals the golden
     delta — the reference's exact on-disk state transition
-    (aiesec.py:130-145).  Real xlsx on both sink paths (openpyxl or
-    the vendored stdlib writer)."""
+    (aiesec.py:130-145).  Real xlsx both ways, through xlsxlite."""
     from aiesec_guc_spark.operators.snapshot import snapshot_delta
 
     today, yesterday = snapshot_pair(spark)
@@ -66,9 +65,8 @@ def test_snapshot_write_read_roundtrip_delta(spark, tmp_path):
 
 def test_styled_xlsx_autofit(spark, tmp_path):
     """Autofit parity (aiesec.py:175-181): every column of the styled
-    report gets a width — real xlsx bytes on BOTH sink paths (openpyxl
-    when installed, the vendored stdlib writer otherwise), audited via
-    the stdlib XML reader so the assertion runs in any environment."""
+    report gets a width — real xlsx bytes written by xlsxlite and
+    audited via its stdlib XML reader."""
     from aiesec_guc_spark.sinks import xlsxlite
 
     today, _ = snapshot_pair(spark)

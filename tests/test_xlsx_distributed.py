@@ -1,7 +1,7 @@
 """Distributed Excel snapshot: write one REAL xlsx part file per
-partition from executors (no driver collect; openpyxl when present in
-workers, the vendored stdlib writer otherwise), read the directory
-back worker-side, and verify a lossless roundtrip including "N/A"
+partition from executors (no driver collect; every part written by
+xlsxlite, the one workbook codec), read the directory back
+worker-side, and verify a lossless roundtrip including "N/A"
 sentinels."""
 
 from __future__ import annotations

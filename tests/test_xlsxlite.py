@@ -1,8 +1,8 @@
-"""Vendored stdlib xlsx writer/reader (sinks/xlsxlite.py): byte-real
-round trips, the reference's styling contract (header fill, premium
-highlight, autofit = max length + 3 — aiesec.py:148-183), and the
-report-sink integration that keeps S3/S6 on the genuine Excel path
-when openpyxl is absent (as in this container)."""
+"""The stdlib xlsx writer/reader (sinks/xlsxlite.py), the package's
+one workbook codec: byte-real round trips, the reference's styling
+contract (header fill, premium highlight, autofit = max length + 3 —
+aiesec.py:148-183), and the report-sink integration that keeps S3/S6
+on the genuine Excel path."""
 
 from __future__ import annotations
 
@@ -141,9 +141,8 @@ def test_sparse_rows_pad_missing_cells(tmp_path):
 
 
 def test_report_sink_writes_real_xlsx_and_reads_back(spark, tmp_path):
-    """End-to-end through the report sink: in an openpyxl-less
-    environment this exercises the vendored path with actual xlsx
-    bytes both directions, N/A sentinels intact."""
+    """End-to-end through the report sink: actual xlsx bytes written
+    and read by xlsxlite, N/A sentinels intact."""
     df = spark.createDataFrame(
         [("1", "T1", "N/A", "Yes"), ("2", "T2", "Org", "No")],
         "opportunity_id string, title string, organization string, premium string",
