@@ -23,14 +23,16 @@ target (e.g. by key range or date), prune the union to partitions the
 updates touch, and merge per partition — the helper takes any path,
 so partition-wise application is the same call.  The rewrite goes
 through ``maintenance.swap_in``: readers never observe a half-merged
-table and a crash leaves the original.
+table and a crash leaves the original.  The returned row counts ride
+on that write as ``Observation``s — no count job reads the inputs or
+the written table a second time.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .maintenance import parquet_table_exists, recover_interrupted_swap, swap_in
@@ -48,7 +50,9 @@ def merge_upsert(
     Update rows win over target rows with the same key when their
     ``order_col`` is greater-or-equal (ties prefer the update — the
     at-least-once redelivery case).  Returns
-    ``{"n_before", "n_updates", "n_after"}``.
+    ``{"n_before", "n_updates", "n_after"}``, observed on the frame the
+    swap writes: target and update rows as they enter the merge, and
+    the merged rows as they are written.
     """
     # heal a two-rename swap that crashed between its renames — the
     # exists probe below must never mistake the crash window for a
@@ -64,14 +68,18 @@ def merge_upsert(
             raise ValueError(
                 f"updates schema must match target; differing columns {sorted(missing)}"
             )
-        n_before = target.count()
         # _src=1 for updates so equal (order_col, key) prefers the update.
         unioned = target.withColumn("_src", F.lit(0)).unionByName(
             updates.withColumn("_src", F.lit(1))
         )
     else:
-        n_before = 0
         unioned = updates.withColumn("_src", F.lit(1))
+    obs_in, obs_out = Observation(), Observation()
+    unioned = unioned.observe(
+        obs_in,
+        F.count(F.when(F.col("_src") == 0, 1)).alias("n_before"),
+        F.count(F.when(F.col("_src") == 1, 1)).alias("n_updates"),
+    )
 
     value_cols = [c for c in unioned.columns if c not in (*keys, "_src")]
     w = Window.partitionBy(*keys).orderBy(
@@ -83,11 +91,8 @@ def merge_upsert(
         unioned.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_src")
+        .observe(obs_out, F.count(F.lit(1)).alias("n_after"))
     )
 
     swap_in(merged, target_path, replace=exists)
-    return {
-        "n_before": n_before,
-        "n_updates": updates.count(),
-        "n_after": spark.read.parquet(target_path).count(),
-    }
+    return {**obs_in.get, **obs_out.get}

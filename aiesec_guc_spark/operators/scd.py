@@ -11,7 +11,7 @@ operator scales with the widest key's history, not the table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -79,7 +79,11 @@ def scd2_apply(
     duplicate ``(key, ts)`` rows in one batch are ambiguous; a change
     at-or-before the current version's ``valid_from`` would rewrite
     CLOSED history (late data belongs in a rebuild from the event
-    log — scd2_user_status_history — not an incremental apply).
+    log — scd2_user_status_history — not an incremental apply).  One
+    aggregate job checks both, before anything is written.
+
+    Returns ``{"n_versions", "n_open"}``, observed on the frame the
+    swap writes rather than counted from a read-back.
 
     Scale shape: closed versions pass through UNTOUCHED (at 100 TB,
     partition the table by ``valid_to IS NULL`` — then this job reads
@@ -110,41 +114,45 @@ def scd2_apply(
 
     out_cols = [key, *value_cols, "valid_from", "valid_to"]
 
-    dup = (
-        changes.groupBy(key, ts_col).count().filter(F.col("count") > 1).count()
-    )
+    # recursive: partitioned tables keep parquet only in subdirs — a
+    # top-level listing would misclassify them as fresh and rmtree them
+    exists = parquet_table_exists(target_path)
+    # Both preconditions in one job, before any write: per (key, ts)
+    # the batch's row count (> 1 is a duplicate), left-joined to the
+    # key's open version so new keys still count (at or before its
+    # valid_from is late).
+    per_instant = changes.groupBy(key, ts_col).agg(F.count(F.lit(1)).alias("_n"))
+    if exists:
+        target = spark.read.parquet(target_path)
+        open_rows = target.filter(F.col("valid_to").isNull())
+        closed = target.filter(F.col("valid_to").isNotNull())
+        per_instant = per_instant.join(
+            open_rows.select(key, F.col("valid_from").alias("_vf")), key, "left"
+        )
+        at_or_before = F.col(ts_col) <= F.col("_vf")
+        seed = open_rows.select(
+            key, *value_cols, F.col("valid_from").alias(ts_col)
+        )
+    else:
+        at_or_before = F.lit(False)
+        closed = None
+        seed = changes.limit(0).select(key, *value_cols, ts_col)
+
+    dup, late = per_instant.agg(
+        F.count(F.when(F.col("_n") > 1, 1)),
+        F.coalesce(F.sum(F.when(at_or_before, F.col("_n"))), F.lit(0)),
+    ).first()
     if dup:
         raise ValueError(
             f"{dup} duplicate ({key}, {ts_col}) rows in the changes batch; "
             "one observation per key-instant — pre-reduce the batch"
         )
-
-    # recursive: partitioned tables keep parquet only in subdirs — a
-    # top-level listing would misclassify them as fresh and rmtree them
-    exists = parquet_table_exists(target_path)
-    if exists:
-        target = spark.read.parquet(target_path)
-        open_rows = target.filter(F.col("valid_to").isNull())
-        closed = target.filter(F.col("valid_to").isNotNull())
-        late = (
-            changes.join(
-                open_rows.select(key, F.col("valid_from").alias("_vf")), key
-            )
-            .filter(F.col(ts_col) <= F.col("_vf"))
-            .count()
+    if late:
+        raise ValueError(
+            f"{late} change rows at or before their key's current "
+            "valid_from — incremental SCD2 cannot rewrite closed "
+            "history; rebuild from the event log instead"
         )
-        if late:
-            raise ValueError(
-                f"{late} change rows at or before their key's current "
-                "valid_from — incremental SCD2 cannot rewrite closed "
-                "history; rebuild from the event log instead"
-            )
-        seed = open_rows.select(
-            key, *value_cols, F.col("valid_from").alias(ts_col)
-        )
-    else:
-        closed = None
-        seed = changes.limit(0).select(key, *value_cols, ts_col)
 
     stream = seed.unionByName(changes.select(key, *value_cols, ts_col))
     w = Window.partitionBy(key).orderBy(ts_col)
@@ -166,9 +174,11 @@ def scd2_apply(
     )
     result = segments if closed is None else closed.select(*out_cols).unionByName(segments)
 
+    obs = Observation()
+    result = result.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_versions"),
+        F.count(F.when(F.col("valid_to").isNull(), 1)).alias("n_open"),
+    )
     swap_in(result, target_path, replace=exists, marker=applied_marker)
-    final = spark.read.parquet(target_path)
-    return {
-        "n_versions": final.count(),
-        "n_open": final.filter(F.col("valid_to").isNull()).count(),
-    }
+    return obs.get

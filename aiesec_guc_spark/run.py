@@ -45,10 +45,11 @@ def scrape_today(
 ) -> DataFrame:
     """Stages 2-3: scrape source → card extraction.
 
-    With ``base_url`` the source fetches ``{base_url}?page=N`` over
-    HTTP, one page per partition (the reference's live pagination,
-    parallelized); without it the recorded fixtures serve hermetic
-    runs."""
+    With ``base_url`` the source fetches ``{base_url}?page=N`` for
+    ``pages`` >= 1 pages over HTTP (the reference's live pagination),
+    the pages dealt into at most ``default_parallelism()`` partitions
+    that each fetch theirs in turn; without it the recorded fixtures
+    serve hermetic runs, grouped the same way."""
     from .functions.html_cards import extract_cards
     from .sources.listing_scrape import register_listing_source
 
@@ -177,8 +178,8 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     # Fail at parse time, not mid-pipeline: --base-url with the default
-    # pages=0 yields a zero-partition DataSource scan that pyspark runs
-    # as read(None) -> AttributeError inside an executor task, and
+    # pages=0 is refused by the scrape source only once a Spark session
+    # has started and the scan is planned, and
     # --smtp-host with no recipients raises SMTPRecipientsRefused only
     # AFTER the whole run (scrape + snapshot + reports) has completed,
     # losing the notification.

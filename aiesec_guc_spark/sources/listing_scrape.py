@@ -3,19 +3,21 @@ Spark 4 Python Data Source API.
 
 The reference drives a headless browser ("Load more" pagination, 30 s
 sleeps) on the driver; the Spark-native shape is a custom
-``DataSource`` whose reader partitions the page list so fetching
-parallelizes across executors.
+``DataSource`` whose reader deals the page list round-robin into at
+most ``session.default_parallelism()`` partitions.  Each partition
+fetches its pages one after another, so fetching parallelizes across
+cores without paying one task (and one output file) per page, and the
+listing site sees at most one request per core.
 
 Three fetch modes behind one seam:
 
 - **fixtures** (default): recorded HTML fragments (hermetic builds,
   FIXTURES.md §A2).
 - **HTTP**: pass ``.option("base_url", ...)`` and ``.option("pages",
-  N)`` — each partition GETs ``{base_url}?page={p}`` with stdlib
-  urllib from its executor, so fetching parallelizes across the
-  cluster instead of serializing behind the reference's per-page
-  sleeps.  Partitioning, schema, and registration are identical in
-  both modes.
+  N)`` (N >= 1) — each partition GETs ``{base_url}?page={p}`` for its
+  pages with stdlib urllib from its executor, retrying connection
+  errors, timeouts and 5xx answers a fixed few times.  Partitioning,
+  schema, and registration are identical in every mode.
 - **pluggable renderer**: ``.option("fetcher",
   "my_pkg.scrape:render_fetch")`` names an importable callable
   ``(page_id, base_url, timeout) -> list[str]`` that REPLACES the
@@ -23,10 +25,11 @@ Three fetch modes behind one seam:
   the reference drives headless Chromium (cookie-dialog dismissal
   aiesec.py:40-46, "Load more" click loop aiesec.py:51-63) because
   the listing only exists after JS executes; a playwright/selenium
-  fetcher slots in here and runs PER PARTITION on the executor, so
-  rendering still parallelizes across the cluster.  The option is an
-  import path (module:function), not a closure, because data-source
-  options are strings and the name must resolve on every executor.
+  fetcher slots in here and runs for each page of a partition on the
+  executor, so rendering still parallelizes across the cluster.  The
+  option is an import path (module:function), not a closure, because
+  data-source options are strings and the name must resolve on every
+  executor.
 
 Usage:
     register_listing_source(spark)
@@ -38,6 +41,8 @@ Usage:
 
 from __future__ import annotations
 
+import time
+import urllib.error
 import urllib.request
 
 from pyspark.sql import SparkSession
@@ -84,6 +89,33 @@ def resolve_fetcher(spec: str):
     return getattr(importlib.import_module(mod), fn)
 
 
+#: HTTP GET attempts per page, and the pause before each retry grows
+#: by this step: a transient failure costs at most 0.2 + 0.4 s.
+_GET_ATTEMPTS = 3
+_RETRY_STEP_S = 0.2
+
+
+def _http_get(url: str, timeout: float) -> str:
+    """GET ``url``, retrying connection errors, timeouts and 5xx
+    answers; ``_GET_ATTEMPTS`` tries in all.  A 4xx answer is the
+    site's final word and raises at once; so does the last failure."""
+
+    def get() -> str:
+        with urllib.request.urlopen(url, timeout=timeout) as r:
+            return r.read().decode("utf-8", errors="replace")
+
+    for attempt in range(1, _GET_ATTEMPTS):
+        try:
+            return get()
+        except urllib.error.HTTPError as e:
+            if e.code < 500:
+                raise
+        except (urllib.error.URLError, TimeoutError, ConnectionError):
+            pass
+        time.sleep(_RETRY_STEP_S * attempt)
+    return get()
+
+
 def _fetch(
     page_id: int,
     base_url: str | None = None,
@@ -96,17 +128,39 @@ def _fetch(
     rendering, authenticated sessions, anything a plain GET can't do);
     with only ``base_url`` it GETs ``{base_url}?page={page_id}`` — the
     reference's browser pagination (aiesec.py:51-63) as one stateless
-    HTTP request per page; with neither it serves recorded fixtures
+    HTTP request per page, retried on transient failures
+    (``_http_get``); with neither it serves recorded fixtures
     (hermetic builds).  Partitioning, schema, and registration are
-    unchanged by the mode — executors call `_fetch` per assigned page,
-    so fetching parallelizes across the cluster.
+    unchanged by the mode — executors call `_fetch` per assigned page.
     """
     if fetcher is not None:
         return list(resolve_fetcher(fetcher)(page_id, base_url, timeout))
     if base_url is None:
         return _fixture_pages()[page_id]
-    with urllib.request.urlopen(f"{base_url}?page={page_id}", timeout=timeout) as r:
-        return [r.read().decode("utf-8", errors="replace")]
+    return [_http_get(f"{base_url}?page={page_id}", timeout)]
+
+
+def _fetch_pages(page_ids, base_url, timeout, fetcher):
+    """Yield ``(page_id, html)`` for each page in order — the one loop
+    over `_fetch` that every reader shares."""
+    for page_id in page_ids:
+        for html in _fetch(page_id, base_url, timeout, fetcher):
+            yield (page_id, html)
+
+
+def _live_pages(options) -> int | None:
+    """The ``pages`` option when a live mode (``base_url`` or
+    ``fetcher``) is set, else None (fixture mode).  A live mode needs
+    at least one page: zero pages would plan an empty scan that fails
+    inside a worker instead of here."""
+    if options.get("base_url") is None and options.get("fetcher") is None:
+        return None
+    n_pages = int(options.get("pages", "0"))
+    if n_pages < 1:
+        raise ValueError(
+            f"listing_scrape: pages must be >= 1 with base_url or fetcher, got {n_pages}"
+        )
+    return n_pages
 
 
 def demo_render_fetcher(
@@ -153,26 +207,33 @@ class ListingScrapeDataSource(DataSource):  # type: ignore[misc]
 
 
 class ListingScrapeReader(DataSourceReader):  # type: ignore[misc]
-    """One input partition per listing page — the unit the reference
-    fetches serially behind its per-page sleep (aiesec.py:51-63);
-    here pages fetch in parallel across executors."""
+    """The batch reader.  The reference fetches pages serially behind a
+    per-page sleep (aiesec.py:51-63); here the pages are dealt
+    round-robin into ``min(n_pages, default_parallelism())``
+    partitions, each carrying a list of page ids that ``read`` fetches
+    one after another.  A few hundred cards a day make per-task and
+    per-file cost, not fetch time, the price of a page — so a page is
+    not a partition.  Fixture mode is grouped the same way."""
 
     def __init__(self, options=None):
         options = options or {}
         self.base_url = options.get("base_url")
         self.fetcher = options.get("fetcher")
-        self.n_pages = int(options.get("pages", "0"))
+        self.n_pages = _live_pages(options)
         self.timeout = float(options.get("timeout", "30"))
 
     def partitions(self):
-        if self.base_url is not None or self.fetcher is not None:
-            return [InputPartition(p) for p in range(1, self.n_pages + 1)]
-        return [InputPartition(p) for p in sorted(_fixture_pages())]
+        from ..session import default_parallelism
+
+        if self.n_pages is None:
+            pages = sorted(_fixture_pages())
+        else:
+            pages = list(range(1, self.n_pages + 1))
+        n_parts = min(len(pages), default_parallelism())
+        return [InputPartition(pages[i::n_parts]) for i in range(n_parts)]
 
     def read(self, partition):
-        page_id = partition.value
-        for html in _fetch(page_id, self.base_url, self.timeout, self.fetcher):
-            yield (page_id, html)
+        yield from _fetch_pages(partition.value, self.base_url, self.timeout, self.fetcher)
 
 
 class ListingScrapeStreamReader(SimpleDataSourceStreamReader):  # type: ignore[misc]
@@ -197,8 +258,9 @@ class ListingScrapeStreamReader(SimpleDataSourceStreamReader):  # type: ignore[m
         self.fetcher = options.get("fetcher")
         self.timeout = float(options.get("timeout", "30"))
         self.per_trigger = int(options.get("pages_per_trigger", "0"))  # 0 = all
-        if self.base_url is not None or self.fetcher is not None:
-            self.max_page = int(options.get("pages", "0"))
+        n_pages = _live_pages(options)
+        if n_pages is not None:
+            self.max_page = n_pages
             self.first_page = 1
         else:
             pages = sorted(_fixture_pages())
@@ -208,13 +270,10 @@ class ListingScrapeStreamReader(SimpleDataSourceStreamReader):  # type: ignore[m
     def initialOffset(self) -> dict:
         return {"page": self.first_page}
 
-    def _rows(self, page: int) -> list[tuple]:
-        if page > self.max_page:
-            return []
-        return [
-            (page, html)
-            for html in _fetch(page, self.base_url, self.timeout, self.fetcher)
-        ]
+    def _rows(self, first: int, end: int) -> list[tuple]:
+        """Rows of pages ``first .. end - 1``, clamped to the last page."""
+        pages = range(first, min(end, self.max_page + 1))
+        return list(_fetch_pages(pages, self.base_url, self.timeout, self.fetcher))
 
     def read(self, start: dict):
         page = start["page"]
@@ -223,16 +282,10 @@ class ListingScrapeStreamReader(SimpleDataSourceStreamReader):  # type: ignore[m
         last = self.max_page if self.per_trigger <= 0 else min(
             self.max_page, page + self.per_trigger - 1
         )
-        rows: list[tuple] = []
-        for p in range(page, last + 1):
-            rows.extend(self._rows(p))
-        return iter(rows), {"page": last + 1}
+        return iter(self._rows(page, last + 1)), {"page": last + 1}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        rows: list[tuple] = []
-        for page in range(start["page"], end["page"]):
-            rows.extend(self._rows(page))
-        return iter(rows)
+        return iter(self._rows(start["page"], end["page"]))
 
 
 def register_listing_source(spark: SparkSession) -> bool:

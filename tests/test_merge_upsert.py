@@ -38,6 +38,9 @@ def test_merge_insert_update_retain(spark, tmp_path):
     )
     out = merge_upsert(spark, path, updates, keys=["k"], order_col="ts")
     assert out == {"n_before": 3, "n_updates": 3, "n_after": 4}
+    # the counts are observed on the write, and match the table
+    assert out["n_after"] == spark.read.parquet(path).count()
+    assert out["n_updates"] == updates.count()
     assert _snapshot(spark, path) == {
         1: (10, "a"),
         2: (20, "b2"),

@@ -89,14 +89,24 @@ def test_scd2_apply_differential_and_split_invariance(spark, tmp_path):
     assert sorted(os.listdir(tmp_path)) == ["incr", "oneshot"]
 
 
+def _table_counts(spark, path):
+    table = spark.read.parquet(path)
+    return {
+        "n_versions": table.count(),
+        "n_open": table.filter("valid_to IS NULL").count(),
+    }
+
+
 def test_scd2_noop_observation_does_not_version(spark, tmp_path):
     p = str(tmp_path / "t")
     scd2_apply(spark, p, _mk_changes(spark, [(1, "a", 0, 10)]), "k", ["status", "tier"], "ts")
     out = scd2_apply(spark, p, _mk_changes(spark, [(1, "a", 0, 20)]), "k", ["status", "tier"], "ts")
     assert out == {"n_versions": 1, "n_open": 1}
+    assert out == _table_counts(spark, p)  # counts observed on the write
     # a real change versions
     out = scd2_apply(spark, p, _mk_changes(spark, [(1, "b", 0, 30)]), "k", ["status", "tier"], "ts")
     assert out == {"n_versions": 2, "n_open": 1}
+    assert out == _table_counts(spark, p)
     rows = _rows(spark, p)
     assert rows == [(1, "a", 0, 10, 30), (1, "b", 0, 30, None)]
 
@@ -111,6 +121,17 @@ def test_scd2_null_value_change_detected(spark, tmp_path):
     assert out == {"n_versions": 2, "n_open": 1}
 
 
+def _files(root):
+    """Every file under ``root`` (dot-files included) with its size and
+    mtime — any rewrite or swap shows up as a difference."""
+    out = []
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            out.append((os.path.relpath(os.path.join(d, f), root), st.st_size, st.st_mtime_ns))
+    return sorted(out)
+
+
 def test_scd2_preconditions_raise(spark, tmp_path):
     p = str(tmp_path / "t")
     with pytest.raises(ValueError, match="duplicate"):
@@ -119,6 +140,19 @@ def test_scd2_preconditions_raise(spark, tmp_path):
             _mk_changes(spark, [(1, "a", 0, 10), (1, "b", 0, 10)]),
             "k", ["status", "tier"], "ts",
         )
+    # a refused batch on a fresh path creates nothing, siblings included
+    assert os.listdir(tmp_path) == []
     scd2_apply(spark, p, _mk_changes(spark, [(1, "a", 0, 10)]), "k", ["status", "tier"], "ts")
+    files, rows, siblings = _files(p), _rows(spark, p), sorted(os.listdir(tmp_path))
     with pytest.raises(ValueError, match="closed history"):
         scd2_apply(spark, p, _mk_changes(spark, [(1, "b", 0, 10)]), "k", ["status", "tier"], "ts")
+    with pytest.raises(ValueError, match="duplicate"):
+        scd2_apply(
+            spark, p,
+            _mk_changes(spark, [(1, "b", 0, 20), (1, "c", 0, 20)]),
+            "k", ["status", "tier"], "ts",
+        )
+    # a refused batch on an existing table leaves it exactly as it was
+    assert _files(p) == files
+    assert _rows(spark, p) == rows
+    assert sorted(os.listdir(tmp_path)) == siblings == ["t"]

@@ -401,3 +401,169 @@ def test_smtp_security_mode_validation_and_alias():
     assert t2._mode() == "starttls"
     t3 = SMTPTransport("h", 1, "s@x", ["r@y"], security="ssl")
     assert t3._mode() == "ssl"
+
+
+class _FlakyPages:
+    """A loopback listing site whose page ``p`` answers 503 for its
+    first ``failures[p]`` requests (-1: always), then CARD_PAGE; it
+    counts every request it answers."""
+
+    def __init__(self, failures: dict[int, int]):
+        self.failures = dict(failures)
+        self.requests = 0
+        lock = threading.Lock()
+        site = self
+
+        class Handler(http.server.BaseHTTPRequestHandler):
+            def do_GET(self):  # noqa: N802 - stdlib naming
+                from urllib.parse import parse_qs, urlparse
+
+                page = int(parse_qs(urlparse(self.path).query)["page"][0])
+                with lock:
+                    site.requests += 1
+                    left = site.failures.get(page, 0)
+                    if left > 0:
+                        site.failures[page] = left - 1
+                status = 503 if left != 0 else 200
+                body = b"busy" if status == 503 else (
+                    CARD_PAGE % (page * 100 + 1, page, page)
+                ).encode()
+                self.send_response(status)
+                self.send_header("Content-Type", "text/html")
+                self.send_header("Content-Length", str(len(body)))
+                self.end_headers()
+                self.wfile.write(body)
+
+            def log_message(self, *args):
+                pass
+
+        self.httpd = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+        self.url = f"http://127.0.0.1:{self.httpd.server_port}/listings"
+
+    def __enter__(self):
+        threading.Thread(target=self.httpd.serve_forever, daemon=True).start()
+        return self
+
+    def __exit__(self, *exc):
+        self.httpd.shutdown()
+        self.httpd.server_close()
+
+
+def _run_date_dirs(data_dir) -> list[str]:
+    snaps = os.path.join(data_dir, "snapshots")
+    if not os.path.isdir(snaps):
+        return []
+    return [n for n in os.listdir(snaps) if n.startswith("run_date=")]
+
+
+def test_scrape_groups_pages_into_at_most_default_parallelism(spark, http_server):
+    """Pages are dealt into <= default_parallelism() partitions, each
+    page in exactly one; the rows are the per-page fetches, and the
+    fixture mode still yields exactly FIXTURE_CARDS."""
+    from aiesec_guc_spark.session import default_parallelism
+    from aiesec_guc_spark.sources.fixtures import FIXTURE_CARDS
+    from aiesec_guc_spark.sources.listing_scrape import (
+        ListingScrapeReader,
+        _fetch,
+        register_listing_source,
+    )
+
+    if not register_listing_source(spark):
+        pytest.skip("Python DataSource API unavailable")
+    n_pages = 3 * int(os.environ["SPARK_GRAFT_CPUS"]) + 1
+    parts = ListingScrapeReader(
+        {"base_url": http_server, "pages": str(n_pages)}
+    ).partitions()
+    assert 1 <= len(parts) <= default_parallelism()
+    dealt = sorted(p for part in parts for p in part.value)
+    assert dealt == list(range(1, n_pages + 1))
+
+    df = (
+        spark.read.format("listing_scrape")
+        .option("base_url", http_server)
+        .option("pages", n_pages)
+        .load()
+    )
+    assert df.rdd.getNumPartitions() <= default_parallelism()
+    expected = sorted(
+        (p, html) for p in range(1, n_pages + 1) for html in _fetch(p, http_server)
+    )
+    assert sorted(map(tuple, df.collect())) == expected
+
+    fixture_rows = spark.read.format("listing_scrape").load().collect()
+    assert sorted(map(tuple, fixture_rows)) == sorted(FIXTURE_CARDS)
+
+
+def test_run_pipeline_zero_pages_fails_at_planning(spark, tmp_path, http_server):
+    """The Python API twin of the CLI's --pages guard: a live source
+    with pages < 1 is refused with a ValueError naming ``pages`` while
+    the scan is planned, so no snapshot partition is ever written."""
+    from aiesec_guc_spark.run import run_pipeline
+
+    data_dir = str(tmp_path / "data")
+    with pytest.raises(Exception, match=r"ValueError: listing_scrape: pages must be >= 1"):
+        run_pipeline(
+            spark, data_dir, str(tmp_path / "out"), "2026-08-13",
+            send=lambda body: None, base_url=http_server, pages=0,
+        )
+    assert _run_date_dirs(data_dir) == []
+
+
+def test_scrape_retries_a_transient_503(spark):
+    """One 503 on one page costs one extra request, not the day."""
+    from aiesec_guc_spark.sources.listing_scrape import register_listing_source
+
+    if not register_listing_source(spark):
+        pytest.skip("Python DataSource API unavailable")
+    with _FlakyPages({2: 1}) as site:
+        rows = (
+            spark.read.format("listing_scrape")
+            .option("base_url", site.url)
+            .option("pages", 3)
+            .load()
+            .collect()
+        )
+    assert sorted(r.page_id for r in rows) == [1, 2, 3]
+    assert site.requests == 3 + 1
+
+
+def test_scrape_page_that_keeps_failing_fails_the_day(spark, tmp_path):
+    """Retries are bounded: a page that always answers 503 fails the
+    run, and that day gets no (partial) snapshot partition."""
+    from aiesec_guc_spark.run import run_pipeline
+
+    data_dir = str(tmp_path / "data")
+    with _FlakyPages({2: -1}) as site:
+        with pytest.raises(Exception, match="503"):
+            run_pipeline(
+                spark, data_dir, str(tmp_path / "out"), "2026-08-13",
+                send=lambda body: None, base_url=site.url, pages=3,
+            )
+    assert _run_date_dirs(data_dir) == []
+
+
+def test_fetch_does_not_retry_4xx():
+    """A 4xx answer is final: one request, then the error."""
+    import urllib.error
+
+    from aiesec_guc_spark.sources.listing_scrape import _fetch
+
+    class NotFound(http.server.BaseHTTPRequestHandler):
+        hits = 0
+
+        def do_GET(self):  # noqa: N802 - stdlib naming
+            NotFound.hits += 1
+            self.send_error(404)
+
+        def log_message(self, *args):
+            pass
+
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), NotFound)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        with pytest.raises(urllib.error.HTTPError, match="404"):
+            _fetch(1, f"http://127.0.0.1:{srv.server_port}/listings")
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    assert NotFound.hits == 1
