@@ -89,15 +89,11 @@ def publish_daily(
     # 4. Compact the day just written (tiny marts → one file).
     stats = compact_table(spark, f"{base}/run_date={run_date}")
 
-    # 5. Guarded notification.  ONE count job serves both the guard
-    # body and the manifest — a renderer that re-counted would re-scan
-    # the published partition per consumer (run.py's Observation
-    # pattern exists to avoid exactly that).
+    # 5. Guarded notification.  ONE count job serves both the body
+    # and the manifest.
     published = spark.read.parquet(base).filter(F.col("run_date") == run_date)
     n_rows = published.count()
-    notified = notify_if_nonempty(
-        published, send=send, renderer=lambda _df: _render_summary(n_rows)
-    )
+    notified = notify_if_nonempty(_render_summary(n_rows), send=send)
 
     return {
         "run_date": run_date,

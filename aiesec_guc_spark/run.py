@@ -13,13 +13,17 @@ Stage map (reference → here):
 2. scrape (aiesec.py:22-67)      → `format("listing_scrape")` source
                                    (fixture-backed `_fetch` seam)
 3. extract (aiesec.py:83-126)    → `extract_cards` (codegen'd regexes)
-4. Today.xlsx (aiesec.py:130-132)→ `write_snapshot` partition append
-                                   + full snapshot through the styled
-                                   report edge (today_<date>.xlsx)
-5. anti-join (aiesec.py:137-143) → `snapshot_delta` (left_anti)
+4. Today.xlsx (aiesec.py:130-132)→ `write_snapshot` partition append;
+                                   the day is collected once and that
+                                   frame is the styled report
+                                   (today_<date>.xlsx)
+5. anti-join (aiesec.py:137-143) → `snapshot_delta` (left_anti),
+                                   collected once
 6. New.xlsx + style (:145-183)   → `write_styled_report` (+ autofit)
-7. email iff delta (:188-251)    → `notify_if_nonempty` with the full
-                                   HTML document body (transport
+                                   from the collected delta
+7. email iff delta (:188-251)    → `render_email_html` over the same
+                                   collected delta, sent by
+                                   `notify_if_nonempty` (transport
                                    injected; default logs)
 
 First run (no prior partition): the whole snapshot is the delta, the
@@ -53,15 +57,14 @@ def scrape_today(
     from .functions.html_cards import extract_cards
     from .sources.listing_scrape import register_listing_source
 
-    if register_listing_source(spark):
-        reader = spark.read.format("listing_scrape")
-        if base_url:
-            reader = reader.option("base_url", base_url).option("pages", pages)
-        cards = reader.load()
-    else:  # pragma: no cover - Spark < 4 fallback
-        from .sources.fixtures import FIXTURE_CARDS
-
-        cards = spark.createDataFrame(FIXTURE_CARDS, "page_id int, html string")
+    if not register_listing_source(spark):
+        raise RuntimeError(
+            "the listing_scrape source needs Spark >= 4 (Python DataSource API)"
+        )
+    reader = spark.read.format("listing_scrape")
+    if base_url:
+        reader = reader.option("base_url", base_url).option("pages", pages)
+    cards = reader.load()
     return extract_cards(cards)
 
 
@@ -77,7 +80,6 @@ def run_pipeline(
     """One scheduled run, start to finish.  Returns a summary dict
     (rows scraped, delta rows, report path, whether a notification
     went out) so callers/tests can assert on the outcome."""
-    from .operators.dedup import materialize
     from .operators.snapshot import snapshot_delta, write_snapshot
     from .sinks.report import notify_if_nonempty, render_email_html, write_styled_report
 
@@ -104,54 +106,34 @@ def run_pipeline(
         yesterday = snaps.filter(F.col("run_date") == prior_dates[-1]).drop("run_date")
     else:
         yesterday = today_rows.filter(F.lit(False))  # first run: all new
-    # Materialized once: the delta feeds three consumers (report
-    # write, notification render, row count) — without this the
-    # snapshot-read + anti-join plan would execute three times.
-    delta = materialize(snapshot_delta(today_rows, yesterday, keys=["opportunity_id"]))
+    # The day and its delta are a few hundred rows: collect each once
+    # and build every presentation artifact and count from those local
+    # frames, as the reference does from the frame it holds
+    # (aiesec.py:130-251).
+    today_pdf = today_rows.toPandas()
+    delta_pdf = snapshot_delta(today_rows, yesterday, keys=["opportunity_id"]).toPandas()
 
     os.makedirs(out_dir, exist_ok=True)
-    # Run metrics ride along on the report-write actions via the
-    # Observation API — no separate count() jobs re-scanning the
-    # snapshot (the reference prints counts from the frames it
-    # already holds, aiesec.py:133/186; this is the Spark analogue).
-    from pyspark.sql import Observation
-
-    obs_today = Observation("today_rows")
-    obs_delta = Observation("delta_rows")
-    today_obs = today_rows.observe(obs_today, F.count(F.lit(1)).alias("n"))
-    delta_obs = delta.observe(obs_delta, F.count(F.lit(1)).alias("n"))
-
     # Literal Today.xlsx parity (aiesec.py:130-132): the FULL snapshot
     # goes through the styled-report edge too, alongside its canonical
     # parquet partition — the reference ships both artifacts per run.
     snapshot_report_path = write_styled_report(
-        today_obs, os.path.join(out_dir, f"today_{run_date}")
+        today_pdf, os.path.join(out_dir, f"today_{run_date}")
     )
     report_path = write_styled_report(
-        delta_obs, os.path.join(out_dir, f"new_{run_date}")
+        delta_pdf, os.path.join(out_dir, f"new_{run_date}")
     )
+    notified = notify_if_nonempty(render_email_html(delta_pdf), send=send)
 
-    notified = notify_if_nonempty(
-        delta, send=send or _log_send, renderer=render_email_html
-    )
-
-    # .get blocks until the observed action completes — both report
-    # writes above already ran, so these are immediate lookups.
-    n_today = int(obs_today.get["n"])
-    n_delta = int(obs_delta.get["n"])
-    log.info("run %s: %d scraped, %d new", run_date, n_today, n_delta)
+    log.info("run %s: %d scraped, %d new", run_date, len(today_pdf), len(delta_pdf))
     return {
         "run_date": run_date,
-        "rows_scraped": n_today,
-        "delta_rows": n_delta,
+        "rows_scraped": len(today_pdf),
+        "delta_rows": len(delta_pdf),
         "report_path": report_path,
         "snapshot_report_path": snapshot_report_path,
         "notified": notified,
     }
-
-
-def _log_send(body: str) -> None:
-    log.info("notification (%d chars):\n%s", len(body), body)
 
 
 def main(argv: list[str] | None = None) -> int:

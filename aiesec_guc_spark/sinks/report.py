@@ -1,9 +1,10 @@
 """Presentation sinks (reference S3/S6/S7/F8) — driver-side by
-nature, fed by an already-reduced (small) DataFrame.
+nature: the day's rows are collected once and every presentation
+artifact is built from that pandas frame, as the reference builds its
+workbook and email from the frame it holds (aiesec.py:145-251).
 
-- ``render_cards_html``: the per-row HTML card template
-  (aiesec.py:188-233) computed distributed (format-string projection),
-  folded to one string driver-side.
+- ``render_cards_html`` / ``render_email_html``: the per-row HTML card
+  template (aiesec.py:188-233) joined into the notification body.
 - ``write_styled_report``: the styled-Excel report (aiesec.py:148-183)
   with its header fill, premium highlight and autofit.
 - ``read_snapshot_xlsx`` / ``write_snapshot_partitioned`` /
@@ -11,8 +12,8 @@ nature, fed by an already-reduced (small) DataFrame.
   per-partition.  Every workbook is written and read by one codec,
   the stdlib-only ``sinks/xlsxlite.py``; a ``.csv`` path is the only
   other format.
-- ``notify_if_nonempty``: the count-guarded send (aiesec.py:236-251)
-  with the transport injected (no SMTP here; the default logs).
+- ``notify_if_nonempty``: the guarded send (aiesec.py:236-251) with
+  the transport injected (no SMTP here; the default logs).
 """
 
 from __future__ import annotations
@@ -20,11 +21,14 @@ from __future__ import annotations
 import logging
 import os
 from collections.abc import Callable
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from . import xlsxlite
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 log = logging.getLogger(__name__)
 
@@ -32,51 +36,47 @@ CARD_TEMPLATE = (
     '<div class="card"><h3><a href="%s">%s</a></h3>'
     "<p>%s · %s · %s</p>%s</div>"
 )
-
+_CARD_FIELDS = ("opportunity_link", "title", "organization", "country", "duration")
+_PREMIUM_BADGE = '<span class="badge">Premium</span>'
 
 EMAIL_DOC_TEMPLATE = (
     "<!DOCTYPE html>\n<html>\n<head>\n"
     '  <meta charset="UTF-8">\n'
-    "  <title>{title}</title>\n"
+    "  <title>New Opportunities</title>\n"
     "</head>\n<body>\n{cards}\n</body>\n</html>"
 )
 
 
-def render_cards_html(delta: DataFrame) -> str:
-    """Fold the delta into the notification HTML body."""
-    cards = delta.select(
-        F.format_string(
-            CARD_TEMPLATE,
-            F.col("opportunity_link"),
-            F.col("title"),
-            F.col("organization"),
-            F.col("country"),
-            F.col("duration"),
-            F.when(F.col("premium") == "Yes", '<span class="badge">Premium</span>')
-            .otherwise(""),
-        ).alias("card")
+def render_cards_html(pdf: pd.DataFrame) -> str:
+    """The delta's cards, one per row, joined by newlines ("" when the
+    frame is empty).  A null field renders as "null", as Spark's
+    ``format_string`` did."""
+    return "\n".join(
+        CARD_TEMPLATE
+        % (
+            *("null" if r[c] is None else r[c] for c in _CARD_FIELDS),
+            _PREMIUM_BADGE if r["premium"] == "Yes" else "",
+        )
+        for r in pdf.to_dict("records")
     )
-    folded = cards.agg(F.concat_ws("\n", F.collect_list("card")).alias("body"))
-    return folded.collect()[0]["body"] or ""
 
 
-def render_email_html(delta: DataFrame, title: str = "New Opportunities") -> str:
+def render_email_html(pdf: pd.DataFrame) -> str:
     """Complete email HTML document (head/charset/title wrapping the
     cards), matching the reference's full-document body
     (aiesec.py:221-233) rather than bare concatenated cards.  Returns
-    "" when the delta is empty so the count guard still works."""
-    cards = render_cards_html(delta)
+    "" when the delta is empty so the guard still works."""
+    cards = render_cards_html(pdf)
     if not cards:
         return ""
-    return EMAIL_DOC_TEMPLATE.format(title=title, cards=cards)
+    return EMAIL_DOC_TEMPLATE.format(cards=cards)
 
 
-def write_styled_report(delta: DataFrame, path: str) -> str:
+def write_styled_report(pdf: pd.DataFrame, path: str) -> str:
     """Small-result edge sink: a styled xlsx written by ``xlsxlite``
     with the reference's header fill / premium highlight / autofit
     (aiesec.py:148-183).  An explicit ``.csv`` path still writes CSV.
     Returns the path written."""
-    pdf = delta.toPandas()
     if path.endswith(".csv"):
         pdf.to_csv(path, index=False)
         return path
@@ -266,16 +266,9 @@ def read_snapshot_dir(spark, path: str) -> DataFrame:
     return flist.mapInPandas(_read, schema=schema)
 
 
-def notify_if_nonempty(
-    delta: DataFrame,
-    send: Callable[[str], None] | None = None,
-    renderer: Callable[[DataFrame], str] | None = None,
-) -> bool:
-    """The reference's guarded send: render + deliver iff the delta
-    has rows; returns whether a notification went out.  ``renderer``
-    defaults to the bare card list; pass ``render_email_html`` for the
-    reference's full-document email body."""
-    body = (renderer or render_cards_html)(delta)
+def notify_if_nonempty(body: str, send: Callable[[str], None] | None = None) -> bool:
+    """The reference's guarded send: deliver ``body`` iff it is
+    non-empty; returns whether a notification went out."""
     if not body:
         log.info("no new opportunities found — notification skipped")
         return False

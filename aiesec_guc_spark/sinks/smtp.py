@@ -19,7 +19,7 @@ here touches executors.
 Usage with the guarded sink::
 
     transport = SMTPTransport(host, port, sender, recipients, subject)
-    notify_if_nonempty(delta, send=transport, renderer=render_email_html)
+    notify_if_nonempty(render_email_html(delta_pdf), send=transport)
 """
 
 from __future__ import annotations

@@ -61,17 +61,49 @@ def test_notify_guard(spark):
     from aiesec_guc_spark.operators.snapshot import snapshot_delta
 
     delta = snapshot_delta(today, yesterday, keys=["opportunity_id"])
-    assert notify_if_nonempty(delta, send=sent.append)
+    assert notify_if_nonempty(render_cards_html(delta.toPandas()), send=sent.append)
     assert len(sent) == 1 and "Fresh Opening" in sent[0]
     empty = delta.filter("1 = 0")
-    assert not notify_if_nonempty(empty, send=sent.append)
+    assert not notify_if_nonempty(render_cards_html(empty.toPandas()), send=sent.append)
     assert len(sent) == 1
 
 
 def test_render_cards_contains_premium_badge(spark):
     today, _ = snapshot_pair(spark)
-    html = render_cards_html(today.filter(today.premium == "Yes"))
+    html = render_cards_html(today.filter(today.premium == "Yes").toPandas())
     assert "badge" in html and "Premium" in html
+
+
+def test_render_email_bytes_are_pinned(spark):
+    """Exact card and email bytes for a collected two-row delta: the
+    premium badge, a null field rendered as "null" (the Java formatter's
+    rendering, which the email has always shown), the newline card
+    separator, and "" for an empty frame."""
+    from aiesec_guc_spark.sinks.report import render_email_html
+
+    delta = spark.createDataFrame(
+        [
+            ("http://x/1", "T1", "Org", "DE", "6w", "Yes"),
+            ("http://x/2", "T2", None, "EG", "N/A", "No"),
+        ],
+        "opportunity_link string, title string, organization string, "
+        "country string, duration string, premium string",
+    ).toPandas()
+    cards = (
+        '<div class="card"><h3><a href="http://x/1">T1</a></h3>'
+        '<p>Org · DE · 6w</p><span class="badge">Premium</span></div>\n'
+        '<div class="card"><h3><a href="http://x/2">T2</a></h3>'
+        "<p>null · EG · N/A</p></div>"
+    )
+    assert render_cards_html(delta) == cards
+    assert render_email_html(delta) == (
+        "<!DOCTYPE html>\n<html>\n<head>\n"
+        '  <meta charset="UTF-8">\n'
+        "  <title>New Opportunities</title>\n"
+        "</head>\n<body>\n" + cards + "\n</body>\n</html>"
+    )
+    assert render_cards_html(delta.iloc[:0]) == ""
+    assert render_email_html(delta.iloc[:0]) == ""
 
 
 def test_incremental_streaming_delta(spark, sf_dir):

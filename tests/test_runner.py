@@ -44,6 +44,13 @@ def test_pipeline_first_and_second_run(spark, tmp_path):
     assert os.path.exists(s2["report_path"])
     assert os.path.exists(s2["snapshot_report_path"])
 
+    # The counts are the rows of the two workbooks, on both days.
+    from aiesec_guc_spark.sinks import xlsxlite
+
+    for s in (s1, s2):
+        assert s["rows_scraped"] == len(xlsxlite.read_xlsx(s["snapshot_report_path"])[1])
+        assert s["delta_rows"] == len(xlsxlite.read_xlsx(s["report_path"])[1])
+
 
 def test_snapshot_write_read_roundtrip_delta(spark, tmp_path):
     """S4: write both snapshots via the edge sink, read them back, and
@@ -53,8 +60,8 @@ def test_snapshot_write_read_roundtrip_delta(spark, tmp_path):
     from aiesec_guc_spark.operators.snapshot import snapshot_delta
 
     today, yesterday = snapshot_pair(spark)
-    t_path = write_styled_report(today, str(tmp_path / "Today"))
-    y_path = write_styled_report(yesterday, str(tmp_path / "Yesterday"))
+    t_path = write_styled_report(today.toPandas(), str(tmp_path / "Today"))
+    y_path = write_styled_report(yesterday.toPandas(), str(tmp_path / "Yesterday"))
 
     t2 = read_snapshot_xlsx(spark, t_path)
     y2 = read_snapshot_xlsx(spark, y_path)
@@ -70,7 +77,7 @@ def test_styled_xlsx_autofit(spark, tmp_path):
     from aiesec_guc_spark.sinks import xlsxlite
 
     today, _ = snapshot_pair(spark)
-    t_path = write_styled_report(today, str(tmp_path / "Today"))
+    t_path = write_styled_report(today.toPandas(), str(tmp_path / "Today"))
     assert t_path.endswith(".xlsx")
     n_cols = len(today.columns)
     styles = xlsxlite.read_styles(t_path)
@@ -123,12 +130,12 @@ def test_cli_rejects_incoherent_flag_combinations(tmp_path):
 
 def test_email_html_is_full_document(spark):
     today, _ = snapshot_pair(spark)
-    html = render_email_html(today)
+    html = render_email_html(today.toPandas())
     assert html.startswith("<!DOCTYPE html>")
     assert html.rstrip().endswith("</html>")
     assert "card" in html
     empty = today.filter("1 = 0")
-    assert render_email_html(empty) == ""
+    assert render_email_html(empty.toPandas()) == ""
 
 
 def test_quiet_day_resets_the_delta_baseline(spark, tmp_path):

@@ -112,7 +112,7 @@ def test_guarded_sink_with_smtp_transport(spark):
     transport = SMTPTransport(
         "127.0.0.1", srv.port, "p@x", ["d@y"], subject="Delta report"
     )
-    assert notify_if_nonempty(delta, send=transport, renderer=render_email_html)
+    assert notify_if_nonempty(render_email_html(delta.toPandas()), send=transport)
     srv.join(timeout=10)
     assert len(srv.messages) == 1
     # Non-ASCII card separators force a base64 content-transfer-
@@ -127,7 +127,7 @@ def test_guarded_sink_with_smtp_transport(spark):
     empty = spark.createDataFrame([], schema)
     # Port is closed now — a connection attempt would raise; the count
     # guard must short-circuit before any socket is opened.
-    assert not notify_if_nonempty(empty, send=transport, renderer=render_email_html)
+    assert not notify_if_nonempty(render_email_html(empty.toPandas()), send=transport)
 
 
 PAGE_HTML = (

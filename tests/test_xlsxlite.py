@@ -147,7 +147,7 @@ def test_report_sink_writes_real_xlsx_and_reads_back(spark, tmp_path):
         [("1", "T1", "N/A", "Yes"), ("2", "T2", "Org", "No")],
         "opportunity_id string, title string, organization string, premium string",
     )
-    path = write_styled_report(df, str(tmp_path / "Today"))
+    path = write_styled_report(df.toPandas(), str(tmp_path / "Today"))
     assert path.endswith(".xlsx")
     back = read_snapshot_xlsx(spark, path)
     assert back.columns == df.columns
@@ -173,7 +173,7 @@ def test_empty_report_roundtrip(spark, tmp_path):
     df = spark.createDataFrame(
         [], "opportunity_id string, title string, premium string"
     )
-    write_styled_report(df, p)
+    write_styled_report(df.toPandas(), p)
     back = read_snapshot_xlsx(spark, p)
     assert back.count() == 0
     assert back.columns == ["opportunity_id", "title", "premium"]
