@@ -10,13 +10,15 @@ Stage map (reference → here):
 1. rotate (aiesec.py:20-21)      → append-only run_date partition; no
                                    file copy, "yesterday" = lag-1
                                    partition (operators/snapshot.py)
-2. scrape (aiesec.py:22-67)      → `format("listing_scrape")` source
-                                   (fixture-backed `_fetch` seam)
+2. scrape (aiesec.py:22-67)      → `read_pages`: the pages fetched
+                                   in page order on the driver, one
+                                   local frame (fixture-backed
+                                   `_fetch` seam)
 3. extract (aiesec.py:83-126)    → `extract_cards` (codegen'd regexes)
 4. Today.xlsx (aiesec.py:130-132)→ `write_snapshot` partition append;
-                                   the day is collected once and that
-                                   frame is the styled report
-                                   (today_<date>.xlsx)
+                                   the day is collected once, in page
+                                   order, and that frame is the
+                                   styled report (today_<date>.xlsx)
 5. anti-join (aiesec.py:137-143) → `snapshot_delta` (left_anti),
                                    collected once
 6. New.xlsx + style (:145-183)   → `write_styled_report` (+ autofit)
@@ -47,25 +49,17 @@ log = logging.getLogger(__name__)
 def scrape_today(
     spark: SparkSession, base_url: str | None = None, pages: int = 0
 ) -> DataFrame:
-    """Stages 2-3: scrape source → card extraction.
+    """Stages 2-3: the day's pages → card rows, in page order.
 
-    With ``base_url`` the source fetches ``{base_url}?page=N`` for
-    ``pages`` >= 1 pages over HTTP (the reference's live pagination),
-    the pages dealt into at most ``default_parallelism()`` partitions
-    that each fetch theirs in turn; without it the recorded fixtures
-    serve hermetic runs, grouped the same way."""
+    With ``base_url`` the driver fetches ``{base_url}?page=N`` for
+    ``pages`` >= 1 pages over HTTP (the reference's live pagination);
+    without it the recorded fixtures serve hermetic runs.  Every page
+    is fetched before this returns, so the frame is a local relation:
+    evaluating it again fetches nothing."""
     from .functions.html_cards import extract_cards
-    from .sources.listing_scrape import register_listing_source
+    from .sources.listing_scrape import read_pages
 
-    if not register_listing_source(spark):
-        raise RuntimeError(
-            "the listing_scrape source needs Spark >= 4 (Python DataSource API)"
-        )
-    reader = spark.read.format("listing_scrape")
-    if base_url:
-        reader = reader.option("base_url", base_url).option("pages", pages)
-    cards = reader.load()
-    return extract_cards(cards)
+    return extract_cards(read_pages(spark, base_url=base_url or None, pages=pages))
 
 
 def run_pipeline(
@@ -88,7 +82,6 @@ def run_pipeline(
     today = scrape_today(spark, base_url=base_url, pages=pages)
     write_snapshot(today, snap_path, run_date)
 
-    snaps = spark.read.parquet(snap_path)
     # Prior-day discovery is DIRECTORY-based (same rule as
     # read_snapshot_pair): a quiet day's partition holds a zero-row
     # file that a distinct-over-rows would skip, silently diffing
@@ -101,17 +94,21 @@ def run_pipeline(
         for d in list_partitions(snap_path, "run_date", spark=spark)
         if d < run_date
     ]
-    today_rows = snaps.filter(F.col("run_date") == run_date).drop("run_date")
     if prior_dates:
-        yesterday = snaps.filter(F.col("run_date") == prior_dates[-1]).drop("run_date")
+        yesterday = (
+            spark.read.parquet(snap_path)
+            .filter(F.col("run_date") == prior_dates[-1])
+            .drop("run_date")
+        )
     else:
-        yesterday = today_rows.filter(F.lit(False))  # first run: all new
+        yesterday = today.filter(F.lit(False))  # first run: all new
     # The day and its delta are a few hundred rows: collect each once
     # and build every presentation artifact and count from those local
     # frames, as the reference does from the frame it holds
-    # (aiesec.py:130-251).
-    today_pdf = today_rows.toPandas()
-    delta_pdf = snapshot_delta(today_rows, yesterday, keys=["opportunity_id"]).toPandas()
+    # (aiesec.py:130-251).  ``today`` is a local relation, so both
+    # read it again without a fetch and keep the listing's page order.
+    today_pdf = today.toPandas()
+    delta_pdf = snapshot_delta(today, yesterday, keys=["opportunity_id"]).toPandas()
 
     os.makedirs(out_dir, exist_ok=True)
     # Literal Today.xlsx parity (aiesec.py:130-132): the FULL snapshot
@@ -160,8 +157,8 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     # Fail at parse time, not mid-pipeline: --base-url with the default
-    # pages=0 is refused by the scrape source only once a Spark session
-    # has started and the scan is planned, and
+    # pages=0 is refused by `read_pages` only after a Spark session
+    # has started, and
     # --smtp-host with no recipients raises SMTPRecipientsRefused only
     # AFTER the whole run (scrape + snapshot + reports) has completed,
     # losing the notification.

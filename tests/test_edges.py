@@ -12,12 +12,11 @@ from aiesec_guc_spark.operators.multimodal import (
 )
 from aiesec_guc_spark.sinks.report import notify_if_nonempty, render_cards_html
 from aiesec_guc_spark.sources.fixtures import snapshot_pair
-from aiesec_guc_spark.sources.listing_scrape import register_listing_source
+from aiesec_guc_spark.sources.listing_scrape import read_pages
 
 
 def test_listing_scrape_datasource(spark):
-    assert register_listing_source(spark), "Python DataSource API missing"
-    df = spark.read.format("listing_scrape").load()
+    df = read_pages(spark)
     rows = df.collect()
     assert len(rows) == 7
     assert df.columns == ["page_id", "html"]
@@ -31,8 +30,7 @@ def test_scrape_to_delta_pipeline(spark):
     from aiesec_guc_spark.functions.html_cards import extract_cards
     from aiesec_guc_spark.operators.snapshot import snapshot_delta
 
-    register_listing_source(spark)
-    cards = spark.read.format("listing_scrape").load()
+    cards = read_pages(spark)
     today = extract_cards(cards)
     _, yesterday = snapshot_pair(spark)
     delta = snapshot_delta(today, yesterday, keys=["opportunity_id"])

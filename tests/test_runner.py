@@ -105,8 +105,8 @@ def test_cli_main_runs_end_to_end(spark, tmp_path):
 
 def test_cli_rejects_incoherent_flag_combinations(tmp_path):
     # Parse-time validation: --base-url with the default pages=0 would
-    # crash inside an executor task (zero-partition DataSource reads
-    # read(None)); --smtp-host with no recipients would raise
+    # be refused by read_pages only after a Spark session has started;
+    # --smtp-host with no recipients would raise
     # SMTPRecipientsRefused only AFTER the whole pipeline ran.
     import pytest
 

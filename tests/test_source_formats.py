@@ -38,32 +38,6 @@ def test_csv_roundtrip(spark, sf_dir, tmp_path):
     assert _rows(back) == _rows(src)
 
 
-def test_streaming_scrape_source_matches_batch(spark, tmp_path):
-    # The streaming reader (one page per micro-batch, durable page
-    # offset) drained with availableNow must produce exactly the
-    # batch reader's rows.
-    from aiesec_guc_spark.sources.listing_scrape import register_listing_source
-
-    assert register_listing_source(spark)
-    batch_rows = sorted(
-        map(tuple, spark.read.format("listing_scrape").load().collect())
-    )
-    q = (
-        spark.readStream.format("listing_scrape")
-        .load()
-        .writeStream.format("memory")
-        .queryName("scrape_stream_test")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    stream_rows = sorted(
-        map(tuple, spark.table("scrape_stream_test").collect())
-    )
-    assert stream_rows == batch_rows and len(stream_rows) > 0
-
-
 def test_orc_roundtrip(spark, sf_dir, tmp_path):
     # ORC is the third columnar format Spark ships natively (after
     # parquet); at 100 TB it matters because ingest often arrives as

@@ -1,6 +1,6 @@
 """Hermetic tests for the outward-facing transports: the smtplib
 notification path (reference S7's real send, against a loopback SMTP
-server) and the HTTP fetch mode of the listing-scrape DataSource
+server) and the HTTP fetch mode of the driver-side listing scrape
 (against a loopback http.server).  No external network is touched."""
 
 from __future__ import annotations
@@ -163,16 +163,9 @@ def http_server():
 
 
 def test_scrape_source_http_mode(spark, http_server):
-    from aiesec_guc_spark.sources.listing_scrape import register_listing_source
+    from aiesec_guc_spark.sources.listing_scrape import read_pages
 
-    if not register_listing_source(spark):
-        pytest.skip("Python DataSource API unavailable")
-    df = (
-        spark.read.format("listing_scrape")
-        .option("base_url", http_server)
-        .option("pages", 3)
-        .load()
-    )
+    df = read_pages(spark, base_url=http_server, pages=3)
     rows = sorted(df.collect(), key=lambda r: r.page_id)
     assert [r.page_id for r in rows] == [1, 2, 3]
     for r in rows:
@@ -180,11 +173,9 @@ def test_scrape_source_http_mode(spark, http_server):
 
 
 def test_scrape_source_fixture_mode_unchanged(spark):
-    from aiesec_guc_spark.sources.listing_scrape import register_listing_source
+    from aiesec_guc_spark.sources.listing_scrape import read_pages
 
-    if not register_listing_source(spark):
-        pytest.skip("Python DataSource API unavailable")
-    df = spark.read.format("listing_scrape").load()
+    df = read_pages(spark)
     assert df.count() > 0
 
 
@@ -286,28 +277,30 @@ def test_pipeline_http_scrape_to_smtp_notify(spark, tmp_path):
 
 def test_scrape_source_pluggable_render_fetcher(spark):
     """The fetcher seam (VERDICT r6 #7): an injectable renderer must
-    run per-partition on executors and its HTML must flow through
-    extract_cards — content the plain-HTTP/fixture paths cannot
-    produce (the JS-only 'Load more' case, aiesec.py:40-63)."""
+    run for every page and its HTML must flow through extract_cards —
+    content the plain-HTTP/fixture paths cannot produce (the JS-only
+    'Load more' case, aiesec.py:40-63)."""
     from aiesec_guc_spark.functions.html_cards import extract_cards
-    from aiesec_guc_spark.sources.listing_scrape import (
-        register_listing_source,
-    )
+    from aiesec_guc_spark.sources.listing_scrape import read_pages
 
-    if not register_listing_source(spark):
-        import pytest
+    def render_fetcher(page_id, base_url, timeout):
+        # Content that exists only AFTER JS runs: each "rendered" card
+        # carries a data-rendered attribute and nested markup that
+        # neither the fixture set nor a plain HTTP GET produces.
+        n_cards = 2
+        cards = []
+        for i in range(1, n_cards + 1):
+            opp = 9000000 + page_id * 100 + i
+            cards.append(
+                f'<a data-rendered="true" href="/opportunity/global-talent/{opp}">'
+                f"<h3>Rendered <b>Role {i}</b></h3>"
+                f"<span>City {page_id}, Country</span><span>{i} Months</span>"
+                f'<div class="org">JS <em>Org</em> {page_id}</div>'
+                f'<div class="meta">{i} applicants</div></a>'
+            )
+        return cards
 
-        pytest.skip("Python Data Source API unavailable")
-
-    df = (
-        spark.read.format("listing_scrape")
-        .option(
-            "fetcher",
-            "aiesec_guc_spark.sources.listing_scrape:demo_render_fetcher",
-        )
-        .option("pages", 3)
-        .load()
-    )
+    df = read_pages(spark, fetcher=render_fetcher, pages=3)
     rows = df.collect()
     # 3 pages × 2 rendered cards, all carrying the renderer-only marker
     assert len(rows) == 6
@@ -333,22 +326,6 @@ def test_scrape_source_pluggable_render_fetcher(spark):
     assert all(
         'data-rendered="true"' not in h for h in _fetch(1)
     )
-
-
-def test_resolve_fetcher_specs():
-    from aiesec_guc_spark.sources.listing_scrape import (
-        demo_render_fetcher,
-        resolve_fetcher,
-    )
-
-    mod = "aiesec_guc_spark.sources.listing_scrape"
-    assert resolve_fetcher(f"{mod}:demo_render_fetcher") is demo_render_fetcher
-    assert resolve_fetcher(f"{mod}.demo_render_fetcher") is demo_render_fetcher
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        resolve_fetcher("nomodule")
 
 
 def test_smtp_ssl_on_connect_delivers_to_tls_loopback(tmp_path):
@@ -462,46 +439,30 @@ def test_scrape_groups_pages_into_at_most_default_parallelism(spark, http_server
     fixture mode still yields exactly FIXTURE_CARDS."""
     from aiesec_guc_spark.session import default_parallelism
     from aiesec_guc_spark.sources.fixtures import FIXTURE_CARDS
-    from aiesec_guc_spark.sources.listing_scrape import (
-        ListingScrapeReader,
-        _fetch,
-        register_listing_source,
-    )
+    from aiesec_guc_spark.sources.listing_scrape import _fetch, read_pages
 
-    if not register_listing_source(spark):
-        pytest.skip("Python DataSource API unavailable")
     n_pages = 3 * int(os.environ["SPARK_GRAFT_CPUS"]) + 1
-    parts = ListingScrapeReader(
-        {"base_url": http_server, "pages": str(n_pages)}
-    ).partitions()
-    assert 1 <= len(parts) <= default_parallelism()
-    dealt = sorted(p for part in parts for p in part.value)
-    assert dealt == list(range(1, n_pages + 1))
-
-    df = (
-        spark.read.format("listing_scrape")
-        .option("base_url", http_server)
-        .option("pages", n_pages)
-        .load()
-    )
+    df = read_pages(spark, base_url=http_server, pages=n_pages)
     assert df.rdd.getNumPartitions() <= default_parallelism()
+    rows = df.collect()
+    assert sorted(r.page_id for r in rows) == list(range(1, n_pages + 1))
     expected = sorted(
         (p, html) for p in range(1, n_pages + 1) for html in _fetch(p, http_server)
     )
-    assert sorted(map(tuple, df.collect())) == expected
+    assert sorted(map(tuple, rows)) == expected
 
-    fixture_rows = spark.read.format("listing_scrape").load().collect()
+    fixture_rows = read_pages(spark).collect()
     assert sorted(map(tuple, fixture_rows)) == sorted(FIXTURE_CARDS)
 
 
 def test_run_pipeline_zero_pages_fails_at_planning(spark, tmp_path, http_server):
     """The Python API twin of the CLI's --pages guard: a live source
-    with pages < 1 is refused with a ValueError naming ``pages`` while
-    the scan is planned, so no snapshot partition is ever written."""
+    with pages < 1 is refused with a ValueError naming ``pages`` before
+    any fetch, so no snapshot partition is ever written."""
     from aiesec_guc_spark.run import run_pipeline
 
     data_dir = str(tmp_path / "data")
-    with pytest.raises(Exception, match=r"ValueError: listing_scrape: pages must be >= 1"):
+    with pytest.raises(ValueError, match="listing_scrape: pages must be >= 1"):
         run_pipeline(
             spark, data_dir, str(tmp_path / "out"), "2026-08-13",
             send=lambda body: None, base_url=http_server, pages=0,
@@ -511,18 +472,10 @@ def test_run_pipeline_zero_pages_fails_at_planning(spark, tmp_path, http_server)
 
 def test_scrape_retries_a_transient_503(spark):
     """One 503 on one page costs one extra request, not the day."""
-    from aiesec_guc_spark.sources.listing_scrape import register_listing_source
+    from aiesec_guc_spark.sources.listing_scrape import read_pages
 
-    if not register_listing_source(spark):
-        pytest.skip("Python DataSource API unavailable")
     with _FlakyPages({2: 1}) as site:
-        rows = (
-            spark.read.format("listing_scrape")
-            .option("base_url", site.url)
-            .option("pages", 3)
-            .load()
-            .collect()
-        )
+        rows = read_pages(spark, base_url=site.url, pages=3).collect()
     assert sorted(r.page_id for r in rows) == [1, 2, 3]
     assert site.requests == 3 + 1
 
@@ -567,3 +520,95 @@ def test_fetch_does_not_retry_4xx():
         srv.shutdown()
         srv.server_close()
     assert NotFound.hits == 1
+
+
+def test_scrape_today_plans_a_local_scan_without_python(spark):
+    """The day is a local relation: the executed plan is a
+    LocalTableScan with no Python node, so reading it starts no Python
+    worker (a silent fallback from Arrow to pickled rows, or a Python
+    data source, would show here)."""
+    from aiesec_guc_spark.run import scrape_today
+
+    plan = scrape_today(spark)._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "Python" not in plan
+
+
+def test_read_pages_with_no_cards_is_an_empty_typed_frame(spark):
+    from aiesec_guc_spark.sources.listing_scrape import read_pages
+
+    df = read_pages(spark, fetcher=lambda page_id, base_url, timeout: [], pages=3)
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+        ("page_id", "int"),
+        ("html", "string"),
+    ]
+    assert df.count() == 0
+
+
+class _SizedPages:
+    """A loopback listing site with one card per page whose size grows
+    with the page number; ``day`` 2 gives every third page a new id."""
+
+    def __init__(self):
+        site = self
+        self.day = 1
+
+        class Handler(http.server.BaseHTTPRequestHandler):
+            def do_GET(self):  # noqa: N802 - stdlib naming
+                from urllib.parse import parse_qs, urlparse
+
+                page = int(parse_qs(urlparse(self.path).query)["page"][0])
+                body = (CARD_PAGE % (site.card_id(page), page, page)).encode()
+                body = body.replace(b"</h3>", b"x" * (40 * page) + b"</h3>")
+                self.send_response(200)
+                self.send_header("Content-Type", "text/html")
+                self.send_header("Content-Length", str(len(body)))
+                self.end_headers()
+                self.wfile.write(body)
+
+            def log_message(self, *args):
+                pass
+
+        self.httpd = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+        self.url = f"http://127.0.0.1:{self.httpd.server_port}/listings"
+
+    def card_id(self, page: int) -> int:
+        return page * 100 + (2 if self.day == 2 and page % 3 == 0 else 1)
+
+    def __enter__(self):
+        threading.Thread(target=self.httpd.serve_forever, daemon=True).start()
+        return self
+
+    def __exit__(self, *exc):
+        self.httpd.shutdown()
+        self.httpd.server_close()
+
+
+def test_run_pipeline_lists_rows_in_page_order(spark, tmp_path):
+    """Both workbooks and the email list the day's ids in the
+    listing's page order — the reference's scrape order
+    (aiesec.py:130-132) — on a first day and on a day with a
+    yesterday, over more pages than there are cores."""
+    import re
+
+    from aiesec_guc_spark.run import run_pipeline
+    from aiesec_guc_spark.sinks.xlsxlite import read_xlsx
+
+    def ids(path):
+        cols, rows = read_xlsx(path)
+        return [row[cols.index("opportunity_id")] for row in rows]
+
+    n_pages = 2 * int(os.environ["SPARK_GRAFT_CPUS"]) + 1
+    with _SizedPages() as site:
+        for day, run_date in ((1, "2026-08-13"), (2, "2026-08-14")):
+            site.day = day
+            bodies: list[str] = []
+            summary = run_pipeline(
+                spark, str(tmp_path / "data"), str(tmp_path / "out"), run_date,
+                send=bodies.append, base_url=site.url, pages=n_pages,
+            )
+            listed = [str(site.card_id(p)) for p in range(1, n_pages + 1)]
+            new = listed if day == 1 else [i for i in listed if i.endswith("02")]
+            assert ids(summary["snapshot_report_path"]) == listed
+            assert ids(summary["report_path"]) == new
+            assert re.findall(r"/opportunity/(\d+)", bodies[0]) == new
