@@ -13,7 +13,7 @@ Layout:
     functions/  scalar/string/text/vector function library
     operators/  composite DataFrame operators (delta, dedup, topk, ...)
     queries/    named, oracle-checked query registry (driver contract)
-    sources/    edge connectors (scrape stub, excel, fixtures)
+    sources/    edge connectors (driver-side listing scrape, fixtures)
     sinks/      presentation sinks (styled report, guarded notify)
     streaming/  incremental / structured-streaming variants
     plans/      plan-inspection helpers (pushdown/broadcast asserts)

@@ -22,55 +22,11 @@ coefficients are fixed small odd integers.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import hash32, hash32_hi
-
-
-def materialize(df: DataFrame) -> DataFrame:
-    """Eagerly materialize a reused subtree, breaking lineage.
-
-    A lazily-persisted DataFrame that feeds BOTH sides of a self-join
-    (or several consumers in one action) hits a Spark cache-
-    materialization race: every consumer races to build the same
-    InMemoryRelation and the upstream pipeline re-executes per
-    consumer (observed: 432 s for a 20 k-row LSH band self-join at
-    sf0.1 that takes <1 s once the cache is materialized first).
-    The checkpoint computes the subtree exactly once and truncates the
-    lineage.
-
-    Two modes, selected by ``SPARK_GRAFT_CHECKPOINT``:
-
-    - ``local`` (default): ``localCheckpoint(eager=True)`` — blocks
-      live in executor storage and are released automatically when the
-      DataFrame is garbage-collected; callers carry no unpersist
-      bookkeeping.  Fast, but NOT fault-tolerant: an executor loss
-      loses blocks whose lineage was truncated.
-    - ``reliable``: ``checkpoint(eager=True)`` to the directory in
-      ``SPARK_GRAFT_CHECKPOINT_DIR`` (a fresh temp dir if unset — on a
-      real cluster point it at HDFS/S3).  Survives executor loss, so
-      the iterative operators (connected components, LSH band joins)
-      can recover mid-algorithm on a 1000-executor run, at the cost of
-      a write+read through the checkpoint store per round.
-    """
-    mode = os.environ.get("SPARK_GRAFT_CHECKPOINT", "local")
-    if mode == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            sc.setCheckpointDir(
-                os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-                or tempfile.mkdtemp(prefix="spark_ckpt_")
-            )
-        return df.checkpoint(eager=True)
-    if mode != "local":
-        raise ValueError(
-            f"SPARK_GRAFT_CHECKPOINT={mode!r}: expected 'local' or 'reliable'"
-        )
-    return df.localCheckpoint(eager=True)
+from ..session import materialize
 
 
 # MinHash configuration (shared with the oracle-SQL generator).
@@ -138,15 +94,6 @@ def shingles_from_tokens(toks: Column, n: int = SHINGLE_WORDS) -> Column:
     return F.when(F.size(toks) >= n, shingles).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def word_shingles(text: Column, n: int = SHINGLE_WORDS) -> Column:
-    """Word n-gram shingles of whitespace-tokenized text; shorter
-    inputs yield an empty list (see ``shingles_from_tokens``).  Prefer
-    the two-step ``split → shingles_from_tokens`` projection in hot
-    paths (see that function's docstring).
-    """
-    return shingles_from_tokens(F.split(F.trim(text), r"\s+"), n)
 
 
 def char_ngrams_expr(text_col: str, n: int = 4) -> Column:

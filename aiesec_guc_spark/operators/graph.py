@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import materialize
+from ..session import materialize
 
 
 def connected_components(

@@ -25,13 +25,19 @@ count-over-all-rows either.
 
 from __future__ import annotations
 
-import os
 from decimal import Decimal
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import materialize
+from ..session import materialize
+
+#: Target bytes per offset-merge range partition (``_range_partitions``).
+RANGE_PART_BYTES = 64 << 20
+#: Input-size cap under which the offset merge is skipped for one
+#: partitioned-by-nothing window (``_fits_single_partition``): one
+#: range partition's budget.  <= 0 disables that path.
+RANK_SMALL_BYTES = 64 << 20
 
 
 def _range_partitions(df: DataFrame) -> int:
@@ -43,10 +49,10 @@ def _range_partitions(df: DataFrame) -> int:
     input grows: on a 100 TB cluster it makes each range partition hold
     rows/total-cores (tens of GB per sort task — spill, then OOM).
     Instead, take the MAX of the session's parallelism and the count
-    that sizes partitions to ``SPARK_GRAFT_RANGE_PART_BYTES`` (default
-    64 MB) from Catalyst's plan-size estimate.  Never go BELOW the
-    session's parallelism: the estimate is of (compressed, projected)
-    plan bytes, and shrinking the count serializes the CPU-bound
+    that sizes partitions to ``RANGE_PART_BYTES`` (64 MB) from
+    Catalyst's plan-size estimate.  Never go BELOW the session's
+    parallelism: the estimate is of (compressed, projected) plan
+    bytes, and shrinking the count serializes the CPU-bound
     sort+window that follows — measured this round: lineitem's ~11 MB
     parquet estimate mapped to 2 range partitions and quadrupled
     ``weighted_median_price``.  The upper clamp (16×parallelism) keeps
@@ -65,52 +71,20 @@ def _range_partitions(df: DataFrame) -> int:
     size = plan_size_bytes(df)
     if size is None:  # absent/garbage estimate
         return fallback
-    target = _range_part_target_bytes()
+    target = RANGE_PART_BYTES
     return max(fallback, min((size + target - 1) // target, 16 * fallback))
-
-
-def _range_part_target_bytes() -> int:
-    """Validated SPARK_GRAFT_RANGE_PART_BYTES (r16, per ADVICE): a
-    non-numeric value raised ValueError and 0/negative divided by zero
-    or produced nonsense counts, crashing every offset-merge query —
-    bad input now falls back to the 64 MB default."""
-    default = 64 << 20
-    raw = os.environ.get("SPARK_GRAFT_RANGE_PART_BYTES", str(default))
-    try:
-        target = int(raw)
-    except ValueError:
-        return default
-    return target if target > 0 else default
-
-
-def _single_part_cap_bytes() -> int:
-    """Byte cap under which the offset-merge machinery is pure
-    overhead and the one-partition window plan is the least-work plan
-    (r16, guide §1.2: choose the algorithm by input size).
-
-    Defaults to the SAME per-range-partition byte target as
-    ``_range_partitions`` — if the whole input fits inside ONE range
-    partition's budget, splitting it across ``defaultParallelism``
-    range partitions buys no parallelism the task size needed, while
-    paying a range-sampling pass, a checkpoint, a driver offset
-    collect and a broadcast join per call.  ``SPARK_GRAFT_RANK_SMALL_BYTES``
-    overrides (validated like its siblings); <= 0 disables the small
-    path outright (the plan-shape tests use this to pin the scale
-    plan).
-    """
-    raw = os.environ.get("SPARK_GRAFT_RANK_SMALL_BYTES")
-    if raw is None:
-        return _range_part_target_bytes()
-    try:
-        return int(raw)
-    except ValueError:
-        return _range_part_target_bytes()
 
 
 def _fits_single_partition(df: DataFrame, est_bytes: int | None) -> bool:
     """True when ``df`` is estimated to fit in a single range
-    partition's byte budget, so the operators below may plan ONE
-    partitioned-by-nothing window instead of the offset merge.
+    partition's byte budget (``RANK_SMALL_BYTES``), so the operators
+    below may plan ONE partitioned-by-nothing window instead of the
+    offset merge: splitting such an input across ``defaultParallelism``
+    range partitions buys no parallelism the task size needed, while
+    paying a range-sampling pass, a checkpoint, a driver offset
+    collect and a broadcast join per call (r16, guide §1.2: choose the
+    algorithm by input size).  The plan-shape tests set the cap to 0
+    to pin the scale plan.
 
     ``est_bytes`` lets a caller supply its own upper bound for inputs
     whose Catalyst estimate is absent (None falls back to the plan
@@ -119,13 +93,12 @@ def _fits_single_partition(df: DataFrame, est_bytes: int | None) -> bool:
     sizes it is orders of magnitude above the cap, so the offset
     merge is untouched exactly where it matters.
     """
-    cap = _single_part_cap_bytes()
-    if cap <= 0:
+    if RANK_SMALL_BYTES <= 0:
         return False
     from ..plans.stats import plan_size_bytes
 
     size = est_bytes if est_bytes is not None else plan_size_bytes(df)
-    return size is not None and size <= cap
+    return size is not None and size <= RANK_SMALL_BYTES
 
 
 def exact_global_rank(

@@ -32,7 +32,7 @@ def rolling_distinct_count(
 
     Returns (day: date, n_distinct: long).
     """
-    from .dedup import materialize
+    from ..session import materialize
 
     # Two consumers (bounds aggregate + spread) — materialized so the
     # caller's fact-sized dedup runs ONCE, not once per consumer

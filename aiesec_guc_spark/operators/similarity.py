@@ -40,26 +40,17 @@ def unrolled_dot(a: Column, b: Column, dim: int = EMBEDDING_DIM) -> Column:
     return reduce(lambda acc, t: acc + t, terms)
 
 
-def unrolled_weighted_sum(a: Column, weights: list[float]) -> Column:
-    """dot(a, literal weight vector) — fully constant-folded."""
-    terms = [
-        F.element_at(a, i).cast("double") * F.lit(w)
-        for i, w in enumerate(weights, start=1)
-    ]
-    return reduce(lambda acc, t: acc + t, terms)
-
-
 def hof_weighted_sum(a: Column, weights: list[float]) -> Column:
     """dot(a, literal weight vector) via zip_with+aggregate.
 
-    Bit-identical to ``unrolled_weighted_sum`` (0.0 + t1 + ... + tn ==
-    t1 + ... + tn for doubles) but with a ~constant-size expression
-    tree: the weight array constant-folds to one literal.  Prefer this
-    for *bucket assignment* (one evaluation per row): the unrolled
-    form stacks up to hundreds of codegen terms per plane and its
-    whole-stage compile cost (seconds, and unstable under JIT
-    pressure) dwarfs the interpreted HOF's per-row cost on a single
-    scan.  Keep the unrolled form for per-PAIR dots inside join loops,
+    Bit-identical to the statically-unrolled sum of the same terms
+    (0.0 + t1 + ... + tn == t1 + ... + tn for doubles) but with a
+    ~constant-size expression tree: the weight array constant-folds
+    to one literal.  Prefer this for *bucket assignment* (one
+    evaluation per row): the unrolled form stacks up to hundreds of
+    codegen terms per plane and its whole-stage compile cost
+    (seconds, and unstable under JIT pressure) dwarfs the interpreted
+    HOF's per-row cost on a single scan.  Keep the unrolled form for per-PAIR dots inside join loops,
     where per-row cost dominates compile cost.
     """
     w = F.array(*[F.lit(x) for x in weights])
@@ -100,22 +91,6 @@ def hof_dot(a: Column, b: Column) -> Column:
 UNROLLED_DOT_MIN_EVALS = 600_000
 
 
-def _unrolled_min_evals() -> int:
-    """Validated SPARK_GRAFT_UNROLLED_DOT_MIN_EVALS override (same
-    env hygiene as quantiles._range_part_target_bytes): bad input
-    falls back to the measured default instead of crashing."""
-    import os
-
-    raw = os.environ.get(
-        "SPARK_GRAFT_UNROLLED_DOT_MIN_EVALS", str(UNROLLED_DOT_MIN_EVALS)
-    )
-    try:
-        v = int(raw)
-    except ValueError:
-        return UNROLLED_DOT_MIN_EVALS
-    return v if v > 0 else UNROLLED_DOT_MIN_EVALS
-
-
 def estimated_scan_rows(df, min_row_bytes: int = 256) -> int | None:
     """Conservative row-count estimate for an embedding-shaped scan,
     from Catalyst's optimized-plan size estimate (same source as
@@ -154,7 +129,7 @@ def adaptive_dot(
     Both kernels fold 0.0 + t1 + ... + tn in index order, so the
     resulting doubles are BIT-IDENTICAL — the choice can never change
     a query's output, only its plan."""
-    if est_evals is None or est_evals >= _unrolled_min_evals():
+    if est_evals is None or est_evals >= UNROLLED_DOT_MIN_EVALS:
         return unrolled_dot(a, b, dim)
     return hof_dot(a, b)
 

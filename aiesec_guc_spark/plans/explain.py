@@ -17,10 +17,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def simple_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def analyzed_plan(df: DataFrame) -> str:
     """The analyzed logical plan — where explicit join hints
     (``ResolvedHint``) are still visible before the optimizer
@@ -44,10 +40,6 @@ def final_adaptive_plan(df: DataFrame) -> str:
 
 def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
-
-
-def uses_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in formatted_plan(df)
 
 
 def has_partial_aggregation(df: DataFrame) -> bool:

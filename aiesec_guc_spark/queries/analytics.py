@@ -542,7 +542,7 @@ def text_discriminative_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
         ).alias("term"),
     ).filter((F.length("term") > 2) & ~F.col("term").isin(list(STOPWORDS)))
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     # reduce the token instances to (lang, term, doc) grain ONCE (one
     # combinable shuffle of the instance stream), then derive tf and df

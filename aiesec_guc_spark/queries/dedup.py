@@ -34,7 +34,6 @@ from ..operators.dedup import (
     jaccard_verify,
     lsh_band_keys,
     lsh_candidate_pairs,
-    materialize,
     minhash_coeffs,
     MINHASH_NUM_HASHES,
     minhash_signatures,
@@ -42,6 +41,7 @@ from ..operators.dedup import (
     simhash,
     simhash_pairs,
 )
+from ..session import materialize
 from . import query
 
 # single-sourced portable-hash SQL idioms (functions/text.py)
@@ -592,7 +592,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gd feeds four consumers (both join sides + two size lookups) —
     # eagerly materialized (inside _shared_char_grams) so the
     # explode+distinct runs once, not four times (a lazy persist hits
-    # the cache race; see operators.dedup.materialize).
+    # the cache race; see session.materialize).
     gd = _shared_char_grams(spark, sf_dir)
     sizes = gd.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = gd.select(

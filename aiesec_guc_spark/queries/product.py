@@ -219,7 +219,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort side when it fits, else both sides are already skinny).
     Everything after the first pass is |users × days|-sized.
     """
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     e = load_table(spark, sf_dir, "events")
     # Two consumers (cohort min + activity join) — materialized so the
@@ -317,7 +317,7 @@ def dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single time; everything after is |users × days|-sized.  The
     day-keyed join of the two tiny rolling frames broadcasts.
     """
-    from ..operators.dedup import materialize
+    from ..session import materialize
     from ..operators.rolling import rolling_distinct_count
 
     e = load_table(spark, sf_dir, "events")
@@ -441,7 +441,7 @@ def _baskets_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout every market-basket pipeline uses anyway.  The pure builder
     stays separate so the single-fact-exchange plan assertion
     (tests/test_plans.py) can inspect the un-truncated plan."""
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     return materialize(_brand_baskets(spark, sf_dir))
 
@@ -482,7 +482,7 @@ def _support_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket input comes through _baskets_shared for the same reason
     (two consumers here: order total + pair counts).
     """
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     baskets = _baskets_shared(spark, sf_dir)
     tot = baskets.agg(F.count(F.lit(1)).alias("n_orders"))
@@ -1414,7 +1414,7 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).alias("monetary"),
         )
     )
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     p = materialize(p)  # feeds three ntile passes + the final join
 

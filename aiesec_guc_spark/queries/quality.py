@@ -512,7 +512,7 @@ def table_drift_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") / DRIFT_VALUE_BAND).cast("int"), F.lit(9)
         ).alias("band"),
     )
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     # cells feeds both the 1-row totals and the per-cell diff
     cells = materialize(
@@ -888,7 +888,7 @@ def orders_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     digits = o.select(cents.alias("c")).filter(F.col("c") > 0).select(
         F.substring(F.col("c").cast("string"), 1, 1).cast("int").alias("d")
     )
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     # the 9-cell count feeds both the total fold and the share select —
     # checkpoint it so the orders scan runs once, not per branch
@@ -1046,7 +1046,7 @@ def source_quality_shrunk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("a").cast("bigint").alias("sa"),
         F.sum("t").cast("bigint").alias("st"),
     )
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     # per_source feeds both the global fold and the output select —
     # checkpoint it so the regex strip over every document runs once

@@ -467,7 +467,7 @@ def join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem").select(F.col("l_orderkey").alias("k"))
     o = load_table(spark, sf_dir, "orders").select(F.col("o_orderkey").alias("k"))
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     # each per-key count frame feeds two branches (its marginal fold +
     # the exact-join product) — checkpoint both so each fact is scanned

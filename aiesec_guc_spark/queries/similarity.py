@@ -48,10 +48,6 @@ def _dot(a: Column, b: Column) -> Column:
     return unrolled_dot(a, b, EMBEDDING_DIM)
 
 
-def _cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
-
-
 # ---------------------------------------------------------------------------
 # E6 baseline — exact top-k cosine against a probe vector (the
 # embedding with the smallest vec_id, so the query is self-contained
@@ -208,7 +204,7 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket table is materialized once (the ingest step in miniature)
     so the plane dots run once per row, and both the probe lookup and
     the candidate fetch read the materialized column."""
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     e = load_table(spark, sf_dir, "embeddings")
     b = materialize(
@@ -295,7 +291,7 @@ def similarity_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the probe's bucket plus the 8 single-bit-flip buckets; exact
     cosine top-k on candidates only.  Candidate superset of
     similarity_ann_lsh by construction, so recall can only improve."""
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     e = load_table(spark, sf_dir, "embeddings")
     b = materialize(
@@ -538,7 +534,7 @@ def _kmeans_centroids(
     empty-cluster left join) and by the probe/final-assignment stages
     after training, so an unmaterialized lineage would re-run every
     earlier round — and its corpus scans — once per consumer."""
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     est_rows = estimated_scan_rows(e)
     cents = materialize(
@@ -594,7 +590,7 @@ def similarity_ivf_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     table partitioned by `cid`, a partition-pruned fetch, never a
     scan.  Recall follows the data distribution rather than sign-LSH's
     fixed hyperplane grid."""
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     raw = load_table(spark, sf_dir, "embeddings")
     # Train and score on double components (the oracle widens the same
@@ -1262,7 +1258,7 @@ def label_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("label_a", "label_b")
         .agg(F.sum(F.col("s_a") * F.col("s_b")).cast("bigint").alias("dot"))
     )
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     dots = materialize(dots)
     na = dots.filter(F.col("label_a") == F.col("label_b")).select(
@@ -1484,13 +1480,13 @@ def similarity_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Measured at sf0.1 (~41k true pairs): unrolled 3.4-7.1 s vs HOF
     # 2.8-3.2 s, identical rows.  Both sub-dot forms fold the same
     # index order ⇒ bit-identical doubles.
-    from ..operators.similarity import _unrolled_min_evals
+    from ..operators.similarity import UNROLLED_DOT_MIN_EVALS
 
     rows = estimated_scan_rows(e)
     est_evals = (
         None if rows is None else 4 * (rows * rows) // MAXSIM_QUERY_MOD
     )
-    use_unrolled = est_evals is None or est_evals >= _unrolled_min_evals()
+    use_unrolled = est_evals is None or est_evals >= UNROLLED_DOT_MIN_EVALS
 
     if use_unrolled:
 

@@ -379,7 +379,7 @@ def corpus_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     fluctuates; a rank cut's doesn't.
     """
     d = load_table(spark, sf_dir, "documents")
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     # counts feeds both the 1-row target fold and the output — one
     # checkpoint, one documents scan
@@ -995,6 +995,10 @@ LEFT JOIN term_tok t ON t.term = d.term
 GROUP BY d.doc_id
 """
 
+# Corpus-scan size estimate up to which bpe_apply_tokenize broadcasts
+# its (term -> n_tok) side.
+BPE_BCAST_CORPUS_BYTES = 1 << 30
+
 
 @query("bpe_apply_tokenize", oracle=_bpe_apply_oracle())
 def bpe_apply_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1030,25 +1034,17 @@ def bpe_apply_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16 (ADVICE): that side is the corpus's DISTINCT WORD SET —
     # corpus-derived and Heaps'-law-growing, NOT bounded by a fixed
     # tokenizer vocab — so the hint is gated on the corpus scan's
-    # Catalyst size estimate.  Below the cap (default 1 GiB of corpus:
+    # Catalyst size estimate.  Below the cap (1 GiB of corpus:
     # Heaps V ≈ 50·N_tok^0.6 ⇒ ≲5M terms ≈ 150 MB framed, inside
     # broadcast comfort) the hint keeps the shuffle-free shape; above
     # it the planner/AQE picks, which scales where a forced broadcast
     # would OOM the driver.
-    import os as _os
-
     from ..plans.stats import plan_size_bytes
 
-    try:
-        _cap = int(
-            _os.environ.get("SPARK_GRAFT_BPE_BCAST_CORPUS_BYTES", str(1 << 30))
-        )
-    except ValueError:
-        _cap = 1 << 30
     _est = plan_size_bytes(d)
     vocab_side = (
         F.broadcast(term_tok)
-        if _est is not None and _est <= max(_cap, 1)
+        if _est is not None and _est <= BPE_BCAST_CORPUS_BYTES
         else term_tok
     )
     joined = doc_terms.join(vocab_side, on="term", how="left")
@@ -1381,7 +1377,7 @@ def corpus_repeat_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``(a+b-1) // b``), so the plan is engine-exact; one grouped count
     + a broadcast 1-row target."""
     d = load_table(spark, sf_dir, "documents")
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     # counts feeds both the 1-row target fold and the factor select
     counts = materialize(
@@ -1639,7 +1635,7 @@ def text_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             for t in BM25_TERMS
         ],
     )
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     # the per-doc stats projection feeds both the corpus-constant fold
     # and the scoring select — checkpoint it so the regex tokenize over
@@ -1880,7 +1876,7 @@ def text_bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint the instance table once (same within-query pattern as
     # the MinHash pipeline; at 100 TB this is "materialize the bigram
     # table", the standard LM-training layout anyway).
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     binst = materialize(binst)
     bgc = binst.groupBy("bg").agg(F.count(F.lit(1)).cast("bigint").alias("c12"))
@@ -2060,7 +2056,7 @@ def corpus_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bigint"
         ),
     )
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     # s feeds both the 1-row (n_total, sw_sum) fold and the share
     # select — one checkpoint, one documents scan

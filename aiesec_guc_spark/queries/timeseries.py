@@ -260,7 +260,7 @@ def events_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     median passes are rank windows over the tiny (hour × type) frame
     partitioned by type; the MAD join keys on event_type (broadcast).
     """
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     e = load_table(spark, sf_dir, "events")
     # hourly feeds the median rank pass AND the deviation join; devs
@@ -348,7 +348,7 @@ def events_multigrain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame.  This is the build step for an aggregate-navigator layout
     (store all three grains, route queries to the coarsest usable).
     """
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     e = load_table(spark, sf_dir, "events")
     daily = materialize(
@@ -433,7 +433,7 @@ def events_seasonality_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("(_us % 86400000000) div 3600000000").cast("int").alias("hour"),
         "v",
     )
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     # aggregate FIRST, then derive the total from the ≤168 group rows —
     # the earlier shape folded the global count from the event-grain

@@ -171,7 +171,7 @@ def top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (F.lit(1) - F.col("l_discount")).cast("decimal(12,2)")
         ).alias("total_rev")
     )
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     # two consumers (max fold + the tie filter) — checkpoint so the
     # fact scan + supplier-grain shuffle run once, not per branch
@@ -249,7 +249,7 @@ def important_stock_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_partkey")
         .agg(F.sum(_dec("l_extendedprice", 14)).alias("val"))
     )
-    from ..operators.dedup import materialize
+    from ..session import materialize
 
     # two consumers (global total + the threshold filter) — checkpoint
     # so the fact join + part-grain shuffle run once, not per branch

@@ -115,10 +115,6 @@ def snapshot_pair(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     return today, yesterday
 
 
-def expected_delta(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(EXPECTED_DELTA_ROWS, schema=OPPORTUNITY_SCHEMA)
-
-
 def cards_values_sql() -> str:
     """FIXTURE_CARDS as a SQL VALUES list (for the DuckDB oracle)."""
     parts = []

@@ -1,7 +1,7 @@
 """Structured Streaming re-expression of the reference's scheduled
-batch (S8): the daily cron + snapshot diff becomes an incremental
-pipeline with ``trigger(availableNow=True)`` — process everything new,
-then stop; re-running picks up only new files via checkpointing.
+batch (S8): each runner drains its source with
+``trigger(availableNow=True)`` — process everything new, then stop;
+re-running picks up only new files via checkpointing.
 
 Also carries the streaming form of the tumbling-window aggregation
 (E7): ``readStream → withWatermark → groupBy(window(...)) →
@@ -18,22 +18,6 @@ from pyspark.sql import functions as F
 
 
 STREAM_STATE_PART_BYTES = 64 << 20  # target source bytes per state partition
-
-
-def _stream_state_part_bytes() -> int:
-    """Validated SPARK_GRAFT_STREAM_STATE_PART_BYTES override — bad or
-    non-positive input falls back to the 64 MB default (same env
-    hygiene as quantiles._range_part_target_bytes)."""
-    import os
-
-    raw = os.environ.get(
-        "SPARK_GRAFT_STREAM_STATE_PART_BYTES", str(STREAM_STATE_PART_BYTES)
-    )
-    try:
-        v = int(raw)
-    except ValueError:
-        return STREAM_STATE_PART_BYTES
-    return v if v > 0 else STREAM_STATE_PART_BYTES
 
 
 def _source_bytes(spark: SparkSession, path: str) -> int | None:
@@ -65,14 +49,13 @@ def _state_partitions(spark: SparkSession, sf_dir: str) -> str:
     sessionize_stateful 2.1→4.3 s and twap_by_user 2.0→4.9 s warm
     while moving the JVM-stateful queries within noise.  Size-derived
     (not core-derived), so the driver's low-core bench run sees the
-    same plan; a real deployment can also raise the per-partition
-    target via the env override."""
+    same plan."""
     src = _source_bytes(spark, f"{sf_dir}/events.parquet")
     if src is None:
         return "8"  # pre-r16 behavior when the source can't be sized
     import math
 
-    n = max(8, math.ceil(src / _stream_state_part_bytes()))
+    n = max(8, math.ceil(src / STREAM_STATE_PART_BYTES))
     cap = max(16 * spark.sparkContext.defaultParallelism, 16)
     return str(min(n, cap))
 
@@ -410,53 +393,6 @@ def run_streaming_upsert_latest(
         )
         q.awaitTermination()
     return spark.table(f"global_temp.{state_name}")
-
-
-def run_incremental_delta(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_delta"
-) -> DataFrame:
-    """The snapshot-delta pipeline in incremental form: each
-    micro-batch anti-joins arriving "today" rows against the static
-    yesterday key set via foreachBatch — the streaming analogue of
-    aiesec.py:137-145 (S7's guarded sink maps to the per-batch hook).
-    """
-    from ..catalog import load_table
-    from ..operators.snapshot import day_snapshots, snapshot_delta
-
-    _, yesterday = day_snapshots(load_table(spark, sf_dir, "events"))
-    yesterday_keys = yesterday.select("user_id").distinct()
-    maxd = (
-        load_table(spark, sf_dir, "events")
-        .agg(F.max(F.to_date("ts")).alias("d"))
-        .collect()[0]["d"]
-    )
-
-    src = _events_stream(spark, sf_dir).filter(F.to_date("ts") == F.lit(maxd))
-
-    # Pre-create an empty view with the delta schema so a run whose
-    # every batch is empty still returns an empty DataFrame instead of
-    # raising AnalysisException on the final table lookup.
-    empty = spark.createDataFrame([], src.schema)
-    snapshot_delta(empty, yesterday_keys, keys=["user_id"]).createOrReplaceGlobalTempView(
-        query_name
-    )
-
-    def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = snapshot_delta(batch_df, yesterday_keys, keys=["user_id"])
-        # Guarded side-effect (the reference's "send iff non-empty"):
-        n = delta.count()
-        if n > 0:
-            delta.createOrReplaceGlobalTempView(query_name)
-
-    with tempfile.TemporaryDirectory(prefix="ckpt_") as ckpt:
-        q = (
-            src.writeStream.foreachBatch(handle_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(f"global_temp.{query_name}")
 
 
 def run_streaming_interval_join(

@@ -104,15 +104,6 @@ def test_render_email_bytes_are_pinned(spark):
     assert render_email_html(delta.iloc[:0]) == ""
 
 
-def test_incremental_streaming_delta(spark, sf_dir):
-    from aiesec_guc_spark.queries import spark_queries
-    from aiesec_guc_spark.streaming.incremental import run_incremental_delta
-
-    got = run_incremental_delta(spark, sf_dir)
-    want = spark_queries()["snapshot_delta_events"](spark, sf_dir)
-    assert got.count() == want.count()
-
-
 def test_multiprobe_recall_dominates_single_bucket(spark, sf_dir):
     """Multi-probe ANN candidates are a superset of the single-bucket
     variant, so at every rank its cosine is >= the single-bucket one

@@ -77,22 +77,6 @@ def test_adaptive_dot_gates_on_evals(spark, sf_dir):
     assert rows and all(r["h"] == r["u"] for r in rows)
 
 
-def test_unrolled_min_evals_env_validation(monkeypatch):
-    from aiesec_guc_spark.operators.similarity import (
-        UNROLLED_DOT_MIN_EVALS,
-        _unrolled_min_evals,
-    )
-
-    monkeypatch.delenv("SPARK_GRAFT_UNROLLED_DOT_MIN_EVALS", raising=False)
-    assert _unrolled_min_evals() == UNROLLED_DOT_MIN_EVALS
-    monkeypatch.setenv("SPARK_GRAFT_UNROLLED_DOT_MIN_EVALS", "junk")
-    assert _unrolled_min_evals() == UNROLLED_DOT_MIN_EVALS
-    monkeypatch.setenv("SPARK_GRAFT_UNROLLED_DOT_MIN_EVALS", "-1")
-    assert _unrolled_min_evals() == UNROLLED_DOT_MIN_EVALS
-    monkeypatch.setenv("SPARK_GRAFT_UNROLLED_DOT_MIN_EVALS", "123")
-    assert _unrolled_min_evals() == 123
-
-
 def test_range_partitions_engages_size_estimate(spark, sf_dir):
     """The size-derived count must ENGAGE (not silently fall back) and
     can only scale UP from the session parallelism."""
@@ -107,12 +91,12 @@ def test_range_partitions_engages_size_estimate(spark, sf_dir):
     # floor — proves the estimate is actually being read
     import aiesec_guc_spark.operators.quantiles as q
 
-    old = q._range_part_target_bytes
+    old = q.RANGE_PART_BYTES
     try:
-        q._range_part_target_bytes = lambda: 1
+        q.RANGE_PART_BYTES = 1
         n_up = _range_partitions(li)
     finally:
-        q._range_part_target_bytes = old
+        q.RANGE_PART_BYTES = old
     assert floor < n_up <= 16 * floor
 
 
@@ -141,35 +125,26 @@ def test_assign_nearest_gate_and_equivalence(spark, sf_dir):
 
 def test_stream_state_partitions_scale_adaptive(spark, sf_dir, monkeypatch):
     """Local corpora resolve to the floor (8 — unchanged drain plans);
-    a tiny per-partition target proves the size path engages; bad env
-    falls back to the default instead of crashing."""
-    from aiesec_guc_spark.streaming.incremental import (
-        _state_partitions,
-        _stream_state_part_bytes,
-        STREAM_STATE_PART_BYTES,
-    )
+    a tiny per-partition target proves the size path engages."""
+    import aiesec_guc_spark.streaming.incremental as inc
+    from aiesec_guc_spark.streaming.incremental import _state_partitions
 
     assert _state_partitions(spark, sf_dir) == "8"
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PART_BYTES", "1024")
+    monkeypatch.setattr(inc, "STREAM_STATE_PART_BYTES", 1024)
     n_up = int(_state_partitions(spark, sf_dir))
     cap = max(16 * spark.sparkContext.defaultParallelism, 16)
     assert 8 < n_up <= cap
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PART_BYTES", "nope")
-    assert _stream_state_part_bytes() == STREAM_STATE_PART_BYTES
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PART_BYTES", "-5")
-    assert _stream_state_part_bytes() == STREAM_STATE_PART_BYTES
     assert _state_partitions(spark, "/nonexistent-dir-xyz") == "8"
 
 
 def test_rank_small_path_gate(spark, sf_dir, monkeypatch):
     """The r16 offset-merge size gate: sub-cap inputs plan the direct
     one-partition window (no range repartition anywhere in the plan),
-    the cap is env-validated, and <=0 / unknown estimates keep the
-    scale-safe offset path."""
+    and <=0 / unknown estimates keep the scale-safe offset path."""
+    import aiesec_guc_spark.operators.quantiles as q
     from aiesec_guc_spark.catalog import load_table
     from aiesec_guc_spark.operators.quantiles import (
         _fits_single_partition,
-        _single_part_cap_bytes,
         exact_global_rank,
     )
 
@@ -191,37 +166,15 @@ def test_rank_small_path_gate(spark, sf_dir, monkeypatch):
     )
     assert "rangepartitioning" not in probe._jdf.queryExecution().executedPlan().toString().lower()
 
-    # env validation: bad values fall back to the range-partition target
-    monkeypatch.setenv("SPARK_GRAFT_RANK_SMALL_BYTES", "nope")
-    assert _single_part_cap_bytes() == 64 << 20
     # <=0 disables the small path outright
-    monkeypatch.setenv("SPARK_GRAFT_RANK_SMALL_BYTES", "0")
+    monkeypatch.setattr(q, "RANK_SMALL_BYTES", 0)
     assert not _fits_single_partition(li, None)
     # unknown estimate -> scale-safe offset path
-    monkeypatch.delenv("SPARK_GRAFT_RANK_SMALL_BYTES")
+    monkeypatch.undo()
     assert not _fits_single_partition(li, 1 << 60)  # caller says huge
     rdd_df = spark.createDataFrame([(1.0, 1, 1)], "price double, l_orderkey int, l_linenumber int")
     # est_bytes hint engages the gate regardless of plan stats
     assert _fits_single_partition(rdd_df, 10)
-
-
-def test_range_part_target_bytes_validates_env(monkeypatch):
-    """A non-numeric / zero / negative override of
-    SPARK_GRAFT_RANGE_PART_BYTES must fall back to the 64 MB default
-    instead of crashing every offset-merge query."""
-    from aiesec_guc_spark.operators.quantiles import _range_part_target_bytes
-
-    default = 64 << 20
-    monkeypatch.delenv("SPARK_GRAFT_RANGE_PART_BYTES", raising=False)
-    assert _range_part_target_bytes() == default
-    monkeypatch.setenv("SPARK_GRAFT_RANGE_PART_BYTES", "not-a-number")
-    assert _range_part_target_bytes() == default
-    monkeypatch.setenv("SPARK_GRAFT_RANGE_PART_BYTES", "0")
-    assert _range_part_target_bytes() == default
-    monkeypatch.setenv("SPARK_GRAFT_RANGE_PART_BYTES", "-5")
-    assert _range_part_target_bytes() == default
-    monkeypatch.setenv("SPARK_GRAFT_RANGE_PART_BYTES", str(128 << 20))
-    assert _range_part_target_bytes() == 128 << 20
 
 
 def test_maxsim_presliced_hof_equals_unrolled(spark, sf_dir, monkeypatch):
@@ -238,10 +191,14 @@ def test_maxsim_presliced_hof_equals_unrolled(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(sim, "estimated_scan_rows", lambda df: 1000)
     q = spark_queries()["similarity_maxsim"]
-    monkeypatch.setenv("SPARK_GRAFT_UNROLLED_DOT_MIN_EVALS", "1")
+    monkeypatch.setattr(
+        "aiesec_guc_spark.operators.similarity.UNROLLED_DOT_MIN_EVALS", 1
+    )
     unrolled = q(spark, sf_dir)
     assert "element_at" in unrolled._jdf.queryExecution().analyzed().toString()
-    monkeypatch.setenv("SPARK_GRAFT_UNROLLED_DOT_MIN_EVALS", str(10**15))
+    monkeypatch.setattr(
+        "aiesec_guc_spark.operators.similarity.UNROLLED_DOT_MIN_EVALS", 10**15
+    )
     hof = q(spark, sf_dir)
     ana = hof._jdf.queryExecution().analyzed().toString()
     # the pre-sliced sub-vectors sit in the join inputs, not the score

@@ -103,7 +103,7 @@ def test_deciles_has_no_single_partition_window(spark, sf_dir, monkeypatch):
     # through one window task (Exchange SinglePartition feeding a
     # Window).  The r16 size gate picks a one-partition window for
     # sub-64MB inputs, so pin the SCALE plan with the gate disabled.
-    monkeypatch.setenv("SPARK_GRAFT_RANK_SMALL_BYTES", "0")
+    monkeypatch.setattr("aiesec_guc_spark.operators.quantiles.RANK_SMALL_BYTES", 0)
     df = spark_queries()["customer_acctbal_deciles"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "Window" in plan  # local per-range-partition row_number
@@ -126,7 +126,7 @@ def test_offset_merge_rank_queries_have_no_global_window(
     # vacuous here).
     from aiesec_guc_spark.plans.explain import global_window_count
 
-    monkeypatch.setenv("SPARK_GRAFT_RANK_SMALL_BYTES", "0")
+    monkeypatch.setattr("aiesec_guc_spark.operators.quantiles.RANK_SMALL_BYTES", 0)
     for name in (
         "funnel_conversion_latency",
         "pareto_revenue_concentration",
@@ -688,7 +688,9 @@ def test_exact_global_rank_matches_naive_window(spark, monkeypatch, small_bytes)
     from aiesec_guc_spark.operators.quantiles import exact_global_rank
     from aiesec_guc_spark.plans.explain import global_window_count
 
-    monkeypatch.setenv("SPARK_GRAFT_RANK_SMALL_BYTES", small_bytes)
+    monkeypatch.setattr(
+        "aiesec_guc_spark.operators.quantiles.RANK_SMALL_BYTES", int(small_bytes)
+    )
     n = 20_000
     # 99% of rows share one hot key; unique id breaks ties
     df = spark.range(n).select(
@@ -750,7 +752,7 @@ def test_round8_ops_plan_shapes(spark, sf_dir, monkeypatch):
     # plan is what gets pinned); nothing plans a cartesian product.
     from aiesec_guc_spark.plans.explain import global_window_count
 
-    monkeypatch.setenv("SPARK_GRAFT_RANK_SMALL_BYTES", "0")
+    monkeypatch.setattr("aiesec_guc_spark.operators.quantiles.RANK_SMALL_BYTES", 0)
 
     q = spark_queries()
     cms = q["events_heavy_hitters_cms"](spark, sf_dir)
@@ -821,7 +823,9 @@ def test_exact_global_cummax_matches_naive_window(spark, monkeypatch, small_byte
     from aiesec_guc_spark.operators.quantiles import exact_global_cummax
     from aiesec_guc_spark.plans.explain import global_window_count
 
-    monkeypatch.setenv("SPARK_GRAFT_RANK_SMALL_BYTES", small_bytes)
+    monkeypatch.setattr(
+        "aiesec_guc_spark.operators.quantiles.RANK_SMALL_BYTES", int(small_bytes)
+    )
     n = 20_000
     df = spark.range(n).select(
         F.when(F.col("id") % 100 < 99, 7).otherwise(F.col("id") % 100).alias("v"),
@@ -849,7 +853,7 @@ def test_pareto_frontier_no_global_window(spark, sf_dir, monkeypatch):
     # one-window small path by default).
     from aiesec_guc_spark.plans.explain import global_window_count
 
-    monkeypatch.setenv("SPARK_GRAFT_RANK_SMALL_BYTES", "0")
+    monkeypatch.setattr("aiesec_guc_spark.operators.quantiles.RANK_SMALL_BYTES", 0)
     df = spark_queries()["pareto_frontier_customers"](spark, sf_dir)
     assert global_window_count(df) == 0
     assert "CartesianProduct" not in formatted_plan(df)

@@ -1,6 +1,5 @@
 """End-to-end runner (reference aiesec.py:21-251 / main.yml:35-36 as
-one invocation) and the Excel snapshot round-trip (S4 read edge +
-S6 styled write with autofit)."""
+one invocation) and the S6 styled Excel write with autofit."""
 
 from __future__ import annotations
 
@@ -9,14 +8,10 @@ import os
 
 from aiesec_guc_spark.run import run_pipeline
 from aiesec_guc_spark.sinks.report import (
-    read_snapshot_xlsx,
     render_email_html,
     write_styled_report,
 )
-from aiesec_guc_spark.sources.fixtures import (
-    EXPECTED_DELTA_ROWS,
-    snapshot_pair,
-)
+from aiesec_guc_spark.sources.fixtures import snapshot_pair
 
 
 def test_pipeline_first_and_second_run(spark, tmp_path):
@@ -50,24 +45,6 @@ def test_pipeline_first_and_second_run(spark, tmp_path):
     for s in (s1, s2):
         assert s["rows_scraped"] == len(xlsxlite.read_xlsx(s["snapshot_report_path"])[1])
         assert s["delta_rows"] == len(xlsxlite.read_xlsx(s["report_path"])[1])
-
-
-def test_snapshot_write_read_roundtrip_delta(spark, tmp_path):
-    """S4: write both snapshots via the edge sink, read them back, and
-    the anti-join of the round-tripped frames equals the golden
-    delta — the reference's exact on-disk state transition
-    (aiesec.py:130-145).  Real xlsx both ways, through xlsxlite."""
-    from aiesec_guc_spark.operators.snapshot import snapshot_delta
-
-    today, yesterday = snapshot_pair(spark)
-    t_path = write_styled_report(today.toPandas(), str(tmp_path / "Today"))
-    y_path = write_styled_report(yesterday.toPandas(), str(tmp_path / "Yesterday"))
-
-    t2 = read_snapshot_xlsx(spark, t_path)
-    y2 = read_snapshot_xlsx(spark, y_path)
-    delta = snapshot_delta(t2, y2, keys=["opportunity_id"])
-    got = [tuple(r) for r in delta.collect()]
-    assert got == EXPECTED_DELTA_ROWS
 
 
 def test_styled_xlsx_autofit(spark, tmp_path):

@@ -2,7 +2,7 @@
 item 6): the 225 registered queries already survive empty / one-row /
 null-injected corpora (tests/test_empty_corpus.py); this file gives the
 pytest-only operators — MERGE, SCD2 apply, compaction/layout, retention,
-snapshot rotation, the publish pipeline, and the streaming SCD2 drain —
+snapshot rotation, and the streaming SCD2 drain —
 the same systematic treatment.  At 100 TB these states are routine
 (a quiet day's empty updates frame, a zero-row file inside a stream, a
 fresh table before first ingest, a partition with nothing to compact),
@@ -151,29 +151,6 @@ def test_snapshot_rotation_single_empty_day(spark, tmp_path):
     write_snapshot(spark.createDataFrame([], SCHEMA), base, "2026-03-01")
     with pytest.raises(ValueError, match="two run_date partitions"):
         read_snapshot_pair(spark, base)
-
-
-def test_publish_daily_quiet_corpus(spark, sf_dir, tmp_path):
-    # a corpus with ZERO events — the quiet-day publish must complete
-    # with an empty mart and a skipped notification, not crash in any
-    # of its five stages (dq gate, mart, snapshot, compaction, notify)
-    from aiesec_guc_spark.catalog import load_table
-    from aiesec_guc_spark.pipelines.publish import publish_daily
-
-    quiet = tmp_path / "sf_quiet"
-    quiet.mkdir()
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"):
-        df = load_table(spark, sf_dir, t)
-        (df if t != "events" else df.limit(0)).write.parquet(
-            str(quiet / f"{t}.parquet")
-        )
-    sent = []
-    manifest = publish_daily(
-        spark, str(quiet), str(tmp_path / "out"), "2026-03-02", send=sent.append
-    )
-    assert manifest["n_rows"] == 0
-    assert manifest["notified"] is False and sent == []
 
 
 def test_streaming_scd2_empty_batch_mid_stream(spark, tmp_path):

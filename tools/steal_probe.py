@@ -1,5 +1,5 @@
-"""Hypervisor-steal probe — the measurement behind SCALING.md
-"Round-13: the parallel-throughput cap, explained and instrumented".
+"""Hypervisor-steal probe — the measurement behind SCALING.md's
+"Timing on a shared VM" note (Cross-cutting).
 
     python tools/steal_probe.py [--reps N] [--sec S]
 
@@ -132,9 +132,8 @@ def burst(nproc: int, sec: float, ncpu: int) -> dict:
 #: Fixed single-thread calibration workload: a pure-Python integer
 #: loop, no JVM, no allocation — its min-of-3 wall time moves ONLY
 #: with scalar single-core execution speed.  The question it was
-#: built to settle is ANSWERED (r14, SCALING.md "Round-14: the
-#: slow-boot class was mostly instrument warm-up"): spin does NOT
-#: track the JVM canary — measured same-boot 2026-08-16, spin_min
+#: built to settle is ANSWERED (r14): spin does NOT track the JVM
+#: canary — measured same-boot 2026-08-16, spin_min
 #: 0.530 while the fully-warm canary hit the fast anchor (0.0852),
 #: then 0.560 (+5.7%) while the canary DOUBLED to ~0.14; every boot
 #: measured in r13-r14 shows spin in the same 0.49-0.61 band.  So
