@@ -34,9 +34,10 @@ Design:
   temp or the abandoned old copy as a bogus extra partition — the
   swap stays invisible to ``base`` readers, not just to readers of
   the compacted path itself.
-- Every table rewrite (merge, SCD2, compaction, z-order) goes through
-  ``swap_in``.  It is LOCAL-ONLY (POSIX ``rename``): a path with a URI
-  scheme (``file://``, ``hdfs://`` ...) raises ``ValueError`` first.
+- Every table rewrite (the snapshot day, merge, SCD2, compaction,
+  z-order) goes through ``swap_in``.  It is LOCAL-ONLY (POSIX
+  ``rename``): a path with a URI scheme (``file://``, ``hdfs://`` ...)
+  raises ``ValueError`` first.
 """
 
 from __future__ import annotations
@@ -250,11 +251,11 @@ def recover_interrupted_swap(path: str) -> str | None:
     rename back) returns the table to its exact pre-swap state; the
     abandoned temp sibling is left for ``vacuum_siblings``.
 
-    Every swap-writing operator (scd2_apply, merge_upsert,
-    zorder_rewrite, compact_table callers) invokes this at entry —
-    without it, the next apply's exists-probe would take the CREATION
-    path and silently reinitialize the table from the current batch
-    alone, losing all history.
+    Every swap-writing operator (write_snapshot, scd2_apply,
+    merge_upsert, zorder_rewrite, compact_table callers) invokes this
+    at entry — without it, the next apply's exists-probe would take
+    the CREATION path and silently reinitialize the table from the
+    current batch alone, losing all history.
 
     Returns the restored sibling path, or None if nothing needed
     healing.  No-op when the target exists (a crash after the second
@@ -305,65 +306,17 @@ def vacuum_siblings(path: str, dry_run: bool = False) -> list[str]:
     return victims
 
 
-def fs_listdir(path: str, spark=None) -> list[str] | None:
-    """Sorted entry names of ``path``, or ``None`` when the listing
-    backend cannot see it as a directory.
-
-    The partition-listing seam shared by partition discovery
-    (``list_partitions``) and the zero-row-write detection in
-    ``snapshot.write_snapshot``.  With a ``spark`` session the listing
-    goes through the Hadoop FileSystem THAT PATH RESOLVES TO — the
-    same resolver Spark's writers use — so ``file://`` URIs,
-    ``hdfs://``/``s3a://`` schemes, and relative paths are all seen
-    exactly where Spark wrote them; this is the object-store-correct
-    form and the one 100 TB callers hit.  Without a session it falls
-    back to the driver-local ``os.listdir`` convention.
-
-    ``None`` means "not visible to the listing backend" — callers MUST
-    treat that as BLIND, not as "empty".  With a session, blind is
-    reduced to paths whose scheme has no loadable FileSystem (e.g. a
-    cloud connector missing from the classpath, which would have
-    failed the write too): the resolver error degrades to ``None``
-    rather than raising, because every caller already carries a safe
-    blind-path branch.
-
-    NOT a general filesystem abstraction: the table-swap machinery
-    (``swap_in``, ``vacuum_siblings``, ``recover_interrupted_swap``)
-    stays on raw local ``os`` calls BY DESIGN — its atomicity comes
-    from POSIX ``rename``, which object stores do not offer.  Swaps
-    are local-only; ``swap_in`` rejects any path with a URI scheme.
-    """
-    if spark is not None:
-        try:
-            jvm = spark._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            if not fs.exists(hpath) or not fs.getFileStatus(hpath).isDirectory():
-                return None
-            return sorted(
-                st.getPath().getName() for st in fs.listStatus(hpath)
-            )
-        except Exception:  # noqa: BLE001 — unloadable scheme => blind
-            return None
-    if not os.path.isdir(path):
-        return None
-    return sorted(os.listdir(path))
-
-
-def list_partitions(path: str, column: str, spark=None) -> list[str]:
+def list_partitions(path: str, column: str) -> list[str]:
     """Values of a single-level hive partition layout
-    (``<path>/<column>=<value>``), sorted ascending; hidden/system
-    entries skipped.  Pass ``spark`` to list through the Hadoop
-    FileSystem the path resolves to (see ``fs_listdir``) — required
-    for object-store tables; the spark-less form stays local-FS and
-    is what the local compaction/retention chores use."""
+    (``<path>/<column>=<value>``), sorted ascending.  Hidden and system
+    entries are skipped, so a swap's dot-prefixed siblings never show
+    as partitions.  Local paths only, like ``swap_in``: lists with
+    ``os.listdir`` and raises ``FileNotFoundError`` for a missing
+    ``path``."""
     prefix = f"{column}="
-    entries = fs_listdir(path, spark=spark)
-    if entries is None:
-        raise FileNotFoundError(path)
     return sorted(
         d[len(prefix):]
-        for d in entries
+        for d in os.listdir(path)
         if d.startswith(prefix) and not d.startswith((".", "_"))
     )
 

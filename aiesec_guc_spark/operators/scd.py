@@ -96,11 +96,12 @@ def scd2_apply(
 
     ``applied_marker``: a dot-prefixed filename dropped INSIDE the
     table directory before the rename, making "this batch was
-    applied" visible atomically with the data swap — the transactional
-    handshake ``run_streaming_scd2`` uses so a crash can never land
-    between apply and marker (a marker written as a separate step
-    afterwards would wedge recovery: the redelivered batch would trip
-    the late-data guard with no marker saying it already applied).
+    applied" visible atomically with the data swap — the handshake a
+    caller that re-applies batches (a retried day, a redelivered
+    micro-batch) checks, so a crash can never land between apply and
+    marker (a marker written as a separate step afterwards would wedge
+    recovery: the re-applied batch would trip the late-data guard
+    with no marker saying it already applied).
     Spark listings skip dot-files, so the marker is invisible to
     readers.
     """

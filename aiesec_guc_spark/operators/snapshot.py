@@ -12,6 +12,9 @@ Spark-first re-expression:
 - The snapshot pair is two DataFrames; at scale, a single table
   partitioned by ``run_date`` where "yesterday" is the lag-1 partition
   (partition pruning makes reading exactly two days cheap at 100 TB).
+  Each day is written as its ``run_date=<date>`` directory through
+  ``maintenance.swap_in``, the one local-only table swap every history
+  table uses, so a day is replaced whole and atomically.
 - The delta is a **left-anti join** on the key.  Catalyst picks
   ``BroadcastHashJoin(LeftAnti)`` when the yesterday key set is small
   (it is: keys only), which is exactly the hash-set probe the
@@ -25,6 +28,7 @@ Spark-first re-expression:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -99,77 +103,27 @@ def day_snapshots(events: DataFrame, ts_col: str = "ts") -> tuple[DataFrame, Dat
 
 
 def write_snapshot(df: DataFrame, base_path: str, run_date: str) -> None:
-    """Write one day's snapshot as a ``run_date`` partition,
-    idempotently.
+    """Write one day's snapshot as the ``run_date=<date>`` partition
+    directory of ``base_path``, through ``maintenance.swap_in``.
 
     Replaces the reference's file rotation (Today→Yesterday copy,
     aiesec.py:20-21): prior partitions are never touched — history is
     retained (the reference's git-commit versioning, main.yml:37-52,
     falls out for free) and readers prune to the partitions they
-    need.  Dynamic partition overwrite makes a rerun of the SAME
-    run_date (cron retry, crash recovery) replace that day instead of
-    appending a duplicate copy of every row into it.
-
-    The zero-row detection below lists the partition directory through
-    ``maintenance.fs_listdir`` with the session attached, so the
-    listing resolves through the SAME Hadoop FileSystem the write
-    did — ``file://`` URIs, ``hdfs://``/``s3a://`` schemes, and
-    relative paths are all inspected exactly where Spark put the
-    files.  Only a scheme whose FileSystem cannot be loaded at all is
-    "blind", and that case takes a df-based fallback instead of ever
-    assuming "zero rows written".
+    need.  A rerun of the SAME run_date (cron retry, crash recovery)
+    swaps that day's directory whole, so it never appends a second
+    copy of the rows and a retry that finds nothing empties the day.
+    An empty frame writes one schema-bearing zero-row file, so a quiet
+    day is still a readable partition.  A crash between the swap's
+    renames leaves the day's ``__old_`` sibling, which the next write
+    of that day restores first.  Local paths only: a URI
+    ``base_path`` raises ``swap_in``'s ``ValueError`` before any write.
     """
-    from .maintenance import fs_listdir
+    from .maintenance import recover_interrupted_swap, swap_in
 
-    spark = df.sparkSession
     part_dir = f"{base_path.rstrip('/')}/run_date={run_date}"
-    listing_before = fs_listdir(part_dir, spark=spark)
-    (
-        df.withColumn("run_date", F.lit(run_date))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("run_date")
-        .parquet(base_path)
-    )
-    # partitionBy over ZERO rows writes no partition directory at all
-    # (just _SUCCESS) — the base then fails every later read with
-    # UNABLE_TO_INFER_SCHEMA, wedging the quiet-day publish.  A
-    # filesystem check after the write is cheaper than a df.isEmpty()
-    # pre-check, which would evaluate the upstream plan a second time
-    # (for an aggregate-topped frame, limit(1) still runs the full
-    # shuffle).  Zero rows were written iff the day's directory is
-    # missing (fresh quiet day) OR its listing is unchanged (a RERUN
-    # that found nothing: dynamic overwrite only touches partitions
-    # present in the data, and a real rewrite always lands new
-    # uniquely-named part files).  Either way the day must become the
-    # zero-row, schema-bearing partition: the run_date column is
-    # inferred from the directory name exactly as for the partitionBy
-    # path, and a rerun-to-empty replaces the stale rows instead of
-    # silently keeping them.
-    listing_after = fs_listdir(part_dir, spark=spark)
-    if listing_after is None and fs_listdir(base_path, spark=spark) is None:
-        # The listing backend cannot see base_path AT ALL — with the
-        # session-backed Hadoop listing that means the path's scheme
-        # has no loadable FileSystem (the write itself would normally
-        # have failed too, but a custom committer could differ)
-        # — so "no partition directory" means BLIND, not empty, and
-        # falling through would overwrite a freshly written non-empty
-        # partition with an empty frame: silent data loss.  A read-back
-        # of the partition can't arbitrate either (it can't tell rows
-        # the write just landed from stale rows of a prior run).  On
-        # blind paths only, decide from the source frame itself:
-        # df.isEmpty() re-evaluates the plan (limit 1 — for an
-        # aggregate-topped frame that is the full shuffle), the price
-        # of correctness where no listing diff exists.
-        if not df.isEmpty():
-            return
-        listing_after = listing_before  # empty day: rewrite below
-    if listing_after is None or listing_after == listing_before:
-        # a literal empty frame, not df.limit(0): the day is already
-        # known empty, so re-executing df's plan would be a pure waste
-        df.sparkSession.createDataFrame([], df.schema).write.mode(
-            "overwrite"
-        ).parquet(part_dir)
+    recover_interrupted_swap(part_dir)
+    swap_in(df, part_dir, replace=os.path.isdir(part_dir))
 
 
 def read_snapshot_pair(spark, base_path: str) -> tuple[DataFrame, DataFrame]:
@@ -181,9 +135,8 @@ def read_snapshot_pair(spark, base_path: str) -> tuple[DataFrame, DataFrame]:
     try:
         snaps = spark.read.parquet(base_path)
     except AnalysisException as exc:
-        # missing base, or a partition-less base a pre-fix
-        # write_snapshot left behind (_SUCCESS only) — surface the
-        # same typed not-enough-days error the day-count check raises
+        # missing base, or a base with no readable partition — surface
+        # the same typed not-enough-days error the day-count check raises
         detail = exc.getErrorClass() or str(exc)
         raise ValueError(
             f"need at least two run_date partitions at {base_path}, "
@@ -197,7 +150,7 @@ def read_snapshot_pair(spark, base_path: str) -> tuple[DataFrame, DataFrame]:
     # of every partition's footers for the distinct.
     from .maintenance import list_partitions
 
-    days = list_partitions(base_path, "run_date", spark=spark)[-2:][::-1]
+    days = list_partitions(base_path, "run_date")[-2:][::-1]
     if len(days) < 2:
         raise ValueError(f"need at least two run_date partitions at {base_path}, found {days}")
     today = snaps.filter(F.col("run_date") == days[0]).drop("run_date")

@@ -7,18 +7,21 @@ invocation:
 
 Stage map (reference → here):
 
-1. rotate (aiesec.py:20-21)      → append-only run_date partition; no
-                                   file copy, "yesterday" = lag-1
+1. rotate (aiesec.py:20-21)      → one run_date partition per day;
+                                   no file copy, "yesterday" = lag-1
                                    partition (operators/snapshot.py)
 2. scrape (aiesec.py:22-67)      → `read_pages`: the pages fetched
                                    in page order on the driver, one
                                    local frame (fixture-backed
                                    `_fetch` seam)
 3. extract (aiesec.py:83-126)    → `extract_cards` (codegen'd regexes)
-4. Today.xlsx (aiesec.py:130-132)→ `write_snapshot` partition append;
-                                   the day is collected once, in page
-                                   order, and that frame is the
-                                   styled report (today_<date>.xlsx)
+4. Today.xlsx (aiesec.py:130-132)→ `write_snapshot`: the day's
+                                   partition directory swapped in
+                                   whole (`swap_in`, local paths
+                                   only); the day is collected
+                                   once, in page order, and that
+                                   frame is the styled report
+                                   (today_<date>.xlsx)
 5. anti-join (aiesec.py:137-143) → `snapshot_delta` (left_anti),
                                    collected once
 6. New.xlsx + style (:145-183)   → `write_styled_report` (+ autofit)
@@ -82,16 +85,17 @@ def run_pipeline(
     today = scrape_today(spark, base_url=base_url, pages=pages)
     write_snapshot(today, snap_path, run_date)
 
-    # Prior-day discovery is DIRECTORY-based (same rule as
-    # read_snapshot_pair): a quiet day's partition holds a zero-row
+    # Prior-day discovery lists the partition DIRECTORIES (same rule
+    # as read_snapshot_pair): a quiet day's partition holds a zero-row
     # file that a distinct-over-rows would skip, silently diffing
     # today against an OLDER day — suppressing re-appearances as
-    # "not new".  ISO run_date strings order lexically.
+    # "not new".  Swap siblings are dot-prefixed and never listed.
+    # ISO run_date strings order lexically.
     from .operators.maintenance import list_partitions
 
     prior_dates = [
         d
-        for d in list_partitions(snap_path, "run_date", spark=spark)
+        for d in list_partitions(snap_path, "run_date")
         if d < run_date
     ]
     if prior_dates:
@@ -135,7 +139,7 @@ def run_pipeline(
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="aiesec_guc_spark", description=__doc__)
-    p.add_argument("--data-dir", required=True, help="snapshot table root")
+    p.add_argument("--data-dir", required=True, help="local snapshot table root")
     p.add_argument("--out-dir", required=True, help="report output dir")
     p.add_argument("--run-date", required=True, help="YYYY-MM-DD of this run")
     p.add_argument(

@@ -11,7 +11,7 @@ shortest-round-trip decimal forms).
 At scale both formats remain splittable line formats — a JSON/CSV read
 parallelizes across executors like any file scan — but they scan and
 parse every byte of every column: keep them for interchange edges and
-convert to parquet at ingest (``convert_to_parquet``).
+convert to parquet at ingest.
 """
 
 from __future__ import annotations
@@ -58,12 +58,3 @@ def read_table(
     elif fmt == "csv":
         r = r.option("header", "true").option("timestampFormat", _TS_FMT)
     return getattr(r, fmt)(path)
-
-
-def convert_to_parquet(
-    spark: SparkSession, src_path: str, dest_path: str, schema: T.StructType, fmt: str
-) -> None:
-    """Ingest-edge conversion: text interchange → canonical parquet.
-    One distributed read + write; downstream queries then get column
-    pruning and predicate pushdown for free."""
-    read_table(spark, src_path, schema, fmt).write.mode("overwrite").parquet(dest_path)

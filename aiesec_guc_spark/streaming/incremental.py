@@ -518,158 +518,6 @@ def run_streaming_wau_approx(
     )
 
 
-def run_streaming_scd2(
-    spark: SparkSession,
-    sf_dir: str,
-    target_path: str,
-    src: DataFrame | None = None,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """foreachBatch SCD2 maintenance: each micro-batch of status
-    observations versions a parquet dimension table via
-    ``operators.scd.scd2_apply`` — the streaming twin of the
-    incremental type-2 MERGE, composing the engine's own pieces the
-    way ``run_streaming_upsert_latest`` does for type-1.
-
-    Exactly-once at the table level via the standard foreachBatch
-    transactional-sink pattern, with TWO durability rules:
-
-    - The stream checkpoint lives in the stable hidden sibling
-      ``.{name}__ckpt/`` (NOT a temp dir), so a later invocation
-      against the same target resumes source progress — epoch ids
-      never restart at 0 and already-read files are never re-formed
-      into batches that a marker check could wrongly drop.
-    - Applied-batch markers are keyed by batch CONTENT (row count +
-      order-insensitive md5 row-hash sum), never by bare epoch id,
-      at TWO levels with distinct jobs:
-
-      * the ATOMIC marker lives INSIDE the table directory, written
-        into the pre-rename swap sibling by
-        ``scd2_apply(applied_marker=...)`` — "data applied" and
-        "marker present" become visible in ONE rename.  This closes
-        the crash window a separate marker write would leave: apply
-        lands, process dies before the marker, the checkpointed
-        source redelivers, the late-data guard fail-stops, and every
-        restart re-raises — recovery permanently wedged.  Each swap
-        carries only its own batch's marker, which is exactly the
-        redelivery window foreachBatch has (offsets commit per
-        epoch).
-      * the HISTORY markers in the hidden sibling ``.{name}__epochs/``
-        record every applied batch, so a FULL replay (fresh
-        checkpoint over the same source) skips all of them, not just
-        the latest.  They are written after the apply — non-atomic,
-        which is safe because the in-table marker covers the crash
-        window, and a skip via the in-table marker backfills the
-        missing history marker (self-healing).
-
-    Batch prep pre-reduces to one observation per (user, instant)
-    (max event_type — deterministic) to satisfy scd2_apply's
-    unique-(key, ts) precondition.
-    """
-    import os
-
-    from ..operators.scd import scd2_apply
-
-    if src is None:
-        src = _events_stream(spark, sf_dir)
-    parent, name = os.path.split(target_path.rstrip("/"))
-    marker_dir = os.path.join(parent, f".{name}__epochs")
-    ckpt = checkpoint_dir or os.path.join(parent, f".{name}__ckpt")
-
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        changes = (
-            batch_df.select(
-                "user_id", F.unix_micros("ts").alias("ts_us"), "event_type"
-            )
-            .groupBy("user_id", "ts_us")
-            .agg(F.max("event_type").alias("status"))
-        )
-        fp = changes.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws("\x1f", "user_id", "ts_us", "status")),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("decimal(20,0)")
-            ).alias("h"),
-        ).collect()[0]
-        if fp["n"] == 0:
-            return
-        key = f"{fp['n']}_{fp['h']}"
-        history = os.path.join(marker_dir, key)
-        if os.path.exists(history):
-            return  # full replay of an already-applied batch
-        atomic = f"._applied_{key}"
-        if os.path.exists(os.path.join(target_path, atomic)):
-            # post-crash redelivery: the apply landed but the process
-            # died before the history marker — backfill it and skip
-            os.makedirs(marker_dir, exist_ok=True)
-            open(history, "w").close()
-            return
-        scd2_apply(
-            spark,
-            target_path,
-            changes,
-            "user_id",
-            ["status"],
-            "ts_us",
-            applied_marker=atomic,
-        )
-        os.makedirs(marker_dir, exist_ok=True)
-        open(history, "w").close()
-
-    # Orphaned-checkpoint guard: the durable checkpoint (and the
-    # history markers) outlive the table by design — but if the TABLE
-    # was deleted while they were kept, a rerun would resume source
-    # offsets (never re-forming the consumed batches) and/or skip
-    # redelivered ones via markers, silently rebuilding an empty or
-    # partial dimension.  Heal a crashed swap first (the table may
-    # only be renamed-away, not gone), then fail loudly rather than
-    # resume into a hole; the operator must delete the checkpoint +
-    # marker dirs together with the table to start fresh.
-    from ..operators.maintenance import parquet_table_exists, recover_interrupted_swap
-
-    recover_interrupted_swap(target_path)
-    consumed_offsets = os.path.isdir(os.path.join(ckpt, "offsets")) and any(
-        os.scandir(os.path.join(ckpt, "offsets"))
-    )
-    # Offsets alone are NOT evidence data was applied: a no-op drain
-    # (source holding only zero-row files) commits offsets without
-    # ever creating the table, and resuming that checkpoint is legal.
-    # History markers are written iff scd2_apply actually ran, so
-    # "applied but table missing" — the real data-loss state — is
-    # offsets + markers + no table.
-    applied_any_batch = os.path.isdir(marker_dir) and any(os.scandir(marker_dir))
-    if consumed_offsets and applied_any_batch and not parquet_table_exists(target_path):
-        raise RuntimeError(
-            f"streaming SCD2 checkpoint {ckpt!r} has consumed source offsets "
-            f"but target table {target_path!r} is missing — resuming would "
-            "rebuild a partial dimension; delete the checkpoint and "
-            f"{marker_dir!r} together with the table to reprocess from scratch"
-        )
-
-    q = (
-        src.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not parquet_table_exists(target_path):
-        # The drain applied nothing (empty source, or every batch was
-        # empty after prep) — a legal no-op run.  Return the typed
-        # empty dimension rather than crashing on the missing path.
-        return spark.createDataFrame(
-            [], "user_id long, status string, valid_from long, valid_to long"
-        )
-    return spark.read.parquet(target_path)
-
-
 def run_streaming_cms(
     spark: SparkSession, sf_dir: str, query_name: str = "stream_cms"
 ) -> DataFrame:

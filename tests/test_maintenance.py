@@ -295,9 +295,11 @@ def _kv(spark, keys, v, ts):
 def test_swap_rejects_uri_paths_before_writing(spark, tmp_path, monkeypatch):
     """Table swaps are local-only: a ``file://`` target must fail with
     ValueError before anything is created — no junk ``file:`` directory
-    in the cwd and no orphaned swap sibling beside the target."""
+    in the cwd and no orphaned swap sibling beside the target.  The
+    snapshot day is one more swap caller."""
     from aiesec_guc_spark.operators.merge import merge_upsert
     from aiesec_guc_spark.operators.scd import scd2_apply
+    from aiesec_guc_spark.operators.snapshot import write_snapshot
 
     monkeypatch.chdir(tmp_path)
     uri = f"file://{tmp_path}/t"
@@ -306,6 +308,8 @@ def test_swap_rejects_uri_paths_before_writing(spark, tmp_path, monkeypatch):
         merge_upsert(spark, uri, batch, keys=["k"], order_col="ts")
     with pytest.raises(ValueError, match="local-only"):
         scd2_apply(spark, uri, batch, "k", ["v"], "ts")
+    with pytest.raises(ValueError, match="local-only"):
+        write_snapshot(batch, uri, "2026-08-13")
     assert os.listdir(tmp_path) == []
 
 

@@ -4,8 +4,10 @@ the latest pair equals the golden fixture delta."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from aiesec_guc_spark.operators.snapshot import (
@@ -71,57 +73,49 @@ def test_rotation_reads_prune_partitions(spark):
         assert t2.count() == today.count()
 
 
-def test_file_uri_path_is_seen_not_clobbered(spark):
-    """ADVICE r11 (medium), strengthened: a ``file://`` URI — a path
-    the raw local ``os.listdir`` cannot see as a literal directory —
-    is SEEN by the session-backed Hadoop listing, so the zero-row
-    detection works through the same resolver the write used:
-    non-empty days keep their rows and a rerun-to-empty replaces the
-    stale day via the normal listing diff, no blind fallback."""
-    today, yesterday = snapshot_pair(spark)
-    with tempfile.TemporaryDirectory(prefix="snaps_") as base:
-        uri = f"file://{base}"
-        write_snapshot(yesterday, uri, "2026-08-12")
-        write_snapshot(today, uri, "2026-08-13")
-        t2, y2 = read_snapshot_pair(spark, base)  # plain path: same dir
-        assert t2.count() == today.count()  # NOT clobbered to empty
-        assert y2.count() == yesterday.count()
-        # quiet-day rerun through the URI replaces the stale day
-        write_snapshot(today.limit(0), uri, "2026-08-13")
-        t3, y3 = read_snapshot_pair(spark, base)
-        assert t3.count() == 0
-        assert y3.count() == yesterday.count()
-
-
-def test_truly_blind_listing_never_overwrites_fresh_rows(spark, monkeypatch):
-    """When even the Hadoop-backed listing cannot see the path (scheme
-    with no loadable FileSystem — simulated by forcing the seam to
-    return None), write_snapshot must not conclude "zero rows written"
-    and clobber the freshly written partition; the df-based fallback
-    decides instead.  A rerun-to-empty on the same blind path still
-    lands the schema-bearing empty day."""
-    from aiesec_guc_spark.operators import maintenance
+def test_day_retry_crash_between_renames_heals(spark, tmp_path, monkeypatch):
+    """A same-day retry whose swap crashes between its two renames
+    leaves the day only as its hidden ``__old_`` sibling: no reader or
+    partition listing sees a half-written day, and the next write of
+    that day restores the old copy before replacing it."""
+    from aiesec_guc_spark.operators.maintenance import list_partitions
 
     today, yesterday = snapshot_pair(spark)
-    real = maintenance.fs_listdir
-    with tempfile.TemporaryDirectory(prefix="snaps_") as base:
-        write_snapshot(yesterday, base, "2026-08-12")
-        monkeypatch.setattr(
-            maintenance, "fs_listdir", lambda path, spark=None: None
-        )
-        write_snapshot(today, base, "2026-08-13")  # blind, non-empty
-        monkeypatch.setattr(maintenance, "fs_listdir", real)
-        t2, y2 = read_snapshot_pair(spark, base)
-        assert t2.count() == today.count()  # NOT clobbered to empty
-        assert y2.count() == yesterday.count()
-        monkeypatch.setattr(
-            maintenance, "fs_listdir", lambda path, spark=None: None
-        )
-        write_snapshot(today.limit(0), base, "2026-08-13")  # blind, empty
-        monkeypatch.setattr(maintenance, "fs_listdir", real)
-        t3, y3 = read_snapshot_pair(spark, base)
-        assert t3.count() == 0
-        assert y3.count() == yesterday.count()
+    base = str(tmp_path / "snaps")
+    day = f"{base}/run_date=2026-08-13"
+    write_snapshot(yesterday, base, "2026-08-12")
+    write_snapshot(today, base, "2026-08-13")
+    first = sorted(map(tuple, spark.read.parquet(day).collect()))
+    prior_files = sorted(os.listdir(f"{base}/run_date=2026-08-12"))
+
+    real_rename = os.rename
+    renames = []
+
+    def crash_on_second(src, dst):
+        renames.append(src)
+        if len(renames) == 2:
+            raise OSError("simulated crash between the swap's renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_second)
+    with pytest.raises(OSError, match="simulated crash"):
+        write_snapshot(today.limit(0), base, "2026-08-13")
+    monkeypatch.setattr(os, "rename", real_rename)
+
+    assert not os.path.exists(day)
+    olds = [f for f in os.listdir(base) if f.startswith(".run_date=2026-08-13__old_")]
+    assert len(olds) == 1
+    kept = spark.read.parquet(os.path.join(base, olds[0])).collect()
+    assert sorted(map(tuple, kept)) == first
+    assert list_partitions(base, "run_date") == ["2026-08-12"]
+
+    write_snapshot(today.limit(0), base, "2026-08-13")
+    assert not [f for f in os.listdir(base) if "__old_" in f]
+    t2, y2 = read_snapshot_pair(spark, base)
+    assert t2.count() == 0
+    assert y2.count() == yesterday.count()
+    assert list_partitions(base, "run_date") == ["2026-08-12", "2026-08-13"]
+    assert sorted(os.listdir(f"{base}/run_date=2026-08-12")) == prior_files
 
 
 def test_empty_yesterday_then_real_today_delta(spark):

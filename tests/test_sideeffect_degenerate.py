@@ -2,10 +2,9 @@
 item 6): the 225 registered queries already survive empty / one-row /
 null-injected corpora (tests/test_empty_corpus.py); this file gives the
 pytest-only operators — MERGE, SCD2 apply, compaction/layout, retention,
-snapshot rotation, and the streaming SCD2 drain —
-the same systematic treatment.  At 100 TB these states are routine
-(a quiet day's empty updates frame, a zero-row file inside a stream, a
-fresh table before first ingest, a partition with nothing to compact),
+and snapshot rotation — the same systematic treatment.  At 100 TB
+these states are routine (a quiet day's empty updates frame, a fresh
+table before first ingest, a partition with nothing to compact),
 and an operator that throws on them wedges the whole scheduled run.
 
 The bar everywhere: no raise, and where the operation is a logical
@@ -14,9 +13,7 @@ no-op, the target's prior state must be untouched.
 
 from __future__ import annotations
 
-import datetime as dt
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -151,37 +148,3 @@ def test_snapshot_rotation_single_empty_day(spark, tmp_path):
     write_snapshot(spark.createDataFrame([], SCHEMA), base, "2026-03-01")
     with pytest.raises(ValueError, match="two run_date partitions"):
         read_snapshot_pair(spark, base)
-
-
-def test_streaming_scd2_empty_batch_mid_stream(spark, tmp_path):
-    # a zero-row file BETWEEN two real files (maxFilesPerTrigger=1 →
-    # it forms its own empty micro-batch) must neither crash the drain
-    # nor disturb the versions the surrounding batches produce
-    from aiesec_guc_spark.streaming.incremental import run_streaming_scd2
-
-    src_dir = str(tmp_path / "obs")
-    t0 = dt.datetime(2026, 3, 1, 9, 0, 0)
-    stamps = "user_id long, ts timestamp, event_type string"
-
-    def write(rows):
-        spark.createDataFrame(rows, stamps).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-        time.sleep(1.1)  # distinct mtimes => deterministic batch order
-
-    write([(1, t0, "click")])
-    write([])  # the empty middle batch
-    write([(1, t0 + dt.timedelta(minutes=5), "purchase")])
-
-    stream = (
-        spark.readStream.schema(stamps)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    target = str(tmp_path / "dim")
-    out = run_streaming_scd2(spark, sf_dir="", target_path=target, src=stream)
-    got = sorted(
-        (r["user_id"], r["status"], r["valid_to"] is None)
-        for r in out.collect()
-    )
-    assert got == [(1, "click", False), (1, "purchase", True)]

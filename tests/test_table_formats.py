@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from aiesec_guc_spark.catalog import load_table
 from aiesec_guc_spark.sources.formats import (
     FORMATS,
-    convert_to_parquet,
     read_table,
     write_table,
 )
@@ -39,16 +38,6 @@ def test_format_roundtrip_is_exact(spark, sf_dir, fmt, tmp_path):
     write_table(df, path, fmt)
     back = read_table(spark, path, df.schema, fmt)
     assert back.schema == df.schema
-    assert _canon(back) == _canon(df)
-
-
-def test_convert_to_parquet_roundtrip(spark, sf_dir, tmp_path):
-    df = _sample(spark, sf_dir)
-    src = str(tmp_path / "events_json")
-    dest = str(tmp_path / "events_pq")
-    write_table(df, src, "json")
-    convert_to_parquet(spark, src, dest, df.schema, "json")
-    back = spark.read.parquet(dest)
     assert _canon(back) == _canon(df)
 
 

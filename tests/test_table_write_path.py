@@ -1,0 +1,42 @@
+"""Every table write goes through one path: ``maintenance.swap_in``
+writes with ``sources.formats.write_table``, the only DataFrame
+``.write`` in the package, and only the streaming source probes reach
+the JVM's Hadoop FileSystem.
+
+A module that needs another writer or a Hadoop FileSystem handle has
+to be added here on purpose.
+"""
+
+from __future__ import annotations
+
+import pathlib
+import re
+
+import aiesec_guc_spark
+
+ROOT = pathlib.Path(aiesec_guc_spark.__file__).parent
+
+
+def _modules_matching(pattern: str) -> set[str]:
+    return {
+        f.relative_to(ROOT).as_posix()
+        for f in ROOT.rglob("*.py")
+        if re.search(pattern, f.read_text(encoding="utf-8"))
+    }
+
+
+def test_one_dataframe_writer():
+    # DataFrame.write is a property: a call ``.write(`` is a file write
+    assert _modules_matching(r"\.write\b(?!\s*\()") == {"sources/formats.py"}
+    # ... and only swap_in calls write_table
+    assert _modules_matching(r"\bwrite_table\(") == {
+        "sources/formats.py",
+        "operators/maintenance.py",
+    }
+
+
+def test_only_stream_sources_reach_hadoop():
+    # the streaming queries size and probe their source (``file://``
+    # and other schemes included) through the Hadoop FileSystem; they
+    # read only and write no table
+    assert _modules_matching(r"org\.apache\.hadoop") == {"streaming/incremental.py"}
