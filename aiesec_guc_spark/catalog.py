@@ -87,7 +87,7 @@ def fan_out_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     far exceeds the threshold, and no exchange is added — the guard
     exists precisely so the local fix cannot become a full-data shuffle
     at scale.  (The real fix for a chronically under-split table is
-    rewriting its layout — operators/maintenance.compact_table.)
+    rewriting its layout into fewer, larger files.)
     """
     n_cores = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # Planned (not executed) partition count: splits from the file

@@ -30,6 +30,23 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _runtime_sql_conf() -> dict[str, str]:
+    """The SQL settings both ``get_spark`` and ``tune_session`` apply:
+    all can change after the session starts."""
+    return {
+        "spark.sql.shuffle.partitions": str(default_parallelism()),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        # Runtime bloom-filter join pruning: a selective dimension
+        # filter builds a bloom filter that prunes the fact scan
+        # before the shuffle — a large-join win at 100 TB, free here.
+        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+    }
+
+
 def get_spark(app_name: str = "aiesec_guc_spark") -> SparkSession:
     cpus = default_parallelism()
     # SPARK_GRAFT_MASTER overrides the scheduler — notably
@@ -47,16 +64,7 @@ def get_spark(app_name: str = "aiesec_guc_spark") -> SparkSession:
         )
     return (
         builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Runtime bloom-filter join pruning: a selective dimension
-        # filter builds a bloom filter that prunes the fact scan
-        # before the shuffle — a large-join win at 100 TB, free here.
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(map=_runtime_sql_conf())
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         # Long-lived sessions running many distinct queries generate
         # many codegen classes; the JVM's default 240 MB JIT code
@@ -87,16 +95,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
     The driver hands us a SparkSession it built; only set what can be
     changed post-start (shuffle partitions, AQE, timezone).
     """
-    conf = {
-        "spark.sql.shuffle.partitions": str(default_parallelism()),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-    }
-    for k, v in conf.items():
+    for k, v in _runtime_sql_conf().items():
         try:
             spark.conf.set(k, v)
         except Exception:  # pragma: no cover - static conf on some builds

@@ -453,33 +453,6 @@ def test_histogram_median2_matches_bruteforce(spark):
     assert got == expected
 
 
-def test_zorder_key_matches_python_interleave(spark):
-    # The SQL Morton expression must equal a reference bit-interleave
-    # for every (x, y) in a sampled 12-bit domain, and be monotone in
-    # locality: equal high bits of the key imply nearby (x, y) boxes.
-    import random
-
-    from pyspark.sql import functions as F
-
-    from aiesec_guc_spark.operators.maintenance import ZORDER_BITS, zorder_key_expr
-
-    rng = random.Random(42)
-    pts = [(rng.randrange(1 << ZORDER_BITS), rng.randrange(1 << ZORDER_BITS)) for _ in range(200)]
-
-    def ref(x, y):
-        z = 0
-        for i in range(ZORDER_BITS):
-            z |= ((x >> i) & 1) << (2 * i)
-            z |= ((y >> i) & 1) << (2 * i + 1)
-        return z
-
-    df = spark.createDataFrame(pts, "x long, y long").withColumn(
-        "z", F.expr(zorder_key_expr("x", "y"))
-    )
-    for row in df.collect():
-        assert row["z"] == ref(row["x"], row["y"]), (row["x"], row["y"])
-
-
 def test_decimal_div_is_exact_floor_division(spark):
     """The DECIMAL(38,0) widening contract several queries rely on
     (supplier HHI, temperature mixture, BM25 products): Spark's `div`

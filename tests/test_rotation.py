@@ -77,7 +77,8 @@ def test_day_retry_crash_between_renames_heals(spark, tmp_path, monkeypatch):
     """A same-day retry whose swap crashes between its two renames
     leaves the day only as its hidden ``__old_`` sibling: no reader or
     partition listing sees a half-written day, and the next write of
-    that day restores the old copy before replacing it."""
+    that day restores the old copy before replacing it and removes
+    every sibling the crash left."""
     from aiesec_guc_spark.operators.maintenance import list_partitions
 
     today, yesterday = snapshot_pair(spark)
@@ -108,9 +109,14 @@ def test_day_retry_crash_between_renames_heals(spark, tmp_path, monkeypatch):
     kept = spark.read.parquet(os.path.join(base, olds[0])).collect()
     assert sorted(map(tuple, kept)) == first
     assert list_partitions(base, "run_date") == ["2026-08-12"]
+    # a reader of the base sees only yesterday: the hidden old copy
+    # and the swap's temp are no extra partitions
+    in_window = spark.read.parquet(base).drop("run_date")
+    assert sorted(map(tuple, in_window.collect())) == sorted(map(tuple, yesterday.collect()))
 
     write_snapshot(today.limit(0), base, "2026-08-13")
-    assert not [f for f in os.listdir(base) if "__old_" in f]
+    # the healing write leaves nothing of the crashed swap behind
+    assert sorted(os.listdir(base)) == ["run_date=2026-08-12", "run_date=2026-08-13"]
     t2, y2 = read_snapshot_pair(spark, base)
     assert t2.count() == 0
     assert y2.count() == yesterday.count()

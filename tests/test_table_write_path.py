@@ -1,7 +1,6 @@
 """Every table write goes through one path: ``maintenance.swap_in``
-writes with ``sources.formats.write_table``, the only DataFrame
-``.write`` in the package, and only the streaming source probes reach
-the JVM's Hadoop FileSystem.
+holds the only DataFrame ``.write`` in the package, and only the
+streaming source probes reach the JVM's Hadoop FileSystem.
 
 A module that needs another writer or a Hadoop FileSystem handle has
 to be added here on purpose.
@@ -27,12 +26,7 @@ def _modules_matching(pattern: str) -> set[str]:
 
 def test_one_dataframe_writer():
     # DataFrame.write is a property: a call ``.write(`` is a file write
-    assert _modules_matching(r"\.write\b(?!\s*\()") == {"sources/formats.py"}
-    # ... and only swap_in calls write_table
-    assert _modules_matching(r"\bwrite_table\(") == {
-        "sources/formats.py",
-        "operators/maintenance.py",
-    }
+    assert _modules_matching(r"\.write\b(?!\s*\()") == {"operators/maintenance.py"}
 
 
 def test_only_stream_sources_reach_hadoop():
