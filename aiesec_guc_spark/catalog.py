@@ -26,8 +26,6 @@ from pyspark.sql import types as T
 
 from .schemas import TABLE_NAMES
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Columns stored as TIMESTAMP(NANOS) in the corpus parquet files.
 _NANO_TS_COLUMNS: dict[str, list[str]] = {
     "events": ["ts"],

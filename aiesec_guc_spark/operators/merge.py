@@ -35,7 +35,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .maintenance import parquet_table_exists, recover_interrupted_swap, swap_in
+from .maintenance import read_table, swap_in
 
 
 def merge_upsert(
@@ -54,15 +54,8 @@ def merge_upsert(
     swap writes: target and update rows as they enter the merge, and
     the merged rows as they are written.
     """
-    # heal a two-rename swap that crashed between its renames — the
-    # exists probe below must never mistake the crash window for a
-    # fresh table (which would silently drop every pre-merge row)
-    recover_interrupted_swap(target_path)
-    # recursive: partitioned tables keep parquet only in subdirs — a
-    # top-level listing would misclassify them as fresh and rmtree them
-    exists = parquet_table_exists(target_path)
-    if exists:
-        target = spark.read.parquet(target_path)
+    target = read_table(spark, target_path)
+    if target is not None:
         missing = set(target.columns) ^ set(updates.columns)
         if missing:
             raise ValueError(
@@ -94,5 +87,5 @@ def merge_upsert(
         .observe(obs_out, F.count(F.lit(1)).alias("n_after"))
     )
 
-    swap_in(merged, target_path, replace=exists)
+    swap_in(merged, target_path)
     return {**obs_in.get, **obs_out.get}

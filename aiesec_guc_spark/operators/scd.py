@@ -105,26 +105,17 @@ def scd2_apply(
     Spark listings skip dot-files, so the marker is invisible to
     readers.
     """
-    from .maintenance import parquet_table_exists, recover_interrupted_swap, swap_in
-
-    # Heal a swap that crashed between its two renames BEFORE probing
-    # existence: with the table renamed away and nothing renamed in,
-    # the probe would take the creation path and silently reinitialize
-    # the dimension from this batch alone — losing all closed history.
-    recover_interrupted_swap(target_path)
+    from .maintenance import read_table, swap_in
 
     out_cols = [key, *value_cols, "valid_from", "valid_to"]
 
-    # recursive: partitioned tables keep parquet only in subdirs — a
-    # top-level listing would misclassify them as fresh and rmtree them
-    exists = parquet_table_exists(target_path)
+    target = read_table(spark, target_path)
     # Both preconditions in one job, before any write: per (key, ts)
     # the batch's row count (> 1 is a duplicate), left-joined to the
     # key's open version so new keys still count (at or before its
     # valid_from is late).
     per_instant = changes.groupBy(key, ts_col).agg(F.count(F.lit(1)).alias("_n"))
-    if exists:
-        target = spark.read.parquet(target_path)
+    if target is not None:
         open_rows = target.filter(F.col("valid_to").isNull())
         closed = target.filter(F.col("valid_to").isNotNull())
         per_instant = per_instant.join(
@@ -181,5 +172,5 @@ def scd2_apply(
         F.count(F.lit(1)).alias("n_versions"),
         F.count(F.when(F.col("valid_to").isNull(), 1)).alias("n_open"),
     )
-    swap_in(result, target_path, replace=exists, marker=applied_marker)
+    swap_in(result, target_path, marker=applied_marker)
     return obs.get

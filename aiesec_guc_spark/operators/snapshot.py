@@ -10,11 +10,16 @@ ID 1338078 changed applicants 39→49 and does not appear in New.xlsx).
 Spark-first re-expression:
 
 - The snapshot pair is two DataFrames; at scale, a single table
-  partitioned by ``run_date`` where "yesterday" is the lag-1 partition
-  (partition pruning makes reading exactly two days cheap at 100 TB).
+  partitioned by ``run_date`` where "yesterday" is the lag-1 partition.
   Each day is written as its ``run_date=<date>`` directory through
   ``maintenance.swap_in``, the one local-only table swap every history
-  table uses, so a day is replaced whole and atomically.
+  table uses, so a day is replaced whole and atomically, and each day
+  is read straight from its own directory (``read_day``), so a read
+  touches one day's files, never the table.
+- The writer heals, readers never delete: ``write_snapshot``, the
+  table's one writer, heals every day a crashed swap left behind
+  before it writes, and the readers (``read_day``,
+  ``read_snapshot_pair``) only read.
 - The delta is a **left-anti join** on the key.  Catalyst picks
   ``BroadcastHashJoin(LeftAnti)`` when the yesterday key set is small
   (it is: keys only), which is exactly the hash-set probe the
@@ -28,7 +33,6 @@ Spark-first re-expression:
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -109,50 +113,50 @@ def write_snapshot(df: DataFrame, base_path: str, run_date: str) -> None:
     Replaces the reference's file rotation (Today→Yesterday copy,
     aiesec.py:20-21): prior partitions are never touched — history is
     retained (the reference's git-commit versioning, main.yml:37-52,
-    falls out for free) and readers prune to the partitions they
-    need.  A rerun of the SAME run_date (cron retry, crash recovery)
-    swaps that day's directory whole, so it never appends a second
-    copy of the rows and a retry that finds nothing empties the day.
-    An empty frame writes one schema-bearing zero-row file, so a quiet
-    day is still a readable partition.  A crash between the swap's
-    renames leaves the day's ``__old_`` sibling, which the next write
-    of that day restores first.  Local paths only: a URI
-    ``base_path`` raises ``swap_in``'s ``ValueError`` before any write.
-    """
-    from .maintenance import recover_interrupted_swap, swap_in
+    falls out for free) and readers read only the days they need.  A
+    rerun of the SAME run_date (cron retry, crash recovery) swaps that
+    day's directory whole, so it never appends a second copy of the
+    rows and a retry that finds nothing empties the day.  An empty
+    frame writes one schema-bearing zero-row file, so a quiet day is
+    still a readable partition.
 
-    part_dir = f"{base_path.rstrip('/')}/run_date={run_date}"
-    recover_interrupted_swap(part_dir)
-    swap_in(df, part_dir, replace=os.path.isdir(part_dir))
+    A crash between a swap's two renames leaves that day only as its
+    hidden ``__old_`` copy, invisible to the partition listing.  So
+    before it writes, this heals every day of ``base_path`` from one
+    listing (``maintenance.heal_partitions``): a retried day that
+    crashed is back before the next day looks for its yesterday.  A
+    day directory holding a non-table file is refused with
+    ``ValueError`` and left as it is.  Local paths only: a URI
+    ``base_path`` raises ``ValueError`` before any write.
+    """
+    from .maintenance import heal_partitions, swap_in
+
+    heal_partitions(base_path, "run_date")
+    swap_in(df, f"{base_path.rstrip('/')}/run_date={run_date}")
+
+
+def read_day(spark, base_path: str, run_date: str) -> DataFrame:
+    """One day of the snapshot table, read from its own
+    ``run_date=<date>`` directory: no other day is listed, and the
+    frame has no ``run_date`` column.  A reader: it never heals."""
+    return spark.read.parquet(f"{base_path.rstrip('/')}/run_date={run_date}")
 
 
 def read_snapshot_pair(spark, base_path: str) -> tuple[DataFrame, DataFrame]:
     """(today, yesterday) = the two most recent ``run_date``
-    partitions.  Both reads are partition-pruned — at 100 TB this
-    touches two days of files, never the table."""
-    from pyspark.errors import AnalysisException
+    partitions, each read from its own directory.
 
-    try:
-        snaps = spark.read.parquet(base_path)
-    except AnalysisException as exc:
-        # missing base, or a base with no readable partition — surface
-        # the same typed not-enough-days error the day-count check raises
-        detail = exc.getErrorClass() or str(exc)
-        raise ValueError(
-            f"need at least two run_date partitions at {base_path}, "
-            f"found none readable ({detail})"
-        ) from exc
-    # Day discovery is DIRECTORY-based, not row-based: a quiet day's
-    # partition holds a schema-bearing zero-row file, which a
-    # distinct-over-rows would silently skip — making the pair read
-    # diff today against the wrong (older) day.  Listing partition
-    # directories is also the O(#days) catalog operation, vs a scan
-    # of every partition's footers for the distinct.
+    Day discovery is DIRECTORY-based, not row-based: a quiet day's
+    partition holds a schema-bearing zero-row file, which a
+    distinct-over-rows would silently skip — making the pair read diff
+    today against the wrong (older) day.  Fewer than two days, a
+    missing ``base_path`` included, raise ``ValueError``."""
     from .maintenance import list_partitions
 
-    days = list_partitions(base_path, "run_date")[-2:][::-1]
+    try:
+        days = list_partitions(base_path, "run_date")[-2:]
+    except FileNotFoundError:
+        days = []
     if len(days) < 2:
         raise ValueError(f"need at least two run_date partitions at {base_path}, found {days}")
-    today = snaps.filter(F.col("run_date") == days[0]).drop("run_date")
-    yesterday = snaps.filter(F.col("run_date") == days[1]).drop("run_date")
-    return today, yesterday
+    return read_day(spark, base_path, days[1]), read_day(spark, base_path, days[0])

@@ -77,7 +77,8 @@ def run_pipeline(
     """One scheduled run, start to finish.  Returns a summary dict
     (rows scraped, delta rows, report path, whether a notification
     went out) so callers/tests can assert on the outcome."""
-    from .operators.snapshot import snapshot_delta, write_snapshot
+    from .operators.maintenance import list_partitions
+    from .operators.snapshot import read_day, snapshot_delta, write_snapshot
     from .sinks.report import notify_if_nonempty, render_email_html, write_styled_report
 
     snap_path = os.path.join(data_dir, "snapshots")
@@ -89,21 +90,16 @@ def run_pipeline(
     # as read_snapshot_pair): a quiet day's partition holds a zero-row
     # file that a distinct-over-rows would skip, silently diffing
     # today against an OLDER day — suppressing re-appearances as
-    # "not new".  Swap siblings are dot-prefixed and never listed.
+    # "not new".  Swap siblings are dot-prefixed and never listed, and
+    # write_snapshot has healed any day a crashed swap left as one.
     # ISO run_date strings order lexically.
-    from .operators.maintenance import list_partitions
-
     prior_dates = [
         d
         for d in list_partitions(snap_path, "run_date")
         if d < run_date
     ]
     if prior_dates:
-        yesterday = (
-            spark.read.parquet(snap_path)
-            .filter(F.col("run_date") == prior_dates[-1])
-            .drop("run_date")
-        )
+        yesterday = read_day(spark, snap_path, prior_dates[-1])
     else:
         yesterday = today.filter(F.lit(False))  # first run: all new
     # The day and its delta are a few hundred rows: collect each once

@@ -1,6 +1,6 @@
 """Minimal stdlib-only xlsx writer/reader — the package's one workbook
-codec.  Every xlsx the sinks write or read (the styled report of
-reference aiesec.py:148-183, S3/S6, and the snapshot edges in
+codec.  Every xlsx the sinks write (the styled report of reference
+aiesec.py:148-183, S3/S6, and the snapshot edges in
 ``sinks/report.py``) goes through this module; there is no second
 (openpyxl or pandas) Excel path.
 
@@ -15,9 +15,8 @@ slice the reference's report needs:
   highlight (two cellXfs beyond the default);
 - column autofit widths = longest cell + 3 (aiesec.py:175-181).
 
-The reader parses back inlineStr, sharedStrings, and plain numeric
-cells, so it reads both this writer's output and workbooks written by
-other tools (Excel, openpyxl, pandas).  Pure stdlib (zipfile +
+The reader parses back exactly what the writer writes: the one sheet
+part, inlineStr cells and empty (None) cells.  Pure stdlib (zipfile +
 ElementTree); no third-party imports anywhere.
 """
 
@@ -45,7 +44,7 @@ _ROOT_RELS = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
 
 _WORKBOOK = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
 <workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
-<sheets><sheet name="{name}" sheetId="1" r:id="rId1"/></sheets>
+<sheets><sheet name="Sheet1" sheetId="1" r:id="rId1"/></sheets>
 </workbook>"""
 
 _WORKBOOK_RELS = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
@@ -80,6 +79,8 @@ _STYLES = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
 
 HEADER_STYLE = 1
 PREMIUM_STYLE = 2
+#: autofit width = longest cell + this (the reference's ``max_length + 3``)
+AUTOFIT_PAD = 3
 
 
 def col_letter(i: int) -> str:
@@ -95,15 +96,13 @@ def write_xlsx(
     path: str,
     columns: list[str],
     rows: list[list],
-    sheet_name: str = "Sheet1",
     highlight_rows: set[int] | None = None,
-    autofit_pad: int = 3,
 ) -> str:
     """Write a styled single-sheet workbook: header row styled
     HEADER_STYLE, every cell of each 0-based data-row index in
     ``highlight_rows`` styled PREMIUM_STYLE, column widths = longest
-    cell + ``autofit_pad`` (the reference's ``max_length + 3``).
-    All values render as inlineStr of ``str(value)``."""
+    cell + AUTOFIT_PAD.  All values render as inlineStr of
+    ``str(value)``, and None as an empty cell."""
     highlight = highlight_rows or set()
     widths = [len(str(c)) for c in columns]
     for r in rows:
@@ -126,7 +125,7 @@ def write_xlsx(
         '<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">',
         "<cols>"
         + "".join(
-            f'<col min="{i}" max="{i}" width="{w + autofit_pad}" customWidth="1"/>'
+            f'<col min="{i}" max="{i}" width="{w + AUTOFIT_PAD}" customWidth="1"/>'
             for i, w in enumerate(widths, start=1)
         )
         + "</cols>",
@@ -154,130 +153,27 @@ def write_xlsx(
     with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
         z.writestr("[Content_Types].xml", _CONTENT_TYPES)
         z.writestr("_rels/.rels", _ROOT_RELS)
-        # escape() alone leaves double quotes intact, which would break
-        # out of the name="..." attribute and corrupt the workbook.
-        z.writestr(
-            "xl/workbook.xml",
-            _WORKBOOK.format(name=escape(sheet_name, {'"': "&quot;"})),
-        )
+        z.writestr("xl/workbook.xml", _WORKBOOK)
         z.writestr("xl/_rels/workbook.xml.rels", _WORKBOOK_RELS)
         z.writestr("xl/styles.xml", _STYLES)
         z.writestr("xl/worksheets/sheet1.xml", "".join(parts))
     return path
 
 
-def _cell_text(c: ET.Element, shared: list[str]) -> str | None:
-    t = c.get("t")
-    if t == "inlineStr":
-        node = c.find(f"{_NS}is")
-        return "".join(e.text or "" for e in node.iter(f"{_NS}t")) if node is not None else ""
-    v = c.find(f"{_NS}v")
-    if v is None:
+def _cell_text(c: ET.Element) -> str | None:
+    node = c.find(f"{_NS}is")
+    if node is None:
         return None
-    if t == "s":
-        return shared[int(v.text)]
-    return v.text
+    return "".join(e.text or "" for e in node.iter(f"{_NS}t"))
 
 
-def _col_index(ref: str) -> int:
-    """A1-style ref → 0-based column index."""
-    i = 0
-    for ch in ref:
-        if ch.isalpha():
-            i = i * 26 + (ord(ch.upper()) - 64)
-        else:
-            break
-    return i - 1
-
-
-_REL_NS = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}"
-_PKG_REL_NS = "{http://schemas.openxmlformats.org/package/2006/relationships}"
-
-
-def _sheet_part(z: "zipfile.ZipFile", sheet_name: str | None) -> str:
-    """Resolve a sheet's worksheet part via xl/workbook.xml +
-    xl/_rels/workbook.xml.rels — workbook ORDER and NAMES are defined
-    there, not by part filenames (after sheet deletion or reorder the
-    first visible sheet can be stored as sheet2.xml, and sheet10.xml
-    sorts before sheet2.xml).  ``sheet_name=None`` means the first
-    sheet in workbook order."""
-    names = set(z.namelist())
-    if "xl/workbook.xml" in names and "xl/_rels/workbook.xml.rels" in names:
-        wb = ET.fromstring(z.read("xl/workbook.xml"))
-        rels = ET.fromstring(z.read("xl/_rels/workbook.xml.rels"))
-        rel_target = {
-            r.get("Id"): r.get("Target")
-            for r in rels.iter(f"{_PKG_REL_NS}Relationship")
-        }
-        sheets = [
-            (s.get("name"), s.get(f"{_REL_NS}id"))
-            for s in wb.iter(f"{_NS}sheet")
-        ]
-        if sheets:
-            if sheet_name is None:
-                rid = sheets[0][1]
-            else:
-                match = [rid for nm, rid in sheets if nm == sheet_name]
-                if not match:
-                    raise ValueError(
-                        f"sheet {sheet_name!r} not in workbook "
-                        f"(has {[nm for nm, _ in sheets]})"
-                    )
-                rid = match[0]
-            target = rel_target.get(rid, "")
-            # Targets come in three spec-legal shapes: absolute from
-            # the package root ("/xl/worksheets/sheet2.xml"),
-            # package-rooted without the slash, or relative to xl/.
-            # Misresolving one would fall through to the lexical
-            # fallback and silently read the WRONG sheet.
-            if target.startswith("/"):
-                part = target[1:]
-            elif target.startswith("xl/"):
-                part = target
-            else:
-                part = f"xl/{target}"
-            if part in names:
-                return part
-    # fallback for minimal workbooks without a rels part
-    parts = sorted(
-        n for n in names if n.startswith("xl/worksheets/") and n.endswith(".xml")
-    )
-    if not parts:
-        raise ValueError("no worksheet part in workbook")
-    return parts[0]
-
-
-def read_xlsx(
-    path: str, sheet_name: str | None = None
-) -> tuple[list[str], list[list[str | None]]]:
-    """Parse a workbook sheet → (columns, rows of str|None) —
-    ``sheet_name=None`` reads the first sheet in WORKBOOK order
-    (resolved via workbook.xml + its rels, never part-name order).
-    Handles inlineStr (this writer), sharedStrings (openpyxl/pandas
-    writers), and bare numeric cells."""
+def read_xlsx(path: str) -> tuple[list[str], list[list[str | None]]]:
+    """Parse a workbook ``write_xlsx`` wrote → (columns, rows of
+    str|None).  The writer writes every cell of a row, None ones as
+    empty cells, so a cell's position is its column."""
     with zipfile.ZipFile(path) as z:
-        shared: list[str] = []
-        if "xl/sharedStrings.xml" in z.namelist():
-            root = ET.fromstring(z.read("xl/sharedStrings.xml"))
-            shared = [
-                "".join(t.text or "" for t in si.iter(f"{_NS}t"))
-                for si in root.iter(f"{_NS}si")
-            ]
-        root = ET.fromstring(z.read(_sheet_part(z, sheet_name)))
-    out: list[list[str | None]] = []
-    for row in root.iter(f"{_NS}row"):
-        cells: list[str | None] = []
-        for c in row.iter(f"{_NS}c"):
-            ref = c.get("r")
-            # The r attribute is optional per spec: without it a cell
-            # occupies the next position, never position -1.
-            idx = _col_index(ref) if ref else len(cells)
-            while len(cells) < idx:
-                cells.append(None)
-            cells.append(_cell_text(c, shared))
-        out.append(cells)
-    if not out:
-        return [], []
+        root = ET.fromstring(z.read("xl/worksheets/sheet1.xml"))
+    out = [[_cell_text(c) for c in row.iter(f"{_NS}c")] for row in root.iter(f"{_NS}row")]
     header = [v if v is not None else "" for v in out[0]]
     # Normalize symmetrically: a data row may be WIDER than the header
     # (trailing unnamed cells — legal xlsx); pad the header with
@@ -287,19 +183,3 @@ def read_xlsx(
     header += [f"_c{i}" for i in range(len(header), width)]
     rows = [r + [None] * (width - len(r)) for r in out[1:]]
     return header, rows
-
-
-def read_styles(path: str) -> dict:
-    """Style audit for tests: per-cell style ids of the first sheet
-    plus the declared column widths — enough to assert the header
-    fill, premium highlight, and autofit survived the round trip."""
-    with zipfile.ZipFile(path) as z:
-        root = ET.fromstring(z.read("xl/worksheets/sheet1.xml"))
-    cell_styles: dict[str, int] = {}
-    for c in root.iter(f"{_NS}c"):
-        cell_styles[c.get("r", "")] = int(c.get("s", "0"))
-    widths = {
-        int(col.get("min")): float(col.get("width"))
-        for col in root.iter(f"{_NS}col")
-    }
-    return {"cell_styles": cell_styles, "col_widths": widths}

@@ -20,7 +20,6 @@ DEPLOYMENT_SETTINGS = {
     "SPARK_GRAFT_CHECKPOINT_DIR",
     "SPARK_GRAFT_SMTP_USER",
     "SPARK_GRAFT_SMTP_PASSWORD",
-    "SPARK_GRAFT_SF_DIR",
 }
 
 

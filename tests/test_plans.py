@@ -8,16 +8,16 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from aiesec_guc_spark.catalog import load_table
-from aiesec_guc_spark.plans.explain import (
+from aiesec_guc_spark.plans.explain import final_adaptive_plan, formatted_plan
+from aiesec_guc_spark.queries import spark_queries
+from helpers import (
     analyzed_plan,
-    final_adaptive_plan,
-    formatted_plan,
+    global_window_count,
     has_partial_aggregation,
     pushed_filters,
     read_schema_columns,
     uses_broadcast_join,
 )
-from aiesec_guc_spark.queries import spark_queries
 
 
 def test_snapshot_delta_is_broadcast_anti_join(spark, sf_dir):
@@ -124,8 +124,6 @@ def test_offset_merge_rank_queries_have_no_global_window(
     # corpus would otherwise pick (the small path's window also hides
     # behind the materialize checkpoint, making the default assertion
     # vacuous here).
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     monkeypatch.setattr("aiesec_guc_spark.operators.quantiles.RANK_SMALL_BYTES", 0)
     for name in (
         "funnel_conversion_latency",
@@ -686,7 +684,6 @@ def test_exact_global_rank_matches_naive_window(spark, monkeypatch, small_bytes)
     no partition-less Window in the plan) and the single-partition
     small path (gate forced wide open)."""
     from aiesec_guc_spark.operators.quantiles import exact_global_rank
-    from aiesec_guc_spark.plans.explain import global_window_count
 
     monkeypatch.setattr(
         "aiesec_guc_spark.operators.quantiles.RANK_SMALL_BYTES", int(small_bytes)
@@ -750,8 +747,6 @@ def test_round8_ops_plan_shapes(spark, sf_dir, monkeypatch):
     # embedding-QA ranks run through the offset merge (no
     # partition-less Window — r16 size gate disabled so the scale
     # plan is what gets pinned); nothing plans a cartesian product.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     monkeypatch.setattr("aiesec_guc_spark.operators.quantiles.RANK_SMALL_BYTES", 0)
 
     q = spark_queries()
@@ -774,8 +769,6 @@ def test_bloom_decontaminate_broadcasts_filter_words(spark, sf_dir):
     # (≤66 word rows regardless of benchmark size), and nothing in
     # the pipeline may plan a cartesian product or a global window —
     # the corpus side streams map-side through the probe join.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["decontaminate_bloom"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "BroadcastHashJoin" in plan
@@ -821,7 +814,6 @@ def test_exact_global_cummax_matches_naive_window(spark, monkeypatch, small_byte
     the r16 size gate (offset merge plans no partition-less Window;
     the small path IS the one-window plan)."""
     from aiesec_guc_spark.operators.quantiles import exact_global_cummax
-    from aiesec_guc_spark.plans.explain import global_window_count
 
     monkeypatch.setattr(
         "aiesec_guc_spark.operators.quantiles.RANK_SMALL_BYTES", int(small_bytes)
@@ -851,8 +843,6 @@ def test_pareto_frontier_no_global_window(spark, sf_dir, monkeypatch):
     # or a cartesian dominance product AT SCALE — pinned with the r16
     # size gate disabled (the tiny test corpus legitimately takes the
     # one-window small path by default).
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     monkeypatch.setattr("aiesec_guc_spark.operators.quantiles.RANK_SMALL_BYTES", 0)
     df = spark_queries()["pareto_frontier_customers"](spark, sf_dir)
     assert global_window_count(df) == 0
@@ -861,8 +851,6 @@ def test_pareto_frontier_no_global_window(spark, sf_dir, monkeypatch):
 
 def test_twap_window_is_per_user(spark, sf_dir):
     # E152: the lead() window partitions by user_id — never global.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["events_twap_by_user"](spark, sf_dir)
     assert global_window_count(df) == 0
     assert has_partial_aggregation(df)
@@ -882,8 +870,6 @@ def test_bm25_is_projection_plus_heap(spark, sf_dir):
 def test_interval_overlaps_is_key_partitioned(spark, sf_dir):
     # E154: the interval self-join must block on the customer key —
     # an equi-join, never a cartesian/broadcast-nested-loop all-pairs.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["order_interval_overlaps"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
@@ -893,8 +879,6 @@ def test_interval_overlaps_is_key_partitioned(spark, sf_dir):
 
 def test_cusum_windows_are_per_type(spark, sf_dir):
     # E155: every CUSUM window partitions by event_type — never global.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["events_cusum_changepoint"](spark, sf_dir)
     assert global_window_count(df) == 0
     assert has_partial_aggregation(df)
@@ -914,8 +898,6 @@ def test_hll_intersection_single_pass(spark, sf_dir):
     # E157: the sketch build is one scan with map-side-combinable
     # aggregates; no shuffle of raw user ids beyond the one exact-twin
     # group-by, and no global window anywhere.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["hll_intersection_users"](spark, sf_dir)
     assert global_window_count(df) == 0
     assert has_partial_aggregation(df)
@@ -926,8 +908,6 @@ def test_mad_outliers_histogram_shape(spark, sf_dir):
     # E158: medians must come off the bounded (type, cents) histogram —
     # map-side-combinable aggregates, windows only over histogram
     # frames (partitioned by type), never a raw-event sort.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["events_value_mad_outliers"](spark, sf_dir)
     assert global_window_count(df) == 0
     assert has_partial_aggregation(df)
@@ -955,8 +935,6 @@ def test_random_projection_is_pure_map(spark, sf_dir):
 def test_ols_trend_sufficient_stats_shape(spark, sf_dir):
     # E162: both aggregate layers must be map-side combinable, the dim
     # join broadcast, and no window/sort anywhere.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["nation_revenue_trend_ols"](spark, sf_dir)
     plan = formatted_plan(df)
     assert has_partial_aggregation(df)
@@ -967,8 +945,6 @@ def test_ols_trend_sufficient_stats_shape(spark, sf_dir):
 def test_lateness_audit_window_is_per_user(spark, sf_dir):
     # E163: the running high-water mark must partition by user —
     # never a global window — and the type rollup must map-combine.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["events_watermark_lateness_audit"](spark, sf_dir)
     assert global_window_count(df) == 0
     assert has_partial_aggregation(df)
@@ -987,8 +963,6 @@ def test_installment_expansion_is_codegen_generate(spark, sf_dir):
 def test_benford_is_scan_plus_nine_cells(spark, sf_dir):
     # E165: a projection to d in 1..9, one map-combinable count, one
     # broadcast total — no window, no cartesian.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["orders_benford_first_digit"](spark, sf_dir)
     assert global_window_count(df) == 0
     assert has_partial_aggregation(df)
@@ -997,8 +971,6 @@ def test_benford_is_scan_plus_nine_cells(spark, sf_dir):
 
 def test_dispersion_sufficient_stats_shape(spark, sf_dir):
     # E166: same two-aggregate sufficient-statistics fold as OLS.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["events_arrival_dispersion"](spark, sf_dir)
     assert global_window_count(df) == 0
     assert has_partial_aggregation(df)
@@ -1017,8 +989,6 @@ def test_lsh_band_sweep_no_cross_product(spark, sf_dir):
 def test_leadtime_percentiles_histogram_shape(spark, sf_dir):
     # E168: rank hunt over the (supplier, days) histogram — windows
     # partition by supplier, aggregates map-combine, no cartesian.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["shipping_leadtime_percentiles"](spark, sf_dir)
     assert global_window_count(df) == 0
     assert has_partial_aggregation(df)
@@ -1040,8 +1010,6 @@ def test_vocab_growth_single_pass(spark, sf_dir):
 def test_behavior_diversity_two_combinable_aggs(spark, sf_dir):
     # E170: (user, type) grain then user grain — both partial-agg
     # exchanges, no window, no join.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["user_behavior_diversity"](spark, sf_dir)
     plan = formatted_plan(df)
     assert has_partial_aggregation(df)
@@ -1062,8 +1030,6 @@ def test_source_quality_shrunk_broadcast_global(spark, sf_dir):
 def test_cluster_histogram_never_builds_pairs(spark, sf_dir):
     # E172: two combinable aggregates, no join at all — a template
     # flood is one count row, never a pair blowup.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["dedup_cluster_size_histogram"](spark, sf_dir)
     plan = formatted_plan(df)
     assert has_partial_aggregation(df)
@@ -1076,8 +1042,6 @@ def test_bigram_lm_no_posexplode_self_join(spark, sf_dir):
     # must contain exactly one Generate (the explode of the built
     # bigram array) and no cartesian; the median window partitions by
     # doc_id.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["text_bigram_lm_quality"](spark, sf_dir)
     plan = formatted_plan(df)
     assert global_window_count(df) == 0
@@ -1088,8 +1052,6 @@ def test_bigram_lm_no_posexplode_self_join(spark, sf_dir):
 def test_zipf_slope_combinable_folds(spark, sf_dir):
     # E174: rank window partitions by lang (never global); the OLS
     # fold is a partial aggregation.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["text_zipf_octave_slope"](spark, sf_dir)
     assert global_window_count(df) == 0
     assert has_partial_aggregation(df)
@@ -1099,8 +1061,6 @@ def test_zipf_slope_combinable_folds(spark, sf_dir):
 def test_hard_negatives_no_cross_product(spark, sf_dir):
     # E175: candidates come from the banded bucket equi-join — no
     # all-pairs anywhere, and the per-anchor window is partitioned.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["sample_hard_negatives"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
@@ -1111,8 +1071,6 @@ def test_hard_negatives_no_cross_product(spark, sf_dir):
 def test_dim_variance_single_combinable_fold(spark, sf_dir):
     # E176: posexplode projection + ONE partial aggregation to
     # dim-count rows; no window, no join.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["embedding_dim_variance"](spark, sf_dir)
     plan = formatted_plan(df)
     assert has_partial_aggregation(df)
@@ -1145,8 +1103,6 @@ def test_shingle_hotspot_heap_head(spark, sf_dir):
 def test_session_duration_hist_single_user_shuffle(spark, sf_dir):
     # E179: both sessionizer windows share the user-keyed sort; the
     # two aggregates after it are combinable; no global window.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["session_duration_histogram"](spark, sf_dir)
     assert global_window_count(df) == 0
     assert has_partial_aggregation(df)
@@ -1178,8 +1134,6 @@ def test_substring_windows_no_pairwise_join(spark, sf_dir):
     # hash plus one equi-join back — never a doc×doc candidate join,
     # never a window function, and the explode must keep partial
     # aggregation (within-doc distinct collapses before the shuffle).
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["dedup_substring_windows"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
@@ -1209,8 +1163,6 @@ def test_leakage_safe_split_cluster_grain(spark, sf_dir):
     # E185: after the (plan-asserted elsewhere) LSH+CC machinery, the
     # split logic must stay cluster-grain — combinable aggregates, no
     # global window, no cartesian anywhere in the composed plan.
-    from aiesec_guc_spark.plans.explain import global_window_count
-
     df = spark_queries()["corpus_split_leakage_safe"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan

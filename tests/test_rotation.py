@@ -66,10 +66,13 @@ def test_rotation_reads_prune_partitions(spark):
         for d in ["2026-08-10", "2026-08-11", "2026-08-12"]:
             write_snapshot(yesterday, base, d)
         write_snapshot(today, base, "2026-08-13")
-        t2, _ = read_snapshot_pair(spark, base)
-        # partition filter appears in the scan
-        plan = t2._jdf.queryExecution().executedPlan().toString()
-        assert "run_date" in plan
+        t2, y2 = read_snapshot_pair(spark, base)
+        # each side reads only its own day's directory
+        for df, d in ((t2, "2026-08-13"), (y2, "2026-08-12")):
+            files = df.inputFiles()
+            assert files
+            assert all(f"/run_date={d}/" in f for f in files), files
+            assert "run_date" not in df.columns
         assert t2.count() == today.count()
 
 
@@ -122,6 +125,23 @@ def test_day_retry_crash_between_renames_heals(spark, tmp_path, monkeypatch):
     assert y2.count() == yesterday.count()
     assert list_partitions(base, "run_date") == ["2026-08-12", "2026-08-13"]
     assert sorted(os.listdir(f"{base}/run_date=2026-08-12")) == prior_files
+
+
+def test_write_refuses_a_day_directory_holding_a_non_table_file(spark, tmp_path):
+    """A ``run_date=`` directory with no parquet data but a visible
+    file is not a table skeleton: the day write refuses it with the
+    same ValueError as the other swap callers, before writing, and
+    the file survives."""
+    today, _ = snapshot_pair(spark)
+    base = tmp_path / "snaps"
+    day = base / "run_date=2026-08-13"
+    day.mkdir(parents=True)
+    (day / "notes.txt").write_text("keep me")
+    with pytest.raises(ValueError, match="refusing to clear"):
+        write_snapshot(today, str(base), "2026-08-13")
+    assert (day / "notes.txt").read_text() == "keep me"
+    assert os.listdir(base) == ["run_date=2026-08-13"]
+    assert os.listdir(day) == ["notes.txt"]
 
 
 def test_empty_yesterday_then_real_today_delta(spark):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 
 from aiesec_guc_spark.run import run_pipeline
 from aiesec_guc_spark.sinks.report import (
@@ -51,13 +52,13 @@ def test_styled_xlsx_autofit(spark, tmp_path):
     """Autofit parity (aiesec.py:175-181): every column of the styled
     report gets a width — real xlsx bytes written by xlsxlite and
     audited via its stdlib XML reader."""
-    from aiesec_guc_spark.sinks import xlsxlite
+    from helpers import read_styles
 
     today, _ = snapshot_pair(spark)
     t_path = write_styled_report(today.toPandas(), str(tmp_path / "Today"))
     assert t_path.endswith(".xlsx")
     n_cols = len(today.columns)
-    styles = xlsxlite.read_styles(t_path)
+    styles = read_styles(t_path)
     widths = [styles["col_widths"].get(i) for i in range(1, n_cols + 1)]
     assert all(w and w >= 3 for w in widths)
 
@@ -85,8 +86,6 @@ def test_cli_rejects_incoherent_flag_combinations(tmp_path):
     # be refused by read_pages only after a Spark session has started;
     # --smtp-host with no recipients would raise
     # SMTPRecipientsRefused only AFTER the whole pipeline ran.
-    import pytest
-
     from aiesec_guc_spark.run import main
 
     base = [
@@ -143,3 +142,40 @@ def test_quiet_day_resets_the_delta_baseline(spark, tmp_path):
     s3 = run_pipeline(spark, data_dir, out_dir, "2026-08-14", send=sent.append)
     assert s3["delta_rows"] == 6  # vs the empty 08-13, NOT the full 08-12
     assert s3["notified"]
+
+
+def test_stranded_retry_day_is_yesterday_of_the_next_day(spark, tmp_path, monkeypatch):
+    """A retry of day D that crashes between its swap's two renames
+    leaves D only as its hidden ``__old_`` copy.  The next day's run
+    must heal D before it looks for its yesterday, and diff against D
+    (nothing new), never against the older quiet day before it."""
+    from aiesec_guc_spark.operators.snapshot import write_snapshot
+    from aiesec_guc_spark.sources.fixtures import snapshot_pair as _pair
+
+    data_dir, out_dir = str(tmp_path / "data"), str(tmp_path / "out")
+    snap_path = os.path.join(data_dir, "snapshots")
+    today_frame, _ = _pair(spark)
+    write_snapshot(today_frame.limit(0), snap_path, "2026-08-12")  # quiet day
+    assert run_pipeline(spark, data_dir, out_dir, "2026-08-13")["delta_rows"] == 6
+
+    real_rename = os.rename
+    renames = []
+
+    def crash_on_second(src, dst):
+        renames.append(src)
+        if len(renames) == 2:
+            raise OSError("simulated crash between the swap's renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_second)
+    with pytest.raises(OSError, match="simulated crash"):
+        run_pipeline(spark, data_dir, out_dir, "2026-08-13")  # the retry
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(os.path.join(snap_path, "run_date=2026-08-13"))
+
+    s = run_pipeline(spark, data_dir, out_dir, "2026-08-14")
+    assert s["delta_rows"] == 0
+    assert not s["notified"]
+    assert sorted(os.listdir(snap_path)) == [
+        "run_date=2026-08-12", "run_date=2026-08-13", "run_date=2026-08-14"
+    ]

@@ -1,6 +1,8 @@
 """Every table write goes through one path: ``maintenance.swap_in``
-holds the only DataFrame ``.write`` in the package, and only the
-streaming source probes reach the JVM's Hadoop FileSystem.
+holds the only DataFrame ``.write`` in the package, only
+``operators/maintenance.py`` spells out the heal-probe-clear steps
+around it, and only the streaming source probes reach the JVM's Hadoop
+FileSystem.
 
 A module that needs another writer or a Hadoop FileSystem handle has
 to be added here on purpose.
@@ -34,3 +36,11 @@ def test_only_stream_sources_reach_hadoop():
     # and other schemes included) through the Hadoop FileSystem; they
     # read only and write no table
     assert _modules_matching(r"org\.apache\.hadoop") == {"streaming/incremental.py"}
+
+
+def test_only_maintenance_heals_probes_and_clears():
+    # writers make two calls (read_table, swap_in); the one existence
+    # rule and the healing live behind them
+    assert _modules_matching(
+        r"\b(recover_interrupted_swap|parquet_table_exists|clear_table_dir)\b"
+    ) == {"operators/maintenance.py"}
