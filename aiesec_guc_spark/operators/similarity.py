@@ -93,8 +93,8 @@ UNROLLED_DOT_MIN_EVALS = 600_000
 
 def estimated_scan_rows(df, min_row_bytes: int = 256) -> int | None:
     """Conservative row-count estimate for an embedding-shaped scan,
-    from Catalyst's optimized-plan size estimate (same source as
-    quantiles._range_partitions).
+    from Catalyst's optimized-plan size estimate
+    (``plans.stats.plan_size_bytes``).
 
     ``min_row_bytes`` is a LOWER bound on the on-disk bytes of one row
     (a 64×float32 embedding alone is 256 B and compresses poorly), so
@@ -152,68 +152,22 @@ def plane_weights(plane: int, dim: int = EMBEDDING_DIM) -> list[float]:
     return [plane_weight(plane, i) for i in range(dim)]
 
 
-def hyperplane_bucket(vec: Column, n_planes: int, dim: int = EMBEDDING_DIM) -> Column:
-    """Sign-pattern LSH bucket: bit p set iff dot(vec, plane_p) > 0.
+def check_block_sizes(df, block_cols: list[str], max_block_size: int) -> None:
+    """Raise ``RuntimeError`` when a block of ``df`` (rows sharing
+    ``block_cols``) holds more than ``max_block_size`` rows.
 
-    Plane components are md5-derived constants (``plane_weight``), so
-    the whole expression constant-folds into codegen and is
-    reproducible in SQL engines.
+    Blocked all-pairs comparison is O(n²) in the block size, so one
+    hot block (a skewed label) dominates the whole job.  Callers pair
+    against an exact all-pairs oracle, so an oversized block fails
+    loudly instead of silently changing semantics.  Block sizes come
+    from a group-by (one row per block); the check runs one job.
     """
-    out = F.lit(0)
-    for p in range(n_planes):
-        dot = hof_weighted_sum(vec, plane_weights(p, dim))
-        out = out + F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return out
-
-
-def subdivide_oversized_blocks(
-    df,
-    block_cols: list[str],
-    vec_col: str,
-    max_block_size: int,
-    n_planes: int = 4,
-    dim: int = EMBEDDING_DIM,
-    on_oversize: str = "subdivide",
-):
-    """Append a ``sub_block`` column that caps within-block pairing.
-
-    Blocked all-pairs comparison is O(n²) in the block size — one hot
-    block (a skewed label) dominates the whole job at scale.  This
-    guard keeps ``sub_block = 0`` for blocks within the cap (exact
-    all-pairs downstream) and assigns a hyperplane-LSH bucket to rows
-    of oversized blocks, so pairing on (block, sub_block) splits a hot
-    block into ~2^n_planes buckets — trading recall for a bounded
-    worst case, the same contract as the MinHash-LSH path.
-
-    ``on_oversize="error"`` raises instead of subdividing — for
-    callers whose results are verified against an exact all-pairs
-    oracle: subdivision there would make the comparison diverge by
-    construction, so an oversized block must fail loudly, not
-    silently change semantics.
-
-    Block sizes come from a group-by (tiny result: one row per block)
-    joined back broadcast — no full-table window shuffle.
-    """
-    if on_oversize not in ("subdivide", "error"):
-        raise ValueError(f"on_oversize must be 'subdivide' or 'error', got {on_oversize!r}")
     sizes = df.groupBy(*block_cols).agg(F.count(F.lit(1)).alias("_blk_n"))
-    oversized = sizes.filter(F.col("_blk_n") > max_block_size).select(
-        *block_cols, F.lit(True).alias("_oversized")
-    )
-    if on_oversize == "error":
-        hot = oversized.limit(5).collect()
-        if hot:
-            desc = ", ".join(str(tuple(r[c] for c in block_cols)) for r in hot)
-            raise RuntimeError(
-                f"block(s) {desc} exceed max_block_size={max_block_size}: this "
-                "caller pairs against an exact all-pairs oracle, so LSH "
-                "subdivision would diverge by construction — raise the cap, "
-                "re-block, or switch to on_oversize='subdivide' with an "
-                "oracle that applies the same sub_block grid"
-            )
-    flagged = df.join(F.broadcast(oversized), on=list(block_cols), how="left")
-    bucket = hyperplane_bucket(F.col(vec_col), n_planes, dim)
-    return flagged.withColumn(
-        "sub_block",
-        F.when(F.col("_oversized").isNull(), F.lit(0)).otherwise(bucket),
-    ).drop("_oversized")
+    hot = sizes.filter(F.col("_blk_n") > max_block_size).limit(5).collect()
+    if hot:
+        desc = ", ".join(str(tuple(r[c] for c in block_cols)) for r in hot)
+        raise RuntimeError(
+            f"block(s) {desc} exceed max_block_size={max_block_size}: this "
+            "caller pairs against an exact all-pairs oracle — raise the "
+            "cap or re-block"
+        )

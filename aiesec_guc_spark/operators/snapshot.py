@@ -38,6 +38,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..schemas import OPPORTUNITY_SCHEMA
+
 
 def snapshot_delta(
     today: DataFrame, yesterday: DataFrame, keys: Sequence[str]
@@ -128,6 +130,10 @@ def write_snapshot(df: DataFrame, base_path: str, run_date: str) -> None:
     day directory holding a non-table file is refused with
     ``ValueError`` and left as it is.  Local paths only: a URI
     ``base_path`` raises ``ValueError`` before any write.
+
+    The frame is written in whatever schema it has, but the readers
+    (``read_day``, ``read_snapshot_pair``) read ``OPPORTUNITY_SCHEMA``:
+    a table meant to be read back must hold opportunity rows.
     """
     from .maintenance import heal_partitions, swap_in
 
@@ -138,8 +144,16 @@ def write_snapshot(df: DataFrame, base_path: str, run_date: str) -> None:
 def read_day(spark, base_path: str, run_date: str) -> DataFrame:
     """One day of the snapshot table, read from its own
     ``run_date=<date>`` directory: no other day is listed, and the
-    frame has no ``run_date`` column.  A reader: it never heals."""
-    return spark.read.parquet(f"{base_path.rstrip('/')}/run_date={run_date}")
+    frame has no ``run_date`` column.  A reader: it never heals.
+
+    The read declares ``OPPORTUNITY_SCHEMA``, the schema
+    ``extract_cards`` produces and ``run_pipeline`` stores, so it runs
+    no footer-reading inference job.  The table must hold opportunity
+    rows: a day written in another schema reads as all-null string
+    columns, with no error."""
+    return spark.read.schema(OPPORTUNITY_SCHEMA).parquet(
+        f"{base_path.rstrip('/')}/run_date={run_date}"
+    )
 
 
 def read_snapshot_pair(spark, base_path: str) -> tuple[DataFrame, DataFrame]:
@@ -150,7 +164,9 @@ def read_snapshot_pair(spark, base_path: str) -> tuple[DataFrame, DataFrame]:
     partition holds a schema-bearing zero-row file, which a
     distinct-over-rows would silently skip — making the pair read diff
     today against the wrong (older) day.  Fewer than two days, a
-    missing ``base_path`` included, raise ``ValueError``."""
+    missing ``base_path`` included, raise ``ValueError``.  Both days
+    are read as ``OPPORTUNITY_SCHEMA`` (see ``read_day``), so the
+    table must hold opportunity rows."""
     from .maintenance import list_partitions
 
     try:

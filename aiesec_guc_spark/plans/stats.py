@@ -1,17 +1,15 @@
 """Catalyst plan-statistics access.
 
-One robust accessor for the optimizer's size estimate, shared by every
-size-adaptive decision in the package (offset-merge range-partition
-counts, the BPE vocabulary broadcast gate, the dot-kernel gate).
+One robust accessor for the optimizer's size estimate, read by the
+dot-kernel gate (``operators/similarity.py`` ``estimated_scan_rows``).
 
 Why it exists (r16): ``stats().sizeInBytes()`` crosses py4j as a PLAIN
 PYTHON INT on this runtime (py4j auto-converts the scala BigInt), so
 the original per-site ``int(x.toString())`` raised AttributeError and
-every caller silently fell into its "estimate unavailable" fallback —
-the r15 scale-adaptive range partitioning was a no-op.  This helper
-handles both surfaces (direct int, JavaObject with toString) and is
-unit-tested against a live scan so the regression can't reappear
-silently.
+every caller silently fell into its "estimate unavailable" fallback.
+This helper handles both surfaces (direct int, JavaObject with
+toString) and is unit-tested against a live scan so the regression
+can't reappear silently.
 """
 
 from __future__ import annotations

@@ -1042,11 +1042,9 @@ def _dot(a, b, est_evals=None) -> F.Column:
 _EMB_PAIR_FANOUT = 100
 
 
-# Any label block above this row count is subdivided by hyperplane-LSH
-# sub-buckets before pairing (bounded worst case instead of O(n²) on a
-# hot label).  Testdata blocks are far below the cap at every SF, so
-# the guard is semantics-preserving there and the all-pairs oracle
-# stays exact.
+# Any label block above this row count fails the query before pairing
+# (O(n²) on a hot label).  Testdata blocks are far below the cap at
+# every SF.
 EMB_BLOCK_CAP = 4096
 
 
@@ -1057,12 +1055,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     double accumulation — bit-identical to the oracle's list_sum).
 
     The oracle is exact all-pairs, so this query runs the block-size
-    guard in ``on_oversize="error"`` mode: a label block above
-    ``EMB_BLOCK_CAP`` raises with a clear message instead of silently
-    switching to LSH sub-buckets the oracle doesn't model (a red gate
-    row would otherwise be divergence-by-construction, not a bug).
-    The ``subdivide`` mode remains the documented 100 TB path for
-    callers without an exact-oracle contract.
+    check first: a label block above ``EMB_BLOCK_CAP`` raises with a
+    clear message instead of pairing O(n²) on a hot label.
 
     Dot-impl trade, measured at sf0.1 (~200 k blocked pairs): the
     unrolled dot's constant ~4 s whole-stage recompile does NOT
@@ -1076,7 +1070,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluations and unrolled above — each deployment gets its
     measured-fastest physical shape, and the doubles are
     bit-identical either way."""
-    from ..operators.similarity import estimated_scan_rows, subdivide_oversized_blocks
+    from ..operators.similarity import check_block_sizes, estimated_scan_rows
 
     base = load_table(spark, sf_dir, "embeddings")
     # r16 kernel gate: per-ROW norms gate on the row estimate; the
@@ -1087,17 +1081,14 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = estimated_scan_rows(base)
     pair_evals = None if rows is None else rows * _EMB_PAIR_FANOUT
     e = fan_out_scan(spark, base)
-    guarded = subdivide_oversized_blocks(
-        e, ["label"], "embedding", max_block_size=EMB_BLOCK_CAP, on_oversize="error"
-    )
+    check_block_sizes(e, ["label"], EMB_BLOCK_CAP)
     # Precompute each vector's norm once (N sqrt-dots instead of 2
     # per pair); the per-pair work is then a single dot product.
     # sqrt(dot(v,v)) is the same double whether computed per-vector
     # or per-pair, so the oracle (which inlines the norms) matches.
     with_norm = materialize(
-        guarded.select(
+        e.select(
             "label",
-            "sub_block",
             "vec_id",
             "embedding",
             F.sqrt(
@@ -1107,19 +1098,17 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = with_norm.select(
         "label",
-        "sub_block",
         F.col("vec_id").alias("vec_a"),
         F.col("embedding").alias("emb_a"),
         F.col("nrm").alias("nrm_a"),
     )
     b = with_norm.select(
         "label",
-        "sub_block",
         F.col("vec_id").alias("vec_b"),
         F.col("embedding").alias("emb_b"),
         F.col("nrm").alias("nrm_b"),
     )
-    pairs = a.join(b, on=["label", "sub_block"]).filter(F.col("vec_a") < F.col("vec_b"))
+    pairs = a.join(b, on="label").filter(F.col("vec_a") < F.col("vec_b"))
     cosine = _dot(F.col("emb_a"), F.col("emb_b"), pair_evals) / (
         F.col("nrm_a") * F.col("nrm_b")
     )
@@ -1400,8 +1389,8 @@ def part_name_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: dedup to distinct names FIRST (map-side combine), so the
     quadratic verify runs per block over the tiny name vocabulary; a
-    skewed block would get the same cap-and-subdivide guard as
-    dedup_embedding_cosine (operators/dedup.py EMB_BLOCK_CAP).
+    skewed block would need the same block-size check as
+    dedup_embedding_cosine (``EMB_BLOCK_CAP``).
     """
     p = load_table(spark, sf_dir, "part")
     names = p.select("p_name").distinct()
@@ -1511,12 +1500,10 @@ def sample_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint inequality.  Each unordered pair emits once
     (rk ≤ n/2).
 
-    Scale shape: the corpus-wide rank comes from the offset-merge
-    exact rank (operators/quantiles.py — range-repartition on the
-    hash order, per-range local row_number, O(#partitions) offset
-    merge), so NO single task ever sorts the corpus (plan-asserted:
-    global_window_count == 0); the corpus size n lands as a literal
-    and the ranked frame is materialized once, so the rk ↔ rk+n/2
+    Scale shape: the corpus-wide rank comes from the exact rank
+    (operators/quantiles.py) over the hash order; the corpus size n
+    lands as a literal and the ranked frame is materialized once, so
+    the rk ↔ rk+n/2
     pairing is a plain equi-join between two reads of the SAME
     checkpointed frame.
     """

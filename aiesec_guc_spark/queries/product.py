@@ -9,8 +9,7 @@ Scale notes (100 TB): every query reduces the fact to a per-key /
 per-day frame FIRST (map-side-combined distinct or aggregate), and
 all later windows/joins run on that reduced frame.  The one
 deliberate exception is the grouped-median window (few huge groups
-per segment) — its docstring names the offset-merge decile machinery
-(queries/star.py customer_acctbal_deciles) as the scale path.
+per segment).
 """
 
 from __future__ import annotations
@@ -55,10 +54,8 @@ def median_acctbal_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale caveat (deliberate): the rank window partitions by segment
     — 5 huge partitions at 100 TB.  That is acceptable for this
-    moderate-cardinality corpus; for few-huge-group exact quantiles
-    the right machinery is the range-repartitioned offset-merge rank
-    (customer_acctbal_deciles, queries/star.py) — this query exists
-    to pin the rank-pair median SEMANTICS against the oracle.
+    moderate-cardinality corpus — this query exists to pin the
+    rank-pair median SEMANTICS against the oracle.
     """
     c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
@@ -376,12 +373,10 @@ def user_ltv_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User lifetime-value deciles: per-user exact-decimal value sums
     bucketed by :func:`aiesec_guc_spark.operators.quantiles.
     exact_ntile` — equal-frequency bucketing over a DERIVED frame
-    with no global single-task sort (the offset-merge rank machinery,
-    reused from the customer-balance deciles).
+    (the same operator as the customer-balance deciles).
 
     Scale: one map-side-combined per-user aggregate reads the fact;
-    the ntile runs over the #users-sized frame via range partitions +
-    an O(#partitions) driver prefix-sum.
+    the ntile runs over the #users-sized frame in one window.
     """
     from ..operators.quantiles import exact_ntile
 
@@ -847,13 +842,10 @@ def funnel_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     (conditional min, map-side combined, one shuffle), purchases
     join it user-keyed with the >= residual inside the probe, and a
     second grouped min lands the per-user latency.  The global rank
-    over the #converted-users frame comes from the offset-merge
-    exact rank (operators/quantiles.py) — range-repartition + local
-    row_number + O(#partitions) offset merge — so NO window task ever
-    sees the whole frame (plan-asserted: global_window_count == 0),
-    and the frame's total count lands as a literal instead of a
-    count-over-all-rows window.  Latencies are exact integer
-    microseconds.
+    over the #converted-users frame comes from the exact rank
+    (operators/quantiles.py), and the frame's total count lands as a
+    literal instead of a count-over-all-rows window.  Latencies are
+    exact integer microseconds.
     """
     e = load_table(spark, sf_dir, "events")
     first_click = (
@@ -935,10 +927,8 @@ def pareto_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     after integer basis-point truncation.  Scale shape: the fact
     collapses to per-customer exact-decimal revenue first; the global
     rank AND exact running sum over the #customers frame come from
-    the offset-merge rank (operators/quantiles.py — range partitions,
-    local rank + local running sum, decimal offsets merged at
-    O(#partitions)), so no window task sees the whole frame and the
-    grand totals land as literals; the four thresholds fan out from
+    the exact rank (operators/quantiles.py), and the grand totals
+    land as literals; the four thresholds fan out from
     ONE ranked frame via a literal spine, grouped min per threshold.
     """
     from ..operators.quantiles import exact_global_rank
@@ -1014,10 +1004,8 @@ def value_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE rank window per type feeds every percentile —
     the literal band spine cross-joins (broadcast, 3 rows) and each
     band selects its row by rank equality, grouped max to collapse.
-    Few-huge-group caveat as median_acctbal_by_segment: for
-    planet-scale single groups, the offset-merge rank machinery
-    (operators/quantiles.py) computes the same ranks without a
-    per-type sort owning a whole group.
+    Few-huge-group caveat as median_acctbal_by_segment: one
+    per-type sort owns a whole group.
     """
     e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
@@ -1076,11 +1064,9 @@ def revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic cross-engine; rank ties pin on custkey.
 
     Scale shape: per-customer exact revenue first (one fact shuffle);
-    the global rank comes from the offset-merge exact rank
-    (operators/quantiles.py) — no single-partition window anywhere
-    (plan-asserted), and n / Σx land as driver literals from the
-    O(#partitions) offset merge; ONE final 1-row fold computes the
-    exact rank-sum.
+    the global rank comes from the exact rank
+    (operators/quantiles.py), and n / Σx land as driver literals;
+    ONE final 1-row fold computes the exact rank-sum.
     """
     from ..operators.quantiles import exact_global_rank
 
@@ -1155,9 +1141,8 @@ def repurchase_interval_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     Composition: per-user lag (ONE user-keyed sort shared with the
     session family's windows) → integer-µs gaps → global rank-pair
     median over the #gaps frame (tie-pinned by user_id, event_id) via
-    the offset-merge exact rank (operators/quantiles.py) — no
-    single-partition window (plan-asserted), #gaps embedded as a
-    literal from the offset merge.  All extremes integer-exact; the
+    the exact rank (operators/quantiles.py), #gaps embedded as a
+    literal.  All extremes integer-exact; the
     median's single division is the only double.
     """
     from ..operators.quantiles import exact_global_rank
@@ -1321,7 +1306,7 @@ def trimmed_mean_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; rank ties pin on event_id.
 
     Scale: one rank window per type over the fact (few-huge-group
-    caveat as elsewhere — offset-merge ranks for planet-scale types);
+    caveat as elsewhere);
     the trimmed aggregation is conditional sums on the same pass, and
     the single division is the only double.
     """
@@ -1394,11 +1379,9 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE pass over the fact reduces to a per-user triple
     (max ts / count / decimal sum — map-side combined); the three
-    quintile assignments run on the REDUCED frame through the
-    offset-merge exact_ntile (range repartition + local rank + offset
-    broadcast — never a single-partition window; the oracle's bare
-    ``ntile OVER (ORDER BY ...)`` is the semantics being matched, not
-    the plan).  Descending metrics enter as negated sort keys, which
+    quintile assignments run on the REDUCED frame through
+    exact_ntile (the oracle's bare ``ntile OVER (ORDER BY ...)``
+    semantics).  Descending metrics enter as negated sort keys, which
     is what keeps exact_ntile's strict-ascending contract while
     matching the oracle's DESC ordering exactly.
     """
@@ -1485,11 +1468,9 @@ def pareto_frontier_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``max{y : x > x_p} ≥ y_p  OR  max{y : x = x_p} > y_p`` — built
     from a per-x grouped max (one map-side-combinable shuffle) and an
     EXCLUSIVE global prefix max over the distinct-x frame in
-    x-descending order, via the offset-merge ``exact_global_cummax``
-    (operators/quantiles.py): range-repartition + per-partition
-    running max + O(#partitions) driver-folded offsets — never a
-    single-partition window, so the sweep survives a corpus-sized
-    x-domain.  The comparisons are pure (no arithmetic on the double
+    x-descending order, via ``exact_global_cummax``
+    (operators/quantiles.py), one window over the distinct-x frame.
+    The comparisons are pure (no arithmetic on the double
     column), so the frontier is engine-exact.
     """
     from ..operators.quantiles import exact_global_cummax

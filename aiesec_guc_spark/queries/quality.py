@@ -738,8 +738,7 @@ def events_value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB), so the rank-hunting windows run over bounded frames.
     The per-type window partitions are histogram cells, never raw
     events — this is how an exact median survives a type with 10^12
-    rows without a corpus-sized sort, and it beats the offset-merge
-    rank for bounded domains (one shuffle smaller).  The deviation
+    rows without a corpus-sized sort.  The deviation
     pass reuses the same histogram (re-keyed, not re-scanned).
     """
     e = load_table(spark, sf_dir, "events")

@@ -1289,8 +1289,8 @@ def label_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Embedding QA: L2-norm outliers by median/MAD — the sanity gate a
 # vector pipeline runs before indexing (zeroed, truncated, or
 # mis-scaled vectors show up as norm outliers long before they poison
-# recall).  Global ranks come from the offset-merge exact rank, so the
-# corpus-sized frame never funnels through one window task.
+# recall).  Global ranks come from the exact rank, with the frame's
+# count returned as a driver literal.
 # ---------------------------------------------------------------------------
 
 _NORM2_SQL = _DOT_SQL.format(a="embedding", b="embedding")
@@ -1344,10 +1344,8 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     picks — selected values, never accumulated sums — so the only
     arithmetic on doubles is (a+b)/2 and one subtraction per row.
     Scale shape: BOTH global ranks (norms, deviations) run through
-    exact_global_rank (operators/quantiles.py) — range partitions +
-    local windows + O(#partitions) offset merge, no single-partition
-    window (the r7 verdict's fix pattern, applied here from birth);
-    the two 1-row med/MAD frames broadcast.
+    exact_global_rank (operators/quantiles.py); the two 1-row med/MAD
+    frames broadcast.
     """
     from ..operators.quantiles import exact_global_rank
 

@@ -612,25 +612,13 @@ FROM t GROUP BY decile
 
 @query("customer_acctbal_deciles", oracle=_DECILES_ORACLE)
 def customer_acctbal_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact ntile(10) equal-frequency bucketing WITHOUT a global
-    single-task sort (the naive ``Window.orderBy`` with no partitionBy
-    ships every row through one window task — a driver-adjacent
-    bottleneck at 100 TB).
+    """Exact ntile(10) equal-frequency bucketing of customer balances
+    over the strict total order (bal, custkey).
 
-    Offset-merge global rank instead:
-
-    1. ``repartitionByRange`` on the strict total order
-       (bal, custkey) — partitions hold disjoint, globally ordered
-       key ranges; each sorts/ranks independently in parallel.
-    2. Per-partition ``row_number`` (window partitioned by the range
-       partition id — every window task handles one partition's rows).
-    3. Per-partition counts are collected — O(#partitions) rows on the
-       driver, scale-free — and prefix-summed into offsets; a
-       broadcast join adds each partition's offset to its local rank,
-       reconstructing the exact global rank.
-    4. The standard ntile formula (first ``N mod 10`` buckets get one
-       extra row) maps rank → decile exactly, matching the oracle's
-       native ``ntile(10)`` bit-for-bit.
+    ``exact_ntile`` ranks the rows in one global window and maps
+    rank → decile with the standard ntile formula (the first
+    ``N mod 10`` buckets get one extra row), matching the oracle's
+    native ``ntile(10)`` bit-for-bit.
     """
     from ..operators.quantiles import exact_ntile
 
@@ -763,9 +751,7 @@ def customer_balance_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     have been seen — the SQL-standard default both engines share).
 
     One shuffle on the 5-value segment key; at 100 TB a segment is a
-    hot partition, so the ranking would move to the range-partitioned
-    offset-merge used by customer_acctbal_deciles — this query pins
-    the semantics, that one pins the scale shape.
+    hot partition — this query pins the semantics.
     """
     c = load_table(spark, sf_dir, "customer")
     order = Window.partitionBy("c_mktsegment").orderBy(
@@ -1184,7 +1170,7 @@ def nation_share_within_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Weighted median — the quantity-weighted "typical sale price", via
-# the offset-merge exact rank's running sum (no single-task sort).
+# the exact rank's running sum.
 # ---------------------------------------------------------------------------
 
 _WMEDIAN_ORACLE = """
@@ -1220,10 +1206,9 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     over-count small orders.
 
     Scale shape: the rank AND the exact decimal running weight come
-    from exact_global_rank(sum_col=...) (operators/quantiles.py) —
-    range partitions, per-partition running sums, O(#partitions)
-    decimal offsets — so no window task ever sees the whole fact, and
-    the total weight lands as a driver literal.  The pick is a
+    from exact_global_rank(sum_col=...) (operators/quantiles.py), one
+    window over the line items, and the total weight lands as a
+    driver literal.  The pick is a
     filtered min (an exact selected value, cast to double only at the
     output edge).
 

@@ -995,10 +995,6 @@ LEFT JOIN term_tok t ON t.term = d.term
 GROUP BY d.doc_id
 """
 
-# Corpus-scan size estimate up to which bpe_apply_tokenize broadcasts
-# its (term -> n_tok) side.
-BPE_BCAST_CORPUS_BYTES = 1 << 30
-
 
 @query("bpe_apply_tokenize", oracle=_bpe_apply_oracle())
 def bpe_apply_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1010,8 +1006,8 @@ def bpe_apply_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: merges apply once per VOCABULARY word, not per token
     occurrence (the same |vocab| fold as learning); per-doc rollup is
-    a (term → n_tok) broadcast-or-shuffle join on the exploded term
-    stream + one grouped sum.  Words the trainer never saw (here:
+    a (term → n_tok) broadcast join on the exploded term stream + one
+    grouped sum.  Words the trainer never saw (here:
     single-letter terms, excluded by the length-≥2 rule) fall back to
     their character count — exactly what a char-fallback tokenizer
     does with OOV input.
@@ -1028,26 +1024,11 @@ def bpe_apply_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # needs: the final token count per word
     _, words = _bpe_train(spark, sf_dir)
     term_tok = words.select("term", F.size("toks").alias("n_tok"))
-    # r15 added an explicit broadcast of the (term → n_tok) side so
-    # the exploded per-occurrence stream never shuffles for this join
-    # (guide §3.1; the planner can't size the deep merge-round plan).
-    # r16 (ADVICE): that side is the corpus's DISTINCT WORD SET —
-    # corpus-derived and Heaps'-law-growing, NOT bounded by a fixed
-    # tokenizer vocab — so the hint is gated on the corpus scan's
-    # Catalyst size estimate.  Below the cap (1 GiB of corpus:
-    # Heaps V ≈ 50·N_tok^0.6 ⇒ ≲5M terms ≈ 150 MB framed, inside
-    # broadcast comfort) the hint keeps the shuffle-free shape; above
-    # it the planner/AQE picks, which scales where a forced broadcast
-    # would OOM the driver.
-    from ..plans.stats import plan_size_bytes
-
-    _est = plan_size_bytes(d)
-    vocab_side = (
-        F.broadcast(term_tok)
-        if _est is not None and _est <= BPE_BCAST_CORPUS_BYTES
-        else term_tok
-    )
-    joined = doc_terms.join(vocab_side, on="term", how="left")
+    # Broadcast the (term → n_tok) side so the exploded per-occurrence
+    # stream never shuffles for this join: the planner can't size the
+    # deep merge-round plan.  That side is the corpus's distinct word
+    # set: 31 terms on the sf0.001-sf0.1 corpora.
+    joined = doc_terms.join(F.broadcast(term_tok), on="term", how="left")
     n_tok_eff = F.coalesce(F.col("n_tok"), F.length("term"))
     return joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_terms"),

@@ -491,10 +491,7 @@ def revenue_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the fact collapses to the #days frame first (one
     map-side-combined shuffle); the running-peak window orders that
-    tiny frame (a global window over #days rows — for decade-long
-    minute-grain series, range-partition by coarse time and carry
-    per-partition peaks through the offset-merge pattern, same as the
-    deciles machinery).
+    tiny frame (a global window over #days rows).
     """
     o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
@@ -564,8 +561,7 @@ def open_orders_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one orderkey shuffle computes close days (map-side-
     combined max over the co-partitioned join); the delta union is
     map-side; the daily net collapses to the #days frame, and the
-    running sum windows over that tiny frame (coarse-time
-    offset-merge carry for planet-span calendars, as elsewhere).
+    running sum windows over that tiny frame.
     All counters integer-exact.
     """
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")

@@ -176,7 +176,7 @@ def main(argv: list[str] | None = None) -> int:
             port=args.smtp_port,
             sender=args.smtp_from,
             recipients=[r.strip() for r in (args.smtp_to or "").split(",") if r.strip()],
-            use_tls=args.smtp_tls,
+            security="starttls" if args.smtp_tls else "none",
         )
 
     logging.basicConfig(level=logging.INFO)

@@ -73,8 +73,6 @@ class SMTPTransport:
     recipients: list[str]
     subject: str = "New Opportunities"
     security: str = "none"
-    #: Legacy alias for ``security="starttls"``.
-    use_tls: bool = False
     timeout: float = 30.0
     ssl_context: object | None = field(default=None, repr=False)
     #: Injection seam for tests/doubles; None = derived from
@@ -82,12 +80,11 @@ class SMTPTransport:
     smtp_factory: type | None = field(default=None, repr=False)
 
     def _mode(self) -> str:
-        mode = "starttls" if (self.use_tls and self.security == "none") else self.security
-        if mode not in SECURITY_MODES:
+        if self.security not in SECURITY_MODES:
             raise ValueError(
                 f"security must be one of {SECURITY_MODES}, got {self.security!r}"
             )
-        return mode
+        return self.security
 
     def __call__(self, html_body: str) -> None:
         mode = self._mode()

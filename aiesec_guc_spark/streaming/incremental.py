@@ -17,56 +17,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-STREAM_STATE_PART_BYTES = 64 << 20  # target source bytes per state partition
-
-
-def _source_bytes(spark: SparkSession, path: str) -> int | None:
-    """Total bytes under ``path`` via the path's own Hadoop FileSystem
-    (file & directory layouts, any scheme); None when unreachable."""
-    try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return int(fs.getContentSummary(hpath).getLength())
-    except Exception:
-        return None
-
-
-def _state_partitions(spark: SparkSession, sf_dir: str) -> str:
-    """Scale-adaptive state-partition count for a bounded drain:
-    ceil(source bytes / target) with a floor of 8 and a cap of 16×
-    session parallelism.
-
-    The former CONSTANT 8 was tuned to the local corpus (store init
-    dominates a bounded drain at the session default of 32; measured
-    sf0.1: the interval join ran ~6 s warm at 32 vs ~2.4 s at 8) and
-    would concentrate a 100 TB day's state into 8 stores in
-    production; this keeps 8 as the FLOOR (local plans and timings
-    unchanged — the sf0.1 source is ~2 MB) and scales the count with
-    source size.  The floor is NOT lower because the Python-stateful
-    drains (applyInPandasWithState) are Arrow-worker-parallelism-bound,
-    not store-init-bound: an r16 A/B at 2 partitions regressed
-    sessionize_stateful 2.1→4.3 s and twap_by_user 2.0→4.9 s warm
-    while moving the JVM-stateful queries within noise.  Size-derived
-    (not core-derived), so the driver's low-core bench run sees the
-    same plan."""
-    src = _source_bytes(spark, f"{sf_dir}/events.parquet")
-    if src is None:
-        return "8"  # pre-r16 behavior when the source can't be sized
-    import math
-
-    n = max(8, math.ceil(src / STREAM_STATE_PART_BYTES))
-    cap = max(16 * spark.sparkContext.defaultParallelism, 16)
-    return str(min(n, cap))
-
-
 def _drain_to_memory(
     spark: SparkSession,
     df: DataFrame,
     query_name: str,
     output_mode: str,
-    n_partitions: str | None = None,
-    sf_dir: str | None = None,
 ) -> DataFrame:
     """Drain a bounded stream to the in-memory sink under
     ``trigger(availableNow)`` and return the sink table.
@@ -74,14 +29,16 @@ def _drain_to_memory(
     Stateful stages (windowed aggs, dedup, stream-stream joins)
     materialize one state store per shuffle partition — per SIDE for
     joins — and for a bounded historical drain the store init
-    dominates the micro-batch.  The drain runs at ``n_partitions``
-    (explicit override) or the size-derived ``_state_partitions``
-    count, and the session conf is restored afterwards.
+    dominates the micro-batch.  The drain runs at 8 shuffle partitions
+    and the session conf is restored afterwards.  Measured: the
+    interval join ran ~6 s warm at the session default of 32 against
+    ~2.4 s at 8 (sf0.1), and the Python-stateful drains
+    (applyInPandasWithState) are Arrow-worker-parallelism-bound, so at
+    2 partitions ``sessionize_stateful`` regressed 2.1 → 4.3 s and
+    ``twap_by_user`` 2.0 → 4.9 s warm.
     """
-    if n_partitions is None:
-        n_partitions = _state_partitions(spark, sf_dir) if sf_dir else "8"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_partitions)
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         with tempfile.TemporaryDirectory(prefix="ckpt_") as ckpt:
             q = (
@@ -174,7 +131,7 @@ def run_streaming_hourly(
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
         )
     )
-    return _drain_to_memory(spark, agg, query_name, "complete", sf_dir=sf_dir).select(
+    return _drain_to_memory(spark, agg, query_name, "complete").select(
         F.unix_micros(F.col("window.start")).alias("hour_us"),
         "event_type",
         "n_events",
@@ -202,7 +159,7 @@ def run_streaming_dedup(
     deduped = replayed.withWatermark("ts", "1 hour").dropDuplicates(
         ["event_id", "ts"]
     )
-    return _drain_to_memory(spark, deduped, query_name, "append", sf_dir=sf_dir).select(
+    return _drain_to_memory(spark, deduped, query_name, "append").select(
         "event_id",
         F.unix_micros(F.col("ts")).alias("ts_us"),
         "user_id",
@@ -230,7 +187,7 @@ def run_streaming_dedup_within_watermark(
     deduped = replayed.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    return _drain_to_memory(spark, deduped, query_name, "append", sf_dir=sf_dir).select(
+    return _drain_to_memory(spark, deduped, query_name, "append").select(
         "event_id",
         F.unix_micros(F.col("ts")).alias("ts_us"),
         "user_id",
@@ -267,7 +224,7 @@ def run_stream_static_enrich(
         "event_id", "user_id", "value"
     )
     enriched = purchases.join(dim, "user_id")
-    return _drain_to_memory(spark, enriched, query_name, "append", sf_dir=sf_dir).select(
+    return _drain_to_memory(spark, enriched, query_name, "append").select(
         "event_id", "user_id", "first_seen", "n_clicks", "value"
     )
 
@@ -292,7 +249,7 @@ def run_streaming_session_window(
     agg = src.groupBy(
         F.session_window("ts", "30 minutes"), F.col("user_id")
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    return _drain_to_memory(spark, agg, query_name, "complete", sf_dir=sf_dir).select(
+    return _drain_to_memory(spark, agg, query_name, "complete").select(
         "user_id",
         F.unix_micros(F.col("session_window.start")).alias("session_start_us"),
         (F.unix_micros(F.col("session_window.end")) - F.lit(gap_us)).alias(
@@ -449,7 +406,7 @@ def run_streaming_interval_join(
             "AND p_ts <= c_ts + INTERVAL 5 MINUTES"
         ),
     )
-    return _drain_to_memory(spark, joined, query_name, "append", sf_dir=sf_dir).select(
+    return _drain_to_memory(spark, joined, query_name, "append").select(
         F.col("c_user").alias("user_id"),
         "click_id",
         "purchase_id",
@@ -494,7 +451,7 @@ def run_streaming_wau_approx(
     agg = src.groupBy(F.window("ts", "7 days", "1 day")).agg(
         F.approx_count_distinct("user_id", 0.02).alias("wau_approx")
     )
-    t = _drain_to_memory(spark, agg, query_name, "complete", sf_dir=sf_dir)
+    t = _drain_to_memory(spark, agg, query_name, "complete")
     # day = last day the window covers; [start, start+7d) ≡ dates
     # start..start+6 because both are midnight-UTC aligned.
     approx = t.select(
@@ -541,5 +498,5 @@ def run_streaming_cms(
     # partials merge by addition under complete-mode aggregation, so
     # the drained grid is bit-identical to the one-shot build.
     grid = cms_grid(_events_stream(spark, sf_dir), "user_id")
-    counters = _drain_to_memory(spark, grid, query_name, "complete", sf_dir=sf_dir)
+    counters = _drain_to_memory(spark, grid, query_name, "complete")
     return cms_estimate_topk(load_table(spark, sf_dir, "events"), counters)

@@ -116,13 +116,13 @@ def run_streaming_sessionize(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    # _drain_to_memory sizes the stateful stage's partition count from
-    # the source (floor 8 — Python-stateful drains are Arrow-worker-
-    # parallelism-bound; see _state_partitions) and restores the conf.
+    # _drain_to_memory runs the stateful stage at 8 partitions (Python-
+    # stateful drains are Arrow-worker-parallelism-bound) and restores
+    # the conf.
     # Update-mode memory sink appends one row per key per batch; the
     # final value per user is the row from the last batch it appeared
     # in — with the single-file corpus there is exactly one.
-    t = _drain_to_memory(spark, out, query_name, "update", sf_dir=sf_dir)
+    t = _drain_to_memory(spark, out, query_name, "update")
     from pyspark.sql import Window, functions as F
 
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
@@ -242,7 +242,7 @@ def run_streaming_twap(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    t = _drain_to_memory(spark, out, query_name, "update", sf_dir=sf_dir)
+    t = _drain_to_memory(spark, out, query_name, "update")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     final = (
         t.withColumn("_rn", F.row_number().over(w))

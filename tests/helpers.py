@@ -35,8 +35,7 @@ def has_partial_aggregation(df: DataFrame) -> bool:
 def global_window_count(df: DataFrame) -> int:
     """Number of physical Window nodes with an EMPTY partition spec —
     each one funnels its entire input through a single task (Exchange
-    SinglePartition), the scale-killer the offset-merge rank
-    (operators/quantiles.py) exists to avoid.  Walks the pre-AQE
+    SinglePartition), which a corpus-sized frame must avoid.  Walks the pre-AQE
     physical plan via py4j and inspects ``WindowExec.partitionSpec``
     directly, so plans that legitimately contain other SinglePartition
     exchanges (e.g. a scale-free final 1-row aggregate) don't

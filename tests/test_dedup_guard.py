@@ -1,80 +1,35 @@
-"""Block-size guard for blocked embedding comparison: a skewed (hot)
-label must be subdivided so pairing never goes O(n²), while small
-blocks keep exact all-pairs semantics (sub_block = 0)."""
+"""Block-size check for blocked embedding comparison: a skewed (hot)
+label above the cap fails loudly, so exact all-pairs pairing never
+goes O(n²) unnoticed."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from aiesec_guc_spark.operators.similarity import subdivide_oversized_blocks
+from aiesec_guc_spark.operators.similarity import check_block_sizes
 
-DIM = 4
 CAP = 50
 HOT_N = 120
 COLD_N = 10
 
 
-def _vec(i: int) -> list[float]:
-    # Deterministic, varied directions so hyperplane signs differ.
-    return [float((i % 7) - 3), float((i % 5) - 2), float((i % 3) - 1), float((i % 11) - 5)]
-
-
 def _fixture(spark):
-    rows = [("hot", i, _vec(i)) for i in range(HOT_N)] + [
-        ("cold", 1000 + i, _vec(i * 13 + 1)) for i in range(COLD_N)
+    rows = [("hot", i) for i in range(HOT_N)] + [
+        ("cold", 1000 + i) for i in range(COLD_N)
     ]
-    return spark.createDataFrame(rows, "label string, vec_id long, embedding array<double>")
-
-
-def test_small_blocks_stay_exact(spark):
-    df = _fixture(spark)
-    out = subdivide_oversized_blocks(df, ["label"], "embedding", CAP, n_planes=2, dim=DIM)
-    cold = out.filter(F.col("label") == "cold").select("sub_block").distinct().collect()
-    assert [r.sub_block for r in cold] == [0]
-
-
-def test_hot_block_is_subdivided(spark):
-    df = _fixture(spark)
-    out = subdivide_oversized_blocks(df, ["label"], "embedding", CAP, n_planes=2, dim=DIM)
-    hot_buckets = (
-        out.filter(F.col("label") == "hot")
-        .groupBy("sub_block")
-        .count()
-        .collect()
-    )
-    assert len(hot_buckets) > 1, "hot label must split into multiple sub-buckets"
-    # No sub-bucket may retain the whole hot block.
-    assert max(r["count"] for r in hot_buckets) < HOT_N
-
-
-def test_guard_bounds_pair_count(spark):
-    df = _fixture(spark)
-    out = subdivide_oversized_blocks(df, ["label"], "embedding", CAP, n_planes=2, dim=DIM)
-    a = out.select("label", "sub_block", F.col("vec_id").alias("va"))
-    b = out.select("label", "sub_block", F.col("vec_id").alias("vb"))
-    n_pairs = (
-        a.join(b, on=["label", "sub_block"]).filter(F.col("va") < F.col("vb")).count()
-    )
-    all_pairs = HOT_N * (HOT_N - 1) // 2 + COLD_N * (COLD_N - 1) // 2
-    assert n_pairs < all_pairs
+    return spark.createDataFrame(rows, "label string, vec_id long")
 
 
 def test_error_mode_raises_on_oversized_block(spark):
-    import pytest
-
     df = _fixture(spark)
-    with pytest.raises(RuntimeError, match="exceed max_block_size"):
-        subdivide_oversized_blocks(
-            df, ["label"], "embedding", CAP, n_planes=2, dim=DIM, on_oversize="error"
-        )
+    with pytest.raises(RuntimeError, match=r"\('hot',\) exceed max_block_size=50"):
+        check_block_sizes(df, ["label"], CAP)
 
 
 def test_error_mode_passes_under_cap(spark):
     df = _fixture(spark)
-    out = subdivide_oversized_blocks(
-        df, ["label"], "embedding", HOT_N + 1, n_planes=2, dim=DIM, on_oversize="error"
-    )
-    assert out.select("sub_block").distinct().collect()[0]["sub_block"] == 0
+    assert check_block_sizes(df, ["label"], HOT_N) is None
 
 
 # ---------------------------------------------------------------------------

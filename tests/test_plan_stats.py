@@ -3,10 +3,9 @@ kernel (r16).
 
 The regression this guards: ``stats().sizeInBytes()`` crosses py4j as
 a plain int on this runtime, so the old per-site ``.toString()`` call
-raised and every size-adaptive decision silently fell back — the r15
-scale-adaptive range partitioning was a no-op.  These tests exercise
-the accessor against a LIVE scan so a py4j surface change can never
-disable the adaptive paths silently again.
+raised and every size-adaptive decision silently fell back.  These
+tests exercise the accessor against a LIVE scan so a py4j surface
+change can never disable the dot-kernel gate silently again.
 """
 
 from __future__ import annotations
@@ -77,29 +76,6 @@ def test_adaptive_dot_gates_on_evals(spark, sf_dir):
     assert rows and all(r["h"] == r["u"] for r in rows)
 
 
-def test_range_partitions_engages_size_estimate(spark, sf_dir):
-    """The size-derived count must ENGAGE (not silently fall back) and
-    can only scale UP from the session parallelism."""
-    from aiesec_guc_spark.catalog import load_table
-    from aiesec_guc_spark.operators.quantiles import _range_partitions
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_extendedprice")
-    floor = max(spark.sparkContext.defaultParallelism, 2)
-    n = _range_partitions(li)
-    assert n == floor  # tiny local input: floor dominates, plans unchanged
-    # a tiny per-partition target forces the size path to exceed the
-    # floor — proves the estimate is actually being read
-    import aiesec_guc_spark.operators.quantiles as q
-
-    old = q.RANGE_PART_BYTES
-    try:
-        q.RANGE_PART_BYTES = 1
-        n_up = _range_partitions(li)
-    finally:
-        q.RANGE_PART_BYTES = old
-    assert floor < n_up <= 16 * floor
-
-
 def test_assign_nearest_gate_and_equivalence(spark, sf_dir):
     """_assign_nearest picks HOF below the crossover and unrolled for
     unknown/huge estimates (the 100 TB side), with identical rows."""
@@ -121,60 +97,6 @@ def test_assign_nearest_gate_and_equivalence(spark, sf_dir):
     a = sorted((r.vec_id, r.cid) for r in small.collect())
     b = sorted((r.vec_id, r.cid) for r in big.collect())
     assert a == b and a
-
-
-def test_stream_state_partitions_scale_adaptive(spark, sf_dir, monkeypatch):
-    """Local corpora resolve to the floor (8 — unchanged drain plans);
-    a tiny per-partition target proves the size path engages."""
-    import aiesec_guc_spark.streaming.incremental as inc
-    from aiesec_guc_spark.streaming.incremental import _state_partitions
-
-    assert _state_partitions(spark, sf_dir) == "8"
-    monkeypatch.setattr(inc, "STREAM_STATE_PART_BYTES", 1024)
-    n_up = int(_state_partitions(spark, sf_dir))
-    cap = max(16 * spark.sparkContext.defaultParallelism, 16)
-    assert 8 < n_up <= cap
-    assert _state_partitions(spark, "/nonexistent-dir-xyz") == "8"
-
-
-def test_rank_small_path_gate(spark, sf_dir, monkeypatch):
-    """The r16 offset-merge size gate: sub-cap inputs plan the direct
-    one-partition window (no range repartition anywhere in the plan),
-    and <=0 / unknown estimates keep the scale-safe offset path."""
-    import aiesec_guc_spark.operators.quantiles as q
-    from aiesec_guc_spark.catalog import load_table
-    from aiesec_guc_spark.operators.quantiles import (
-        _fits_single_partition,
-        exact_global_rank,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_extendedprice").alias("price"), "l_orderkey", "l_linenumber"
-    )
-    # tiny local scan: gate engages by default
-    assert _fits_single_partition(li, None)
-    ranked, n, _ = exact_global_rank(li, ["price", "l_orderkey", "l_linenumber"])
-    assert n == li.count()
-    # the small path checkpointed a one-window plan: nothing range-
-    # partitioned survives in the returned frame's lineage, and the
-    # physical plan that produced it had no RangePartitioning (probe
-    # the un-checkpointed shape directly)
-    from pyspark.sql import Window as W
-
-    probe = li.withColumn(
-        "_grank", F.row_number().over(W.orderBy("price", "l_orderkey", "l_linenumber"))
-    )
-    assert "rangepartitioning" not in probe._jdf.queryExecution().executedPlan().toString().lower()
-
-    # <=0 disables the small path outright
-    monkeypatch.setattr(q, "RANK_SMALL_BYTES", 0)
-    assert not _fits_single_partition(li, None)
-    # unknown estimate -> scale-safe offset path
-    monkeypatch.undo()
-    assert not _fits_single_partition(li, 1 << 60)  # caller says huge
-    rdd_df = spark.createDataFrame([(1.0, 1, 1)], "price double, l_orderkey int, l_linenumber int")
-    # est_bytes hint engages the gate regardless of plan stats
-    assert _fits_single_partition(rdd_df, 10)
 
 
 def test_maxsim_presliced_hof_equals_unrolled(spark, sf_dir, monkeypatch):

@@ -339,7 +339,7 @@ def test_collapse_runs_matches_bruteforce(spark):
 
 
 # ---------------------------------------------------------------------------
-# Exact ntile (offset-merge global rank)
+# Exact ntile (global rank)
 # ---------------------------------------------------------------------------
 
 

@@ -161,3 +161,27 @@ def test_empty_yesterday_then_real_today_delta(spark):
         # every today row is "new" (the fixture's duplicate-ID row
         # stays duplicated — the anti-join filters by key, never dedups)
         assert delta.count() == today.count()
+
+
+def test_read_day_runs_no_schema_inference_job(spark, tmp_path):
+    """A snapshot day is read with its declared schema: planning the
+    read runs no Spark job (an inferred read runs one footer-reading
+    job per call), and the rows and columns are those written."""
+    from aiesec_guc_spark.operators.snapshot import read_day
+    from aiesec_guc_spark.schemas import OPPORTUNITY_SCHEMA
+
+    today, _ = snapshot_pair(spark)
+    base = str(tmp_path / "snaps")
+    write_snapshot(today, base, "2026-08-13")
+    sc = spark.sparkContext
+    group = "read_day_no_inference"
+    sc.setJobGroup(group, group)
+    try:
+        day = read_day(spark, base, "2026-08-13")
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+    assert day.schema == OPPORTUNITY_SCHEMA
+    assert sorted(map(tuple, day.collect())) == sorted(map(tuple, today.collect()))

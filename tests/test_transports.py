@@ -373,11 +373,39 @@ def test_smtp_security_mode_validation_and_alias():
     t = SMTPTransport("h", 1, "s@x", ["r@y"], security="bogus")
     with pytest.raises(ValueError):
         t("<p>x</p>")
-    # legacy use_tls flag maps to starttls
-    t2 = SMTPTransport("h", 1, "s@x", ["r@y"], use_tls=True)
-    assert t2._mode() == "starttls"
     t3 = SMTPTransport("h", 1, "s@x", ["r@y"], security="ssl")
     assert t3._mode() == "ssl"
+
+
+@pytest.mark.parametrize(
+    "flags, security", [([], "none"), (["--smtp-tls"], "starttls")], ids=["plain", "smtp-tls"]
+)
+def test_cli_smtp_tls_builds_a_starttls_transport(monkeypatch, tmp_path, flags, security):
+    """``--smtp-tls`` is the CLI's spelling of ``security="starttls"``;
+    without it the transport sends in plain text."""
+    import types
+
+    from aiesec_guc_spark import run, session
+
+    seen = {}
+    fake = types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(setLogLevel=lambda level: None)
+    )
+    monkeypatch.setattr(session, "get_spark", lambda name: fake)
+    monkeypatch.setattr(run, "run_pipeline", lambda *a, send=None, **kw: seen.update(send=send))
+    rc = run.main(
+        [
+            "--data-dir", str(tmp_path / "d"),
+            "--out-dir", str(tmp_path / "o"),
+            "--run-date", "2026-08-13",
+            "--smtp-host", "127.0.0.1",
+            "--smtp-to", "team@example.org",
+            *flags,
+        ]
+    )
+    assert rc == 0
+    assert isinstance(seen["send"], SMTPTransport)
+    assert seen["send"]._mode() == security
 
 
 class _FlakyPages:
