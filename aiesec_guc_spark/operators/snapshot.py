@@ -20,11 +20,14 @@ Spark-first re-expression:
   table's one writer, heals every day a crashed swap left behind
   before it writes, and the readers (``read_day``,
   ``read_snapshot_pair``) only read.
-- The delta is a **left-anti join** on the key.  Catalyst picks
-  ``BroadcastHashJoin(LeftAnti)`` when the yesterday key set is small
-  (it is: keys only), which is exactly the hash-set probe the
+- ``snapshot_delta`` is a **left-anti join** on the key.  Catalyst
+  picks ``BroadcastHashJoin(LeftAnti)`` when the yesterday key set is
+  small (it is: keys only), which is exactly the hash-set probe the
   reference's ``isin`` performs — and degrades gracefully to a
-  shuffled sort-merge anti join when both sides are huge.
+  shuffled sort-merge anti join when both sides are huge.  It serves
+  the registered delta queries and analysts; the cron job
+  (``run.run_pipeline``) holds its day on the driver and takes the
+  same delta there, with ``isin`` over yesterday's collected keys.
 - Duplicate keys on the left are preserved, matching the reference
   (it never dedups — SURVEY.md §1.2).
 - ``changed_rows`` is the operator the reference *lacks* (E8): same
@@ -131,14 +134,23 @@ def write_snapshot(df: DataFrame, base_path: str, run_date: str) -> None:
     ``ValueError`` and left as it is.  Local paths only: a URI
     ``base_path`` raises ``ValueError`` before any write.
 
-    The frame is written in whatever schema it has, but the readers
-    (``read_day``, ``read_snapshot_pair``) read ``OPPORTUNITY_SCHEMA``:
-    a table meant to be read back must hold opportunity rows.
+    The readers (``read_day``, ``read_snapshot_pair``) read
+    ``OPPORTUNITY_SCHEMA``, so a frame whose column names or types are
+    not ``OPPORTUNITY_SCHEMA``'s raises ``ValueError`` before anything
+    is healed or written: a day in another schema would read back as
+    all-null columns, and tomorrow's delta would call every row new.
     """
-    from .maintenance import heal_partitions, swap_in
+    from .maintenance import _local, heal_partitions, swap_in
 
+    base_path = _local(base_path)
+    got = [(f.name, f.dataType) for f in df.schema]
+    if got != [(f.name, f.dataType) for f in OPPORTUNITY_SCHEMA]:
+        raise ValueError(
+            f"write_snapshot: the frame must have OPPORTUNITY_SCHEMA's columns, "
+            f"got {df.schema.simpleString()}"
+        )
     heal_partitions(base_path, "run_date")
-    swap_in(df, f"{base_path.rstrip('/')}/run_date={run_date}")
+    swap_in(df, f"{base_path}/run_date={run_date}")
 
 
 def read_day(spark, base_path: str, run_date: str) -> DataFrame:
@@ -146,11 +158,9 @@ def read_day(spark, base_path: str, run_date: str) -> DataFrame:
     ``run_date=<date>`` directory: no other day is listed, and the
     frame has no ``run_date`` column.  A reader: it never heals.
 
-    The read declares ``OPPORTUNITY_SCHEMA``, the schema
-    ``extract_cards`` produces and ``run_pipeline`` stores, so it runs
-    no footer-reading inference job.  The table must hold opportunity
-    rows: a day written in another schema reads as all-null string
-    columns, with no error."""
+    The read declares ``OPPORTUNITY_SCHEMA``, the only schema
+    ``write_snapshot`` accepts, so it runs no footer-reading inference
+    job."""
     return spark.read.schema(OPPORTUNITY_SCHEMA).parquet(
         f"{base_path.rstrip('/')}/run_date={run_date}"
     )
@@ -165,8 +175,7 @@ def read_snapshot_pair(spark, base_path: str) -> tuple[DataFrame, DataFrame]:
     distinct-over-rows would silently skip — making the pair read diff
     today against the wrong (older) day.  Fewer than two days, a
     missing ``base_path`` included, raise ``ValueError``.  Both days
-    are read as ``OPPORTUNITY_SCHEMA`` (see ``read_day``), so the
-    table must hold opportunity rows."""
+    are read as ``OPPORTUNITY_SCHEMA`` (see ``read_day``)."""
     from .maintenance import list_partitions
 
     try:

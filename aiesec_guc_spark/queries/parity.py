@@ -216,9 +216,10 @@ def _html_cards_oracle() -> str:
 
 @query("html_extract_cards", oracle=_html_cards_oracle())
 def html_extract_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2: per-card field extraction (aiesec.py:83-126) as regexp
-    built-ins over recorded HTML fixtures — filter, id-from-href,
-    link concat, N/A sentinels, Premium flag, "." duration mapping."""
+    """S2: per-card field extraction (aiesec.py:83-126), the cron
+    job's driver-side parser over recorded HTML fixtures — filter,
+    id-from-href, link concat, N/A sentinels, Premium flag, "."
+    duration mapping."""
     from ..functions.html_cards import extract_cards
     from ..sources.fixtures import fixture_cards_df
 

@@ -10,29 +10,34 @@ Stage map (reference → here):
 1. rotate (aiesec.py:20-21)      → one run_date partition per day;
                                    no file copy, "yesterday" = lag-1
                                    partition (operators/snapshot.py)
-2. scrape (aiesec.py:22-67)      → `read_pages`: the pages fetched
-                                   in page order on the driver, one
-                                   local frame (fixture-backed
-                                   `_fetch` seam)
-3. extract (aiesec.py:83-126)    → `extract_cards` (codegen'd regexes)
-4. Today.xlsx (aiesec.py:130-132)→ `write_snapshot`: the day's
-                                   partition directory swapped in
-                                   whole (`swap_in`, local paths
-                                   only); the day is collected
-                                   once, in page order, and that
-                                   frame is the styled report
-                                   (today_<date>.xlsx)
-5. anti-join (aiesec.py:137-143) → `snapshot_delta` (left_anti),
-                                   collected once
+2. scrape (aiesec.py:22-67)      → `fetch_pages`: the pages fetched
+                                   in page order on the driver
+                                   (fixture-backed `_fetch` seam)
+3. extract (aiesec.py:83-126)    → `parse_cards`: the cards parsed
+                                   on the driver into one pandas
+                                   frame, in page order
+4. Today.xlsx (aiesec.py:130-132)→ `write_snapshot`: that frame
+                                   written as the day's partition
+                                   directory, swapped in whole
+                                   (`swap_in`, local paths only);
+                                   the same frame is the styled
+                                   report (today_<date>.xlsx)
+5. isin (aiesec.py:137-143)      → yesterday's keys collected once
+                                   (`read_day`); the delta is
+                                   today's rows whose key is not
+                                   among them, as the reference's
+                                   `~today.ID.isin(yesterday.ID)`
 6. New.xlsx + style (:145-183)   → `write_styled_report` (+ autofit)
-                                   from the collected delta
+                                   from the delta frame
 7. email iff delta (:188-251)    → `render_email_html` over the same
-                                   collected delta, sent by
+                                   delta frame, sent by
                                    `notify_if_nonempty` (transport
                                    injected; default logs)
 
 First run (no prior partition): the whole snapshot is the delta, the
-same as the reference diffing against an empty Yesterday.
+same as the reference diffing against an empty Yesterday.  A day runs
+two Spark jobs, the snapshot write and the key read; the first day
+runs only the write.
 """
 
 from __future__ import annotations
@@ -43,26 +48,9 @@ import os
 import sys
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 log = logging.getLogger(__name__)
-
-
-def scrape_today(
-    spark: SparkSession, base_url: str | None = None, pages: int = 0
-) -> DataFrame:
-    """Stages 2-3: the day's pages → card rows, in page order.
-
-    With ``base_url`` the driver fetches ``{base_url}?page=N`` for
-    ``pages`` >= 1 pages over HTTP (the reference's live pagination);
-    without it the recorded fixtures serve hermetic runs.  Every page
-    is fetched before this returns, so the frame is a local relation:
-    evaluating it again fetches nothing."""
-    from .functions.html_cards import extract_cards
-    from .sources.listing_scrape import read_pages
-
-    return extract_cards(read_pages(spark, base_url=base_url or None, pages=pages))
 
 
 def run_pipeline(
@@ -77,14 +65,25 @@ def run_pipeline(
     """One scheduled run, start to finish.  Returns a summary dict
     (rows scraped, delta rows, report path, whether a notification
     went out) so callers/tests can assert on the outcome."""
+    from .functions.html_cards import parse_cards
     from .operators.maintenance import list_partitions
-    from .operators.snapshot import read_day, snapshot_delta, write_snapshot
+    from .operators.snapshot import read_day, write_snapshot
+    from .schemas import OPPORTUNITY_SCHEMA
     from .sinks.report import notify_if_nonempty, render_email_html, write_styled_report
+    from .sources.listing_scrape import fetch_pages
 
     snap_path = os.path.join(data_dir, "snapshots")
 
-    today = scrape_today(spark, base_url=base_url, pages=pages)
-    write_snapshot(today, snap_path, run_date)
+    # The day is a few hundred rows: fetch, parse and diff it on the
+    # driver, as the reference does with the frame it holds
+    # (aiesec.py:67-143), and build every presentation artifact and
+    # count from the local frames.  Spark writes the snapshot and
+    # reads yesterday's keys, nothing else.
+    pages_html = fetch_pages(base_url=base_url or None, pages=pages)
+    today_pdf = parse_cards(html for _, html in pages_html)
+    write_snapshot(
+        spark.createDataFrame(today_pdf, schema=OPPORTUNITY_SCHEMA), snap_path, run_date
+    )
 
     # Prior-day discovery lists the partition DIRECTORIES (same rule
     # as read_snapshot_pair): a quiet day's partition holds a zero-row
@@ -98,17 +97,13 @@ def run_pipeline(
         for d in list_partitions(snap_path, "run_date")
         if d < run_date
     ]
+    delta_pdf = today_pdf  # first run: all new
     if prior_dates:
+        # Left duplicates and page order are kept, as the reference's
+        # boolean mask keeps them.
         yesterday = read_day(spark, snap_path, prior_dates[-1])
-    else:
-        yesterday = today.filter(F.lit(False))  # first run: all new
-    # The day and its delta are a few hundred rows: collect each once
-    # and build every presentation artifact and count from those local
-    # frames, as the reference does from the frame it holds
-    # (aiesec.py:130-251).  ``today`` is a local relation, so both
-    # read it again without a fetch and keep the listing's page order.
-    today_pdf = today.toPandas()
-    delta_pdf = snapshot_delta(today, yesterday, keys=["opportunity_id"]).toPandas()
+        seen = [r[0] for r in yesterday.select("opportunity_id").collect()]
+        delta_pdf = today_pdf[~today_pdf["opportunity_id"].isin(seen)]
 
     os.makedirs(out_dir, exist_ok=True)
     # Literal Today.xlsx parity (aiesec.py:130-132): the FULL snapshot
@@ -157,7 +152,7 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     # Fail at parse time, not mid-pipeline: --base-url with the default
-    # pages=0 is refused by `read_pages` only after a Spark session
+    # pages=0 is refused by `fetch_pages` only after a Spark session
     # has started, and
     # --smtp-host with no recipients raises SMTPRecipientsRefused only
     # AFTER the whole run (scrape + snapshot + reports) has completed,

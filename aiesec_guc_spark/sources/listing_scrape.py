@@ -1,14 +1,16 @@
 """Scrape-source connector (reference S1, aiesec.py:22-67): the day's
-listing pages fetched on the driver and held as one local frame.
+listing pages fetched on the driver as plain ``(page_id, html)`` rows.
 
 The reference drives a headless browser ("Load more" pagination, 30 s
 sleeps) on the driver and keeps the day as one local frame
 (aiesec.py:22-67, 130).  A day is a few hundred cards, so here too the
-driver fetches the pages in page order and hands Spark a pandas
-``(page_id, html)`` frame; with Arrow on (the session default) Spark
-plans a ``LocalTableScan`` and starts no Python worker.  A page that
-keeps failing raises before any Spark job runs, so a failed scrape
-never reaches the snapshot write.
+driver fetches the pages in page order (``fetch_pages``), and the
+cron job parses those rows on the driver (``functions/html_cards``)
+before Spark sees the day.  A page that keeps failing raises before
+any Spark job runs, so a failed scrape never reaches the snapshot
+write.  ``read_pages`` hands the same rows to Spark as a pandas
+frame; with Arrow on (the session default) Spark plans a
+``LocalTableScan`` and starts no Python worker.
 
 Three fetch modes behind one seam (`_fetch`):
 
@@ -26,9 +28,9 @@ Three fetch modes behind one seam (`_fetch`):
   here and runs in the driver process.
 
 Usage:
-    read_pages(spark)                                    # fixtures
-    read_pages(spark, base_url="http://host/listings", pages=3)
-    read_pages(spark, fetcher=render_page, pages=3)
+    fetch_pages()                                        # fixtures
+    fetch_pages(base_url="http://host/listings", pages=3)
+    read_pages(spark, fetcher=render_page, pages=3)      # as a frame
 """
 
 from __future__ import annotations
@@ -103,29 +105,18 @@ def _fetch(
     return [_http_get(f"{base_url}?page={page_id}", timeout)]
 
 
-def _fetch_pages(page_ids, base_url, fetcher):
-    """Yield ``(page_id, html)`` for each page in order."""
-    for page_id in page_ids:
-        for html in _fetch(page_id, base_url, fetcher=fetcher):
-            yield (page_id, html)
-
-
-def read_pages(
-    spark: SparkSession,
+def fetch_pages(
     base_url: str | None = None,
     pages: int = 0,
     fetcher: Fetcher | None = None,
-) -> DataFrame:
-    """The day's card fragments as a ``(page_id int, html string)``
-    frame, one row per fragment, in page order.
+) -> list[tuple[int, str]]:
+    """The day's card fragments as ``(page_id, html)`` rows, one per
+    fragment, in page order, all fetched here on the driver.
 
     With ``base_url`` or ``fetcher`` set, pages 1..``pages`` are
     fetched and ``pages`` must be >= 1; with neither, the recorded
-    fixture pages are served.  Every page is fetched here, on the
-    driver, before the frame exists, so a fetch error raises from
+    fixture pages are served.  A page that keeps failing raises from
     this call."""
-    import pandas as pd
-
     if base_url is None and fetcher is None:
         page_ids = sorted(_fixture_pages())
     elif pages < 1:
@@ -134,7 +125,24 @@ def read_pages(
         )
     else:
         page_ids = range(1, pages + 1)
-    rows = list(_fetch_pages(page_ids, base_url, fetcher))
+    return [
+        (page_id, html)
+        for page_id in page_ids
+        for html in _fetch(page_id, base_url, fetcher=fetcher)
+    ]
+
+
+def read_pages(
+    spark: SparkSession,
+    base_url: str | None = None,
+    pages: int = 0,
+    fetcher: Fetcher | None = None,
+) -> DataFrame:
+    """``fetch_pages`` as a ``(page_id int, html string)`` frame: a
+    local relation, so evaluating it again fetches nothing."""
+    import pandas as pd
+
+    rows = fetch_pages(base_url, pages, fetcher)
     pdf = pd.DataFrame(
         {
             "page_id": pd.array([p for p, _ in rows], dtype="int32"),

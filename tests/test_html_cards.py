@@ -3,8 +3,11 @@ edge case the reference handles (aiesec.py:83-126)."""
 
 from __future__ import annotations
 
+import duckdb
+import pytest
+
 from aiesec_guc_spark.functions.html_cards import extract_cards
-from aiesec_guc_spark.sources.fixtures import fixture_cards_df
+from aiesec_guc_spark.sources.fixtures import FIXTURE_CARDS, fixture_cards_df
 
 
 def _rows(spark):
@@ -96,3 +99,58 @@ def test_spanless_card_degrades_to_na_instead_of_crashing(spark):
     assert row.country == "N/A"
     assert row.duration == "N/A"
     assert row.title == "T"
+
+
+def _card(title="T", loc="C", dur="6 Months", org="O"):
+    return (
+        f'<a href="/opportunity/gx/42"><h3>{title}</h3>'
+        f"<span>{loc}</span><span>{dur}</span>"
+        f'<div class="org">{org}</div><div class="meta">3 applicants</div></a>'
+    )
+
+
+#: (card, field, value) — the parse's whitespace rules.  Text nodes are
+#: stripped of java.util.regex's ``\s``, \x0B included; the trims after
+#: them strip spaces only, so no-break and em spaces at a node's edge
+#: stay, and so does a lone one ("N/A" is for empty fields only).
+WHITESPACE_CASES = [
+    (_card(title="\x0bTitle\x0b"), "title", "Title"),
+    (_card(org="\x0b<b>Org</b>\x0b"), "organization", "Org"),
+    (_card(dur="\x0b.\x0b"), "duration", "N/A"),
+    (_card(title="\xa0Title\xa0"), "title", "\xa0Title\xa0"),
+    (_card(loc="\u2003Berlin\u2003"), "country", "\u2003Berlin\u2003"),
+    (_card(dur="\xa0.\xa0"), "duration", "\xa0.\xa0"),
+    (_card(org="A\xa0<b> B </b>\u2003"), "organization", "A\xa0B\u2003"),
+    (_card(title="\xa0"), "title", "\xa0"),
+    (_card(dur="\u2003"), "duration", "\u2003"),
+    (_card(title=" \t\r\n\f "), "title", "N/A"),
+    (_card(dur=" . "), "duration", "N/A"),
+]
+
+
+@pytest.mark.parametrize(
+    "card,field,value",
+    WHITESPACE_CASES,
+    ids=[f"{i}-{field}" for i, (_, field, _) in enumerate(WHITESPACE_CASES)],
+)
+def test_parse_strips_java_whitespace_and_trims_spaces_only(card, field, value):
+    from aiesec_guc_spark.functions.html_cards import parse_cards
+
+    assert parse_cards([card])[field].tolist() == [value]
+
+
+def test_parse_matches_the_duckdb_oracle():
+    """The parse against its DuckDB twin on the fixtures plus the
+    whitespace cards.  The \\x0B cards are left out: RE2's ``\\s`` does
+    not hold \\x0B (the module docstring's documented divergence)."""
+    from aiesec_guc_spark.functions.html_cards import extract_cards_oracle_sql, parse_cards
+
+    cards = [html for _, html in FIXTURE_CARDS] + [
+        c for c, _, _ in WHITESPACE_CASES if "\x0b" not in c
+    ]
+    values = ", ".join(
+        f"({i}, '" + c.replace("'", "''") + "')" for i, c in enumerate(cards)
+    )
+    oracle = duckdb.sql(extract_cards_oracle_sql(values)).fetchall()
+    assert [tuple(r) for r in parse_cards(cards).itertuples(index=False)] == oracle
+    assert len(oracle) == 6 + len(cards) - len(FIXTURE_CARDS)

@@ -185,3 +185,23 @@ def test_read_day_runs_no_schema_inference_job(spark, tmp_path):
     assert list(jobs) == []
     assert day.schema == OPPORTUNITY_SCHEMA
     assert sorted(map(tuple, day.collect())) == sorted(map(tuple, today.collect()))
+
+
+def test_write_snapshot_refuses_a_frame_not_in_opportunity_schema(spark, tmp_path):
+    """The readers read ``OPPORTUNITY_SCHEMA``, so the writer refuses a
+    day in any other schema (a renamed, missing or retyped column)
+    before it heals or writes anything: such a day would read back as
+    all-null columns and make every row of the next day "new"."""
+    today, _ = snapshot_pair(spark)
+    base = tmp_path / "snaps"
+    stranded = base / ".run_date=2026-08-12__old_0"
+    stranded.mkdir(parents=True)
+    for bad in (
+        today.withColumnRenamed("title", "name"),
+        today.drop("organization"),
+        today.withColumn("applicants", F.lit(3)),
+    ):
+        with pytest.raises(ValueError, match="OPPORTUNITY_SCHEMA"):
+            write_snapshot(bad, str(base), "2026-08-13")
+    # nothing written, and the stranded day was not healed either
+    assert os.listdir(base) == [stranded.name]

@@ -48,6 +48,30 @@ def test_pipeline_first_and_second_run(spark, tmp_path):
         assert s["delta_rows"] == len(xlsxlite.read_xlsx(s["report_path"])[1])
 
 
+def test_pipeline_day_runs_two_spark_jobs(spark, tmp_path):
+    """The day is fetched, parsed and diffed on the driver: Spark runs
+    the snapshot write and, with a prior day, the read of yesterday's
+    keys, and nothing else.  Counted by job group, so the jobs of
+    earlier tests do not count."""
+    data_dir, out_dir = str(tmp_path / "data"), str(tmp_path / "out")
+    sc = spark.sparkContext
+
+    def jobs_of(run_date):
+        group = f"pipeline_jobs_{run_date}"
+        sc.setJobGroup(group, group)
+        try:
+            summary = run_pipeline(spark, data_dir, out_dir, run_date)
+            return summary, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    first, first_jobs = jobs_of("2026-08-12")
+    second, second_jobs = jobs_of("2026-08-13")
+    assert (first["delta_rows"], second["delta_rows"]) == (6, 0)
+    assert (first_jobs, second_jobs) == (1, 2)
+
+
 def test_styled_xlsx_autofit(spark, tmp_path):
     """Autofit parity (aiesec.py:175-181): every column of the styled
     report gets a width — real xlsx bytes written by xlsxlite and

@@ -102,8 +102,9 @@ def test_snapshot_rotation_single_empty_day(spark, tmp_path):
     # one EMPTY day is legal to write; the pair read correctly reports
     # the missing-yesterday state as its typed error, not a crash
     from aiesec_guc_spark.operators.snapshot import read_snapshot_pair
+    from aiesec_guc_spark.schemas import OPPORTUNITY_SCHEMA
 
     base = str(tmp_path / "snap")
-    write_snapshot(spark.createDataFrame([], SCHEMA), base, "2026-03-01")
+    write_snapshot(spark.createDataFrame([], OPPORTUNITY_SCHEMA), base, "2026-03-01")
     with pytest.raises(ValueError, match="two run_date partitions"):
         read_snapshot_pair(spark, base)

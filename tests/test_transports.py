@@ -550,18 +550,6 @@ def test_fetch_does_not_retry_4xx():
     assert NotFound.hits == 1
 
 
-def test_scrape_today_plans_a_local_scan_without_python(spark):
-    """The day is a local relation: the executed plan is a
-    LocalTableScan with no Python node, so reading it starts no Python
-    worker (a silent fallback from Arrow to pickled rows, or a Python
-    data source, would show here)."""
-    from aiesec_guc_spark.run import scrape_today
-
-    plan = scrape_today(spark)._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in plan
-    assert "Python" not in plan
-
-
 def test_read_pages_with_no_cards_is_an_empty_typed_frame(spark):
     from aiesec_guc_spark.sources.listing_scrape import read_pages
 
